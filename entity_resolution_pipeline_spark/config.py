@@ -178,33 +178,9 @@ class ClassifierConfig:
     threshold_grid_start: float = 0.05
     threshold_grid_stop: float = 0.95
     threshold_grid_steps: int = 19
-    # RFECV (reference batch_parallel_feature_engineering.py:995-1032,
-    # config.yml rfe_step_size/rfe_cv_folds — DISABLED there by default but
-    # configurable; r2 implements the path so a migrated config that enables
-    # it finds a real target).
-    rfe_step_size: int = 1
-    rfe_cv_folds: int = 5
     threshold_metric: str = "f1"
     train_test_split: float = 0.7              # config.yml:22
     random_seed: int = 42                      # config.yml:15
-
-
-@dataclass(frozen=True)
-class PrefilterConfig:
-    """Auto-classification prefilters (reference config.yml:154-161 +
-    feature_engineering.py:805-888 — all DISABLED in the shipped reference
-    config, with a latent NameError in the dead code; r2 implements the
-    documented semantics as pure column expressions so enabling them is a
-    config flip, not a port).  Decision order matches the reference:
-    birth/death-match ⇒ match, composite-cosine ≥ τ ⇒ match,
-    person-cosine < τ ⇒ non_match, else None (classifier decides)."""
-
-    birth_death_use_as_prefilter: bool = False   # config.yml:123
-    birth_death_min_person_cosine: float = 0.5   # feature_engineering.py:823
-    composite_cosine_enabled: bool = False
-    composite_cosine_threshold: float = 0.65
-    person_cosine_enabled: bool = False
-    person_cosine_threshold: float = 0.70
 
 
 @dataclass(frozen=True)
@@ -224,11 +200,6 @@ class ClusteringConfig:
     # ≈ a few hundred MB in one Arrow group — the same per-task budget the
     # semantic-dedup bucket kernel is sized for.
     local_finish_max_edges: int = 4_000_000
-    # "connected_components" (reference default and only exercised path) or
-    # "label_propagation" (the reference's configured-but-never-shipped
-    # community fallback, classification.py:880-924; r2 implements it so the
-    # config option resolves to a real operator).
-    algorithm: str = "connected_components"
 
 
 @dataclass(frozen=True)
@@ -253,7 +224,6 @@ class PipelineConfig:
     features: FeatureConfig = field(default_factory=FeatureConfig)
     feature_selection: FeatureSelectionConfig = field(default_factory=FeatureSelectionConfig)
     classifier: ClassifierConfig = field(default_factory=ClassifierConfig)
-    prefilters: PrefilterConfig = field(default_factory=PrefilterConfig)
     clustering: ClusteringConfig = field(default_factory=ClusteringConfig)
     imputation: ImputationConfig = field(default_factory=ImputationConfig)
     shuffle_partitions: int = 32               # sized per SF; cluster deploys override

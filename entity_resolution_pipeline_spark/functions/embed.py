@@ -107,32 +107,14 @@ def _make_buckets_udf(dim: int, n: int):
     return buckets_udf
 
 
-def bucket_document_frequencies(strings_df, col: str, dim: int = 256, n: int = 3):
-    """Per-bucket document frequencies over a corpus of (distinct) strings:
-    explode n-grams → bucket id → count distinct source strings.
-
-    Returns a DataFrame (bucket int, df long).  One shuffle of (bucket,
-    string-hash) pairs; at 100 TB this runs over *unique strings only* (the
-    dedup-before-expensive-work invariant) and the result is dim rows —
-    broadcastable by construction.
-    """
-    from pyspark.sql import functions as F
-
-    return (
-        strings_df.select(
-            F.explode(_make_buckets_udf(dim, n)(F.col(col))).alias("bucket")
-        )
-        .groupBy("bucket")
-        .agg(F.count("*").alias("df"))
-    )
-
-
 def bucket_frequencies_with_total(
     strings_df, col: str, dim: int = 256, n: int = 3
 ) -> tuple[list[tuple[int, int]], int]:
-    """bucket_document_frequencies AND the distinct-string total in ONE agg
-    job: a -1 sentinel bucket is prepended to every string's bucket array
-    before the explode, so count(bucket = -1) IS the string count and the
+    """Per-bucket document frequencies over a corpus of distinct strings
+    (n-grams → bucket id → count of source strings; dim rows, broadcastable
+    by construction) AND the distinct-string total in ONE agg job: a -1
+    sentinel bucket is prepended to every string's bucket array before the
+    explode, so count(bucket = -1) IS the string count and the
     other rows are the per-bucket document frequencies — replacing the
     persist + count() + agg sequence (two sequential jobs) the IDF stage
     used to run.  Returns ([(bucket, df), ...], n_docs)."""

@@ -28,7 +28,7 @@ import zlib
 import numpy as np
 import pandas as pd
 from pyspark.sql.functions import pandas_udf
-from pyspark.sql.types import ArrayType, IntegerType, LongType, StringType
+from pyspark.sql.types import ArrayType, IntegerType, StringType
 
 _MERSENNE_P = (1 << 31) - 1
 _SEED = 42
@@ -216,8 +216,8 @@ def make_sig_shingle_udf(num_hashes: int = 64, k: int = 3):
     set from ONE pass over the text.  The LSH operators need both (bands
     from sig, exact verify from sh); computing them in separate UDFs
     shingled every document twice and scanned the text column twice.
-    Column values are numerically identical to make_minhash_udf /
-    make_shingle_udf (same shingle_set, same batch kernel); both arrays are
+    Column values are numerically identical to make_minhash_udf's
+    signatures and to shingle_set (same batch kernel); both arrays are
     int32 because every element is a value mod p = 2³¹−1 (sentinel −1) —
     see make_minhash_udf.  The sh arrays are the verify stage's dominant
     per-pair payload, so the narrowing halves the bytes that cross the
@@ -335,25 +335,6 @@ def sorted_intersect_size(a: np.ndarray, b: np.ndarray) -> int:
     idx = np.searchsorted(b, a)
     idx[idx == len(b)] = 0
     return int(np.count_nonzero(b[idx] == a))
-
-
-def make_shingle_udf(k: int = 3):
-    """Arrow pandas UDF: string column → sorted array<long> of distinct
-    polynomial-rolling-hash shingle values over k-BYTE windows of the
-    lowercased space-padded UTF-8 text (shingle_set — the exact sets
-    `jaccard` compares; windows are bytes, not chars, for non-ASCII text).
-    Emitting the sets as a column lets the LSH verify stage intersect
-    precomputed arrays instead of re-shingling both texts once per candidate
-    pair — each document is shingled once, not once per pair it participates
-    in."""
-
-    @pandas_udf(ArrayType(LongType()))
-    def shingle_udf(texts: pd.Series) -> pd.Series:
-        return pd.Series(
-            [shingle_set(t or "", k).astype(np.int64).tolist() for t in texts]
-        )
-
-    return shingle_udf
 
 
 def make_band_keys_udf(bands: int):

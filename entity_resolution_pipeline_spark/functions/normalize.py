@@ -30,9 +30,3 @@ def normalize_ws_col(c: Column) -> Column:
 def null_canon_col(c: Column) -> Column:
     """Map reference null tokens (and SQL NULL) to NULL, else pass through."""
     return F.when(c.isNull() | c.isin(*NULL_VALUES), F.lit(None)).otherwise(c)
-
-
-def fill_null_token(c: Column) -> Column:
-    """Inverse convention: reference fills missing with the literal "NULL"
-    (preprocessing.py:255)."""
-    return F.coalesce(c, F.lit("NULL"))

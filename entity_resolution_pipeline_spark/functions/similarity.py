@@ -12,26 +12,12 @@ Parity targets:
   (feature_engineering.py:516-520); implemented from the published
   Jaro-Winkler definition (prefix scale 0.1, max prefix 4, boost only
   when jaro > 0.7).
-* harmonic mean — src/utils.py:163-176 (0 if either input ≤ 0).
 """
 
 from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-
-
-def cosine_similarity(vec1, vec2) -> float:
-    """Cosine of two vectors; 0.0 if either is empty/None or zero-norm."""
-    if vec1 is None or vec2 is None or len(vec1) == 0 or len(vec2) == 0:
-        return 0.0
-    a = np.asarray(vec1, dtype=np.float64)
-    b = np.asarray(vec2, dtype=np.float64)
-    na = float(np.linalg.norm(a))
-    nb = float(np.linalg.norm(b))
-    if na == 0.0 or nb == 0.0:
-        return 0.0
-    return float(np.dot(a, b) / (na * nb))
 
 
 def batch_cosine(A: np.ndarray, B: np.ndarray) -> np.ndarray:
@@ -121,13 +107,6 @@ def jaro_winkler_similarity(s1: str, s2: str, prefix_weight: float = 0.1) -> flo
             prefix += 1
         jaro += prefix * prefix_weight * (1.0 - jaro)
     return jaro
-
-
-def harmonic_mean(a: float, b: float) -> float:
-    """2ab/(a+b); 0 if either ≤ 0 (src/utils.py:163-176)."""
-    if a <= 0 or b <= 0:
-        return 0.0
-    return 2.0 * a * b / (a + b)
 
 
 def make_jaro_winkler_udf():

@@ -317,133 +317,3 @@ def score(features_df: DataFrame, model: LRModel) -> DataFrame:
 
     return features_df.mapInPandas(run, schema=_PRED_SCHEMA)
 
-
-# ------------------------------------------------------------------- RFECV
-
-def _kfold_f1(X: np.ndarray, y: np.ndarray, cfg: ClassifierConfig, folds: int) -> float:
-    """Deterministic k-fold CV mean F1: seeded permutation → contiguous
-    folds; per-fold scaler fit on the TRAIN fold only (no leakage), LR
-    trained with the session hyper-parameters, F1 at threshold 0.5 (the
-    sklearn-RFECV scoring='f1' analog the reference configures,
-    batch_parallel_feature_engineering.py:1016-1022)."""
-    rng = np.random.Generator(np.random.PCG64(cfg.random_seed))
-    idx = rng.permutation(len(X))
-    scores = []
-    for k in range(folds):
-        test = idx[k::folds]
-        train = np.setdiff1d(idx, test, assume_unique=False)
-        mu = X[train].mean(axis=0)
-        sd = X[train].std(axis=0)
-        sd = np.where(sd == 0, 1.0, sd)
-        w, b = train_lr((X[train] - mu) / sd, y[train], cfg)
-        probs = sigmoid(((X[test] - mu) / sd) @ w + b)
-        scores.append(evaluate(y[test], probs, 0.5)["f1"])
-    return float(np.mean(scores))
-
-
-def rfecv(
-    X: np.ndarray,
-    y: np.ndarray,
-    feature_names: list[str],
-    cfg: ClassifierConfig = ClassifierConfig(),
-) -> dict:
-    """Recursive feature elimination with cross-validation (M3 — the
-    reference configures sklearn RFECV with step=rfe_step_size,
-    cv=rfe_cv_folds, scoring='f1' but ships it DISABLED; this is the same
-    procedure over our reference-parity LR, fully deterministic).
-
-    Elimination: train on the standardized full set, drop the
-    `rfe_step_size` weakest-|weight| features, repeat to one feature;
-    each visited subset is scored by k-fold CV F1; the winner is the
-    highest-F1 subset (ties → fewer features, the regularization-friendly
-    choice).  Driver-side by the same design-parity argument as `fit`: the
-    labeled set is small; the corpus-scale work stays in Spark.
-
-    Returns {"selected": names, "n_features": k, "cv_scores": {n: f1},
-    "ranking": {name: elimination_rank}} (rank 1 = kept longest)."""
-    n = X.shape[1]
-    mu = X.mean(axis=0)
-    sd = X.std(axis=0)
-    sd = np.where(sd == 0, 1.0, sd)
-    Xs = (X - mu) / sd
-    active = list(range(n))
-    subsets = [list(active)]
-    elim_order: list[int] = []
-    while len(active) > 1:
-        w, _ = train_lr(Xs[:, active], y, cfg)
-        order = np.argsort(np.abs(w), kind="stable")  # weakest first
-        drop_k = min(max(cfg.rfe_step_size, 1), len(active) - 1)
-        doomed = sorted((active[i] for i in order[:drop_k]), reverse=True)
-        for d in doomed:
-            active.remove(d)
-            elim_order.append(d)
-        subsets.append(list(active))
-    cv_scores: dict[int, float] = {}
-    best_set, best_score = subsets[0], -1.0
-    for s in subsets:
-        f1 = _kfold_f1(X[:, s], y, cfg, max(cfg.rfe_cv_folds, 2))
-        cv_scores[len(s)] = round(f1, 6)
-        if f1 > best_score + 1e-12 or (
-            abs(f1 - best_score) <= 1e-12 and len(s) < len(best_set)
-        ):
-            best_set, best_score = s, f1
-    ranking = {feature_names[i]: 1 for i in subsets[-1]}
-    for pos, i in enumerate(reversed(elim_order)):
-        ranking[feature_names[i]] = pos + 2
-    return {
-        "selected": [feature_names[i] for i in best_set],
-        "n_features": len(best_set),
-        "cv_scores": cv_scores,
-        "ranking": ranking,
-    }
-
-
-# --------------------------------------------------------------- prefilters
-
-def prefilter_decision_col(features_df: DataFrame, cfg) -> "F.Column":
-    """F14: the reference's auto-classification prefilters
-    (feature_engineering.py:805-888 — disabled there, with a latent
-    NameError in the dead branch; implemented here as ONE whole-stage-
-    codegen column expression).  Decision order replicated: birth/death
-    match (with person-cosine floor) ⇒ 'match'; composite cosine ≥ τ ⇒
-    'match'; person cosine < τ ⇒ 'non_match'; else NULL (classifier
-    decides).  Guards on column presence mirror the reference's
-    'feature in features' checks."""
-    cols = set(features_df.columns)
-    decision = F.lit(None).cast("string")
-    branches = []
-    if cfg.birth_death_use_as_prefilter and {"birth_death_match", "person_cosine"} <= cols:
-        branches.append(
-            (
-                (F.col("birth_death_match") == 1.0)
-                & (F.col("person_cosine") > cfg.birth_death_min_person_cosine),
-                F.lit("match"),
-            )
-        )
-    if cfg.composite_cosine_enabled and "composite_cosine" in cols:
-        branches.append(
-            (F.col("composite_cosine") >= cfg.composite_cosine_threshold, F.lit("match"))
-        )
-    if cfg.person_cosine_enabled and "person_cosine" in cols:
-        branches.append(
-            (F.col("person_cosine") < cfg.person_cosine_threshold, F.lit("non_match"))
-        )
-    for cond, val in reversed(branches):
-        decision = F.when(cond, val).otherwise(decision)
-    return decision
-
-
-def score_with_prefilters(features_df: DataFrame, model: LRModel, pf_cfg) -> DataFrame:
-    """Scoring with the prefilter fast path: prefiltered pairs bypass the
-    LR entirely (probability pinned to 1.0 / 0.0 — the reference's
-    auto-classification), everything else takes the normal fused scoring
-    path.  The split is one codegen'd filter; no extra shuffle."""
-    flagged = features_df.withColumn("__pf", prefilter_decision_col(features_df, pf_cfg))
-    decided = flagged.where(F.col("__pf").isNotNull()).select(
-        "left_id",
-        "right_id",
-        F.when(F.col("__pf") == "match", F.lit(1.0)).otherwise(F.lit(0.0)).alias("probability"),
-        (F.col("__pf") == "match").alias("match"),
-    )
-    rest = flagged.where(F.col("__pf").isNull()).drop("__pf")
-    return score(rest, model).unionByName(decided)

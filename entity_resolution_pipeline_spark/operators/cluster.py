@@ -171,66 +171,6 @@ def connected_components(
     )
 
 
-def label_propagation(
-    edges: DataFrame, cfg: ClusteringConfig = ClusteringConfig()
-) -> DataFrame:
-    """edges(src, dst) → assignments(entity_id, root) by synchronous label
-    propagation (the reference's configured community fallback,
-    batch_parallel_classification.py:908-924, which calls networkx's
-    label_propagation_communities — never exercised in its shipped config).
-
-    Distributed formulation: every node starts labeled with itself; each
-    round a node adopts the most frequent label among its neighbors
-    (DETERMINISTIC tie-break: higher count, then lexicographically smaller
-    label — networkx shuffles instead, so community boundaries on ties may
-    differ; connectivity-pure graphs converge to identical partitions).
-    Unlike connected components, dense substructures keep their own labels
-    across sparse bridges, so LPA can SPLIT chain-bridged mega-clusters —
-    the reason the reference offers it as a fallback.  O(diameter) rounds,
-    each two shuffles; per-round localCheckpoint + one checksum action,
-    exactly like connected_components.  Final root = min node id per label
-    group (stable, parallelism-independent)."""
-    e = _canon(edges).localCheckpoint(eager=True)
-    both = e.select(F.col("src").alias("u"), F.col("dst").alias("v")).unionAll(
-        e.select(F.col("dst").alias("u"), F.col("src").alias("v"))
-    )
-    # self-vote: each node's own label joins the ballot — damps the 2-cycle
-    # label oscillation synchronous LPA is prone to on sparse/bipartite
-    # structures (ties then resolve toward the smaller label and stick)
-    nbrs = both.unionAll(
-        both.select("u").distinct().select("u", F.col("u").alias("v"))
-    ).localCheckpoint(eager=True)
-    labels = nbrs.select("u").distinct().select("u", F.col("u").alias("label"))
-    prev_sig = (0, 0)
-    for _ in range(cfg.max_iterations):
-        votes = (
-            nbrs.join(labels.withColumnRenamed("u", "v"), "v")
-            .groupBy("u", "label")
-            .agg(F.count("*").alias("n"))
-        )
-        from pyspark.sql import Window
-
-        w = Window.partitionBy("u").orderBy(F.desc("n"), F.asc("label"))
-        labels = (
-            votes.withColumn("rk", F.row_number().over(w))
-            .where(F.col("rk") == 1)
-            .select("u", "label")
-            .localCheckpoint(eager=False)
-        )
-        row = labels.agg(
-            F.count("*").alias("n"),
-            F.coalesce(F.expr("bit_xor(xxhash64(u, label))"), F.lit(0)).alias("h"),
-        ).collect()[0]
-        sig = (int(row["n"]), int(row["h"]))
-        if sig == prev_sig:
-            break
-        prev_sig = sig
-    roots = labels.groupBy("label").agg(F.min("u").alias("root"))
-    return labels.join(roots, "label").select(
-        F.col("u").alias("entity_id"), "root"
-    )
-
-
 def cluster_predictions(
     predictions: DataFrame,
     all_entities: DataFrame | None = None,
@@ -257,13 +197,7 @@ def cluster_predictions(
         predictions.where(F.col("match") & (F.col("probability") >= cfg.min_edge_weight))
         .select(F.col("left_id").alias("src"), F.col("right_id").alias("dst"))
     )
-    # cfg.algorithm: the reference's label_propagation path skips the
-    # min_edge_weight prune (classification.py only prunes on the CC
-    # branches — an inconsistency, not a feature); we threshold uniformly.
-    if cfg.algorithm == "label_propagation":
-        assignments = label_propagation(edges, cfg)
-    else:
-        assignments = connected_components(edges, cfg)
+    assignments = connected_components(edges, cfg)
     if all_entities is not None:
         singles = (
             all_entities.select(F.col(all_entities.columns[0]).alias("entity_id"))
@@ -768,7 +702,7 @@ def modularity(
     contribution) with Q = Σ contribution = Σ_c [L_c/m − (d_c/2m)²].
     Pure hash aggs — edge list shuffles on community only; no windows.
     assignments: (entity_id, community) — e.g. connected_components
-    (renamed root), label_propagation, or louvain_communities output.
+    (renamed root) or louvain_communities output.
     Nodes absent from assignments keep their own id (singleton
     convention).  Self-loops COUNT, with the networkx convention (r4,
     ADVICE r3): a self-loop of weight w adds w to m, w to its community's

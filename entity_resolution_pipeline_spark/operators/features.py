@@ -298,10 +298,6 @@ def selected_feature_names(
 
 _NULL_SENT = "NULL"
 
-# wall-clock of the driver-serial staging steps inside the last
-# pair_features_hashed call (Amdahl accounting for the scaling bench)
-LAST_STAGING: dict[str, float] = {}
-
 
 def _parallelism(df: DataFrame) -> int:
     """Target partition count for Python-UDF stages (see
@@ -907,11 +903,7 @@ def pair_features_hashed(
     pw0 = pairs.join(l, "left_id").join(r, "right_id").persist(StorageLevel.MEMORY_AND_DISK)
     pw = pw0
 
-    import time as _time
-
-    LAST_STAGING.clear()
     if cfg.broadcast_vectors:
-        _t0 = _time.time()
         sc = pairs.sparkSession.sparkContext
         # `staged`: a prebuilt matrix (stage_vector_matrix result or a
         # zero-arg callable/future-resolver returning one) — lets prepare()
@@ -924,8 +916,6 @@ def pair_features_hashed(
             )
         else:
             index, shard_paths, dim, mat_dir = stage_vector_matrix(vectors, cfg)
-        LAST_STAGING["stage_matrix"] = _time.time() - _t0
-        _t0 = _time.time()
         # NOTE: the staging dir must outlive the DataFrame — workers mmap
         # shards lazily at first task use
         bc = sc.broadcast((index, shard_paths, dim, mat_dir))

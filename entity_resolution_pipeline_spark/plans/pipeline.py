@@ -70,9 +70,10 @@ class PipelineResult:
         self._emb_future = emb_future
 
     def _resolve_emb(self) -> None:
+        # the future is kept, not cleared: a finished Future re-raises its
+        # error on every .result(), so every consumer sees a failed build
         if self._emb_future is not None:
-            fut, self._emb_future = self._emb_future, None
-            self._embeddings, self._idf_weights, self._staged = fut.result()
+            self._embeddings, self._idf_weights, self._staged = self._emb_future.result()
 
     @property
     def embeddings(self) -> DataFrame:
@@ -114,7 +115,7 @@ def prepare(pages: DataFrame, cfg: PipelineConfig = DEFAULT_CONFIG) -> PipelineR
     # scoring stage's first action (guide-style independent-job overlap).
     # PipelineResult.embeddings/.idf_weights block on the future, so every
     # consumer sees exactly the synchronous result; the persist is
-    # populated once and real failures re-raise at the first consumer.
+    # populated once and real failures re-raise at every consumer.
     from concurrent.futures import ThreadPoolExecutor
 
     def _build_emb():

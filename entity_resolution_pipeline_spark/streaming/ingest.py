@@ -88,10 +88,6 @@ def ingest_stats_stream(
     )
 
 
-def _exists(path: str) -> bool:
-    return os.path.exists(path)
-
-
 def _batch_processor(
     spark: SparkSession,
     out_dir: str,
@@ -120,7 +116,7 @@ def _batch_processor(
 
     def process(pages_batch: DataFrame, batch_id: int) -> None:
         records = extract_records(pages_batch).dropDuplicates(["record_id"])
-        if _exists(rec_root):
+        if os.path.exists(rec_root):
             prior = (
                 spark.read.option("basePath", rec_root)
                 .parquet(rec_root)

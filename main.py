@@ -6,12 +6,12 @@ dispatch, pipeline.py:66-120 stage sequence) on Spark: each stage reads its
 inputs from the previous stage's table, writes its output table + a manifest
 lineage row, and `--resume` skips stages whose manifest row is complete.
 
-Stages (in order): extract, preprocess, embed, block, features, train,
-predict, cluster, report.  `--stage all` runs the full sequence.  `--stage
-predict` without a checkpointed features table takes the fused
-battery+scoring path (one Python stage, no feature materialization).
-`--stage ingest` runs the incremental Structured Streaming ingest instead
-of the batch stages (exactly-once per input file; see streaming/ingest.py).
+Stages (in order): extract → preprocess → embed → block → train → predict
+→ cluster → report.  `--stage all` runs the full sequence.  `predict` runs
+the fused battery+scoring path (one Python stage; the per-pair feature
+table never materializes).  `--stage ingest` runs the incremental
+Structured Streaming ingest instead of the batch stages (exactly-once per
+input file; see streaming/ingest.py).
 
 Usage:
   spark-submit --py-files erx.zip main.py --pages /data/pages --out /work \
@@ -33,7 +33,6 @@ STAGES = (
     "preprocess",
     "embed",
     "block",
-    "features",
     "train",
     "predict",
     "cluster",
@@ -155,14 +154,6 @@ def run(args: argparse.Namespace, stop_spark: bool = True) -> None:
         write(cands, "block", metrics={"hot_blocks_dropped": float(n_hot)},
               bucket_by=("left_id",), num_buckets=16)
 
-    if should_run("features"):
-        cands = table("block")
-        rfh = table("record_field_hashes")
-        uniq = table("unique_strings")
-        vectors = table("embed").select("hash", "embedding").dropDuplicates(["hash"])
-        feats = FE.pair_features_hashed(cands, rfh, uniq, vectors, cfg.features)
-        write(feats, "features")
-
     if should_run("train"):
         if not args.labeled_pairs:
             raise SystemExit("--labeled-pairs is required for the train stage")
@@ -186,20 +177,14 @@ def run(args: argparse.Namespace, stop_spark: bool = True) -> None:
     if should_run("predict"):
         with open(os.path.join(out, "model.pkl"), "rb") as f:
             model = pickle.load(f)
-        if M.stage_complete(spark, out, "features"):
-            # resumable two-stage path: score the checkpointed feature table
-            preds = C.score(table("features"), model)
-        else:
-            # fused path: battery + scoring in one Python stage, feature
-            # table never materializes (features.pair_predictions_hashed)
-            preds = FE.pair_predictions_hashed(
-                table("block"),
-                table("record_field_hashes"),
-                table("unique_strings"),
-                table("embed").select("hash", "embedding").dropDuplicates(["hash"]),
-                model,
-                cfg.features,
-            )
+        preds = FE.pair_predictions_hashed(
+            table("block"),
+            table("record_field_hashes"),
+            table("unique_strings"),
+            table("embed").select("hash", "embedding").dropDuplicates(["hash"]),
+            model,
+            cfg.features,
+        )
         write(preds, "predict")
 
     if should_run("cluster"):

@@ -1,5 +1,5 @@
-"""CLI driver (main.py): full stage sequence, manifest resume, the fused
-predict path, and the streaming ingest stage."""
+"""CLI driver (main.py): full stage sequence with the fused predict path,
+manifest resume, and the streaming ingest stage."""
 
 from __future__ import annotations
 
@@ -45,9 +45,11 @@ def test_cli_all_stages_and_resume(spark, fixture_dirs, capsys):
     pages_path, lp_path, out = fixture_dirs
     cli.run_keep(_args(pages=pages_path, labeled_pairs=lp_path, out=out))
     # every stage table exists + manifest rows are complete
-    for stage in ("extract", "preprocess", "embed", "block", "features",
-                  "predict", "cluster"):
+    for stage in ("extract", "preprocess", "embed", "block", "train",
+                  "predict", "cluster", "report"):
         assert M.stage_complete(spark, out, stage), stage
+    # predict is fused: no per-pair feature table is ever written
+    assert not os.path.exists(os.path.join(out, "features"))
     preds = M.read_stage_table(spark, out, "predict")
     assert preds.where("match").count() > 0
     assert os.path.exists(os.path.join(out, "pipeline_report.json"))
@@ -56,34 +58,6 @@ def test_cli_all_stages_and_resume(spark, fixture_dirs, capsys):
     cli.run_keep(_args(pages=pages_path, labeled_pairs=lp_path, out=out, resume=True))
     out_text = capsys.readouterr().out
     assert out_text.count("[resume] skipping complete stage") >= 7
-
-
-def test_cli_fused_predict_matches_staged(spark, fixture_dirs):
-    """predict without a features checkpoint (fused path) == predict from
-    the checkpointed feature table."""
-    pages_path, lp_path, out = fixture_dirs
-    cli.run_keep(_args(pages=pages_path, labeled_pairs=lp_path, out=out))
-    staged = {
-        (r["left_id"], r["right_id"], r["match"])
-        for r in M.read_stage_table(spark, out, "predict").collect()
-    }
-    # drop the features table+manifest rows, rerun predict alone
-    import shutil
-
-    shutil.rmtree(os.path.join(out, "features"))
-    mf = M.read_manifest(spark, out).where("stage <> 'features'").collect()
-    shutil.rmtree(os.path.join(out, "_manifest"))
-    from entity_resolution_pipeline_spark.schemas import MANIFEST
-
-    spark.createDataFrame(mf, MANIFEST).write.mode("overwrite").parquet(
-        os.path.join(out, "_manifest")
-    )
-    cli.run_keep(_args(pages=pages_path, labeled_pairs=lp_path, out=out, stage="predict"))
-    fused = {
-        (r["left_id"], r["right_id"], r["match"])
-        for r in M.read_stage_table(spark, out, "predict").collect()
-    }
-    assert fused == staged
 
 
 def test_cli_ingest_stage(spark, fixture_dirs):

@@ -31,6 +31,13 @@ def test_two_components_and_roots(spark):
         spark, [("b", "a"), ("b", "c"), ("c", "d"), ("e", "f"), ("h", "g"), ("g", "f")]
     )
     assert comps == {"a": {"a", "b", "c", "d"}, "e": {"e", "f", "g", "h"}}
+    # disjoint cliques keep their min-id roots
+    comps = _components(spark, [("q", "p"), ("q", "r"), ("p", "r"), ("y", "x")])
+    assert comps == {"p": {"p", "q", "r"}, "x": {"x", "y"}}
+    # one bridge edge joins two triangles into one component
+    tri = [("a", "b"), ("b", "c"), ("a", "c"), ("d", "e"), ("e", "f"), ("d", "f")]
+    comps = _components(spark, tri + [("c", "d")])
+    assert comps == {"a": {"a", "b", "c", "d", "e", "f"}}
 
 
 def test_long_chain_single_component(spark):

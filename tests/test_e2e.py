@@ -80,3 +80,17 @@ def test_blocking_recall_on_labeled_positives(fixture):
     found = pos.join(cands, ["left_id", "right_id"], "left_semi").count()
     total = pos.count()
     assert found / total >= 0.999, (found, total)
+
+
+def test_failed_vector_build_raises_at_every_consumer():
+    """A failed background vector build must surface at EVERY accessor, not
+    only the first: later reads of .staged / .idf_weights must not silently
+    return None."""
+    from concurrent.futures import Future
+
+    fut = Future()
+    fut.set_exception(RuntimeError("vector build failed"))
+    res = PL.PipelineResult(None, None, None, None, emb_future=fut)
+    for prop in ("embeddings", "staged", "idf_weights"):
+        with pytest.raises(RuntimeError, match="vector build failed"):
+            getattr(res, prop)

@@ -39,7 +39,7 @@ def test_catalog_to_pages_roundtrip(spark, tmp_path):
         '"Wien, 1827",Lieder--Songs,1#Agent700-1\n'
     )
     catalog = I.read_catalog_csv(spark, str(p))
-    pages = I.catalog_to_pages(catalog) if hasattr(I, "catalog_to_pages") else I.catalog_records_to_pages(catalog)
+    pages = I.catalog_records_to_pages(catalog)
     records = extract_records(pages).collect()
     assert len(records) == 1
     r = records[0]
