@@ -160,10 +160,7 @@ def run_er_pipeline(spark, n_records: int = 8000, cpus: int | None = None) -> di
     materialized candidate pairs) — pairs-scored/sec over the scoring job is
     the north-rule throughput metric, measured apart from the per-corpus
     fixed work (prepare collects, blocking, clustering rounds) that
-    amortizes at real corpus sizes.
-    SPARK_GRAFT_BCAST=0 switches featurization to the shuffle-join path."""
-    import dataclasses
-
+    amortizes at real corpus sizes."""
     from entity_resolution_pipeline_spark import synth
     from entity_resolution_pipeline_spark.config import DEFAULT_CONFIG
     from entity_resolution_pipeline_spark.operators import blocking as B
@@ -171,10 +168,6 @@ def run_er_pipeline(spark, n_records: int = 8000, cpus: int | None = None) -> di
     from entity_resolution_pipeline_spark.plans import pipeline as PL
 
     cfg = DEFAULT_CONFIG
-    if os.environ.get("SPARK_GRAFT_BCAST", "1") == "0":
-        cfg = cfg.replace(
-            features=dataclasses.replace(cfg.features, broadcast_vectors=False)
-        )
     model = _trained_model(spark)
     pages = synth.pages_df(spark, n_records, partitions=max(cpus or CPUS, 8)).cache()
     pages.count()

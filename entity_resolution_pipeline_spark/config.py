@@ -110,21 +110,7 @@ class FeatureConfig:
     person_cos_bd_product_enabled: bool = True
     person_cos_bd_dampening: float = 0.25
     normalize_features: bool = True    # StandardScaler (feature_engineering.py:931-960)
-    # Physical knob: hash-join the unique-string vector table broadcast-side
-    # (vectors are the dedup'd small side by construction) so the wide
-    # pair×vector rows never shuffle — the cosine UDF consumes them pipelined
-    # in the probe stage.  Disable on corpora whose unique-string vector
-    # table exceeds executor memory; the shuffle-join fallback then applies.
-    broadcast_vectors: bool = True
-    # Staging root for the broadcast-vector matrix shards.  None → the
-    # ERX_STAGE_ROOT env var, else /dev/shm, else the system tempdir.  On a
-    # MULTI-HOST cluster this MUST point at storage all executors AND the
-    # driver share (NFS/FUSE mount); host-local tmpfs only works single-node.
-    # If executors can't see each other's shards, featurization fails fast
-    # with an actionable error naming this knob (features.py) — set
-    # broadcast_vectors=False for the shuffle-join path that needs no shared
-    # storage.
-    stage_root: str | None = None
+    broadcast_vectors = True  # not a field: one featurization path; perfbench still reads it
 
 
 @dataclass(frozen=True)

@@ -49,7 +49,8 @@ def embed_unique_strings(
 
     The embedding depends only on the string, so the UDF runs over distinct
     hashes (the small side), then joins back to per-(hash, field) frequencies
-    — dedup-before-expensive-work, SURVEY.md §4 row 1.
+    — dedup-before-expensive-work, SURVEY.md §4 row 1.  With `weights`
+    None and `cfg.use_idf` on, the weights are `corpus_idf_weights(melted)`.
     """
     from ..functions.embed import make_embed_udf
 
@@ -69,16 +70,7 @@ def embed_unique_strings(
     )
 
     if weights is None and cfg.use_idf:
-        from ..functions.embed import bucket_frequencies_with_total, bucket_idf_weights
-
-        distinct_strings = distinct_strings.persist()
-        # the persist still pays off (the embed UDF below rescans it); the
-        # sentinel-fused agg both materializes it and returns dfs + total in
-        # one job (replacing count() + agg — see corpus_idf_weights)
-        dfc, n_docs = bucket_frequencies_with_total(
-            distinct_strings, "value_norm", dim=cfg.dimensions, n=cfg.char_ngram
-        )
-        weights = bucket_idf_weights(dfc, n_docs, dim=cfg.dimensions).tolist()
+        weights = corpus_idf_weights(melted, cfg)
 
     embed_udf = make_embed_udf(dim=cfg.dimensions, n=cfg.char_ngram, weights=weights)
     vectors = distinct_strings.select(

@@ -1,15 +1,23 @@
 """Pairwise feature battery + standardization.
 
 Re-expresses the reference's per-pair, per-process feature computation
-(feature_engineering.py:332-392 fan-out; battery 426-665) as:
+(feature_engineering.py:332-392 fan-out; battery 426-665) as ONE fused
+Arrow pass (`pair_features_hashed`, `pair_predictions_hashed`):
 
-* two equi-joins assembling a wide pair row (pair ⋈ record_repr ⋈ record_repr
-  — reference J3, querying.py:174-210)
-* ONE `mapInPandas` pass computing the whole battery with stacked-matrix
-  numpy (the reference's dominant overhead was per-pair numpy calls across
-  process pools — SURVEY.md §4 'Batched vector ops')
+* pair rows carry only the 5+5 field hashes and the person strings
+  (pair ⋈ record_field_hashes ⋈ record_field_hashes — reference J3,
+  querying.py:174-210); no embedding vector ever rides a pair row
+* one `mapInPandas` stage gathers vectors by hash from the staged
+  unit-vector matrix (`stage_vector_matrix`) and computes the whole battery
+  with stacked-matrix numpy (the reference's dominant overhead was per-pair
+  numpy calls across process pools — SURVEY.md §4 'Batched vector ops');
+  on the predict path the same batch is LR-scored
 * StandardScaler as agg + select expressions (feature_engineering.py:931-960;
   sklearn population std, zero-variance columns scale 1.0)
+
+The wide-row path (`record_repr` → `assemble_pairs` → `pair_features` over
+`compute_features_pdf`) is the direct per-pair re-expression, kept as the
+parity oracle the fused stage is tested against.
 
 Semantics preserved per feature: see functions/similarity.py docstrings and
 the f-battery table SURVEY.md §2.7.  Missing-field conventions: a feature the
@@ -307,36 +315,11 @@ def _parallelism(df: DataFrame) -> int:
     return python_stage_width(df.sparkSession)
 
 
-def _ncos_udf():
-    """Arrow UDF: (vec, vec) → normalized cosine (raw+1)/2, one stacked
-    matmul per batch.  Arrow already hands list<float> elements over as
-    float32 ndarrays — np.stack keeps them zero-copy-ish and the math runs
-    in float32 (ample for similarity; result upcast to double once)."""
-    from pyspark.sql.functions import pandas_udf
-    from pyspark.sql.types import DoubleType
-
-    @pandas_udf(DoubleType())
-    def ncos(lv: pd.Series, rv: pd.Series) -> pd.Series:
-        A = np.stack(lv.to_numpy())
-        B = np.stack(rv.to_numpy())
-        na = np.linalg.norm(A, axis=1)
-        nb = np.linalg.norm(B, axis=1)
-        denom = na * nb
-        with np.errstate(divide="ignore", invalid="ignore"):
-            sims = np.einsum("ij,ij->i", A, B) / denom
-        sims = np.where(np.isfinite(sims), sims, 0.0).astype(np.float64)
-        return pd.Series((sims + 1.0) / 2.0)
-
-    return ncos
-
-
 class _ShardedMatrix:
     """Worker-side view of the shard-staged vector matrix: lazy mmap per
     shard file, vectorized gather by (shard << 32 | row) codes.  Shards hold
     UNIT vectors (pre-normalized at write time, so cosine is one dot with no
-    per-pair norms); a `.norms.npy` sidecar carries the original norms —
-    only their >0 flag is consumed, to keep the zero-vector-is-missing
-    semantics of the unsharded path."""
+    per-pair norms); a `.norms.npy` sidecar carries the original norms."""
 
     def __init__(self, shard_paths: list[str], dim: int):
         self.paths = shard_paths
@@ -353,9 +336,8 @@ class _ShardedMatrix:
                 raise FileNotFoundError(
                     f"vector shard {self.paths[s]!r} is not visible on this "
                     "executor — the staging root is not shared across hosts. "
-                    "Set FeatureConfig.stage_root (or ERX_STAGE_ROOT) to a "
-                    "filesystem mounted on the driver and ALL executors, or "
-                    "set broadcast_vectors=False for the shuffle-join path."
+                    "Set ERX_STAGE_ROOT to a filesystem mounted on the driver "
+                    "and ALL executors."
                 ) from e
             self._mats[s] = m
             self._norms[s] = np.load(
@@ -428,12 +410,35 @@ def cleanup_stage_dirs() -> None:
     _STAGE_DIRS.clear()
 
 
+def release_stage_dir(mat_dir: str) -> None:
+    """Delete ONE staging dir (the last element of a stage_vector_matrix
+    result) once everything scored against it has been materialized.
+    Unlike cleanup_stage_dirs it leaves every other registered matrix —
+    e.g. a concurrent pipeline's — in place."""
+    import shutil
+
+    shutil.rmtree(mat_dir, ignore_errors=True)
+    try:
+        _STAGE_DIRS.remove(mat_dir)
+    except ValueError:
+        pass  # already freed by cleanup_stage_dirs
+
+
 def _register_stage_dir(path: str) -> None:
     if not _STAGE_DIRS:
         import atexit
 
         atexit.register(_cleanup_stage_dirs)
     _STAGE_DIRS.append(path)
+
+
+def _string_metrics(cfg: FeatureConfig) -> tuple[tuple[str, ...], tuple[str, ...]]:
+    """(raw, normalized-name) string-similarity metrics the battery computes."""
+    known = ("levenshtein", "jaro_winkler")
+    return (
+        tuple(m for m in cfg.string_similarity_metrics if m in known),
+        tuple(m for m in cfg.normalized_name_sims if m in known),
+    )
 
 
 def _fused_battery_udf(
@@ -444,28 +449,15 @@ def _fused_battery_udf(
     score_params: tuple | None = None,
 ):
     """ONE mapInPandas pass computing the entire battery over the narrow
-    pair×hash rows (pw0), resolving vectors from the host-shared mmap matrix
-    and person strings from a broadcast dict.
-
-    Broadcast mode previously ran 3 separate distinct-hash-pair UDF stages
-    (cosine / string sims / birth-death) and then LEFT-JOINED each result
-    back onto the pair table — 8 join-backs whose exchanges dominated the
-    stage (measured ~22 s of a 60 s featurize at 90k pairs).  With the
-    vector matrix already host-shared, recomputing a cosine per pair row is
-    ~2·dim flops — far cheaper than shuffling the pair table through the
-    join-backs — so the fused pass does zero joins and zero extra stages;
-    string sims and year extraction stay deduplicated via worker-local
-    memoization instead of a global distinct."""
-    from pyspark.sql.functions import pandas_udf  # noqa: F401  (doc parity)
-
+    pair×hash rows: vectors are gathered from the staged mmap matrix
+    (cosine = one dot of unit vectors, ~2·dim flops per field), string sims
+    and birth/death years come off the carried person-string columns.  No
+    joins and no extra stages; string sims and year extraction stay
+    deduplicated via worker-local memoization instead of a global
+    distinct.  With `score_params` the same batch is also LR-scored."""
     names = feature_names(cfg)
     sf = cfg.string_similarity_field
-    raw_metrics = tuple(
-        m for m in cfg.string_similarity_metrics if m in ("levenshtein", "jaro_winkler")
-    )
-    norm_metrics = tuple(
-        m for m in cfg.normalized_name_sims if m in ("levenshtein", "jaro_winkler")
-    )
+    raw_metrics, norm_metrics = _string_metrics(cfg)
     out_cols = [f.name for f in out_schema.fields]
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -484,16 +476,13 @@ def _fused_battery_udf(
             mat_key, {"years": {}, "sims": {}}
         )
         years_c, sims_c = caches["years"], caches["sims"]
-        fns = {"jaro_winkler": jaro_winkler_similarity}
 
-        def _years(h: str, value):
-            """Years per distinct person hash, memoized; the value comes off
-            the carried pair-row column (same unique_strings source the old
-            broadcast dict read)."""
-            v = years_c.get(h)
+        def _years(value: str):
+            """Years per distinct person string, memoized across batches."""
+            v = years_c.get(value)
             if v is None:
                 v = extract_birth_death_years(value or "")
-                years_c[h] = v
+                years_c[value] = v
             return v
 
         def _valid_idx(col: pd.Series) -> np.ndarray:
@@ -526,7 +515,7 @@ def _fused_battery_udf(
                 B, _ = mat.gather(ri, ok)
                 # shards hold unit vectors: cosine is one dot.  A PRESENT
                 # but zero-norm embedding stages as a zero row (dot 0 →
-                # ncos 0.5) — identical to the unfused parity path, where
+                # ncos 0.5) — identical to the wide-row oracle, where
                 # batch_cosine yields raw 0.0 → (0+1)/2.  Masking such rows
                 # to 0.0 on norms (na>0 & nb>0) would silently diverge the
                 # two paths; only truly MISSING fields (ok False) are 0.0.
@@ -544,7 +533,7 @@ def _fused_battery_udf(
                     )
 
             # levenshtein arrives precomputed (JVM codegen expression over
-            # the carried string columns — see pair_features_hashed)
+            # the carried string columns — see _fused_pairs)
             for nm in passthrough:
                 out[nm] = pdf[nm].to_numpy(dtype=np.float64)
             # jaro-winkler (no Spark builtin) runs here, straight off the
@@ -552,7 +541,6 @@ def _fused_battery_udf(
             # string pair in the batch (memoized across batches) → scatter
             # by code: no per-row Python dict lookups in the hot loop.
             def _jw_block(lcol: pd.Series, rcol: pd.Series, out_name: str) -> None:
-                jw = fns["jaro_winkler"]
                 combined = lcol.fillna("").str.cat(rcol.fillna(""), sep="\x01")
                 codes, uniqs = pd.factorize(combined)
                 vals_u = np.empty(len(uniqs))
@@ -560,7 +548,7 @@ def _fused_battery_udf(
                     v = sims_c.get(u)
                     if v is None:
                         a, _, b = u.partition("\x01")
-                        v = jw(a, b) if a and b else 0.0
+                        v = jaro_winkler_similarity(a, b) if a and b else 0.0
                         sims_c[u] = v
                     vals_u[j] = v
                 out[out_name] = vals_u[codes]
@@ -606,7 +594,7 @@ def _fused_battery_udf(
                     b_u = np.full(len(uniqs) + 1, np.nan)
                     d_u = np.full(len(uniqs) + 1, np.nan)
                     for j, v in enumerate(uniqs):
-                        y = _years(v, v)
+                        y = _years(v)
                         b_u[j] = np.nan if y[0] is None else y[0]
                         d_u[j] = np.nan if y[1] is None else y[1]
                     # code -1 (null value → no person) maps to the trailing NaN
@@ -669,102 +657,37 @@ def _fused_battery_udf(
     return run
 
 
-def _string_sims_udf(metrics: tuple[str, ...], norm_metrics: tuple[str, ...]):
-    """Arrow UDF: (value, value) → struct of the enabled raw/normalized-name
-    string similarities."""
-    from pyspark.sql.functions import pandas_udf
-    from pyspark.sql.types import DoubleType, StructField, StructType
-
-    from ..functions.birth_death import normalize_name
-    from ..functions.similarity import jaro_winkler_similarity, levenshtein_similarity
-
-    fields = [StructField(f"raw_{m}", DoubleType(), True) for m in metrics]
-    fields += [StructField(f"norm_{m}", DoubleType(), True) for m in norm_metrics]
-    schema = StructType(fields)
-    fns = {"levenshtein": levenshtein_similarity, "jaro_winkler": jaro_winkler_similarity}
-
-    @pandas_udf(schema)
-    def sims(a: pd.Series, b: pd.Series) -> pd.DataFrame:
-        out: dict[str, list[float]] = {f.name: [] for f in fields}
-        for x, y in zip(a, b):
-            x = x or ""
-            y = y or ""
-            nx, ny = normalize_name(x), normalize_name(y)
-            for m in metrics:
-                out[f"raw_{m}"].append(fns[m](x, y) if x and y else 0.0)
-            for m in norm_metrics:
-                out[f"norm_{m}"].append(fns[m](nx, ny) if nx and ny else 0.0)
-        return pd.DataFrame(out)
-
-    return sims
-
-
-def pair_predictions_hashed(
-    pairs: DataFrame,
-    rfh: DataFrame,
-    unique_strings: DataFrame,
-    vectors: DataFrame,
-    model,
-    cfg: FeatureConfig = FeatureConfig(),
-    staged=None,
-) -> DataFrame:
-    """Fused featurize+score for the predict path: ONE Python stage computes
-    the battery AND the LR probability per Arrow batch, emitting the narrow
-    PREDICTIONS schema.  vs. score(pair_features_hashed(...)) this removes a
-    complete second Python stage round-trip of the 20+-column feature table
-    — at 10^12-pair scale the feature table never materializes at all.
-    Bit-identical to the unfused path (pinned by test_classify)."""
-    if cfg.broadcast_vectors:
-        return pair_features_hashed(
-            pairs, rfh, unique_strings, vectors, cfg, _score_model=model,
-            staged=staged,
-        )
-    from .classify import score
-
-    return score(
-        pair_features_hashed(
-            pairs, rfh, unique_strings, vectors, cfg, staged=staged
-        ),
-        model,
-    )
-
-
 def stage_vector_matrix(
-    vectors: DataFrame, cfg: FeatureConfig = FeatureConfig()
+    vectors: DataFrame, cfg: FeatureConfig | None = None
 ) -> tuple[dict, list, int, str]:
     """DISTRIBUTED matrix staging: executors write float32 npy shards of
     the dedup'd vector table in parallel (one shard per Arrow batch); the
     driver collects only (hash, shard, row) — O(uniques) small values,
-    never the vectors.  This removes the former driver-side toArrow
-    collect + np.save, the pipeline's dominant serial term in the N-vs-4N
-    scaling criterion: the serial remainder is the tiny index collect +
-    dict build.  Workers np.load(mmap_mode='r') each shard lazily and
-    share page cache.  The staging dir must be host-shared (tmpfs here);
-    on a multi-host cluster point it at a shared filesystem — or set
-    broadcast_vectors=False for the shuffle-join path that needs no
-    shared storage.
+    never the vectors.  Workers np.load(mmap_mode='r') each shard lazily
+    and share page cache.
 
-    Returns (index, shard_paths, dim, mat_dir).  Factored out of
-    pair_features_hashed so prepare() can run it in its background vector
+    The staging root is ERX_STAGE_ROOT, else /dev/shm, else the system
+    tempdir.  Those defaults are host-local: on a multi-host cluster
+    ERX_STAGE_ROOT must name a filesystem the driver and every executor
+    mount.  `cfg` is accepted for callers that pass the feature config;
+    no setting in it affects staging.
+
+    Returns (index, shard_paths, dim, mat_dir).  Separate from the fused
+    featurization so prepare() can run it in its background vector
     thread, overlapping the blocking phase."""
     import tempfile
     import uuid
 
-    # staging-root resolution: config > ERX_STAGE_ROOT env > /dev/shm >
-    # tempdir.  Single-node defaults are host-local; multi-host clusters
-    # MUST set a shared path (see FeatureConfig.stage_root).
-    stage_root = cfg.stage_root or os.environ.get("ERX_STAGE_ROOT")
-    if stage_root is None:
-        stage_root = "/dev/shm" if os.path.isdir("/dev/shm") else tempfile.gettempdir()
-    if not os.path.isdir(stage_root):
+    root = os.environ.get("ERX_STAGE_ROOT")
+    if root is None:
+        root = "/dev/shm" if os.path.isdir("/dev/shm") else tempfile.gettempdir()
+    if not os.path.isdir(root):
         raise FileNotFoundError(
-            f"vector staging root {stage_root!r} is not a directory on the "
-            "driver. On a multi-host cluster set FeatureConfig.stage_root "
-            "(or ERX_STAGE_ROOT) to a filesystem shared by the driver and "
-            "ALL executors, or set broadcast_vectors=False to use the "
-            "shuffle-join path that needs no shared storage."
+            f"vector staging root {root!r} is not a directory on the "
+            "driver. Set ERX_STAGE_ROOT to a filesystem shared by the driver "
+            "and ALL executors."
         )
-    mat_dir = os.path.join(stage_root, f"erx-vecmat-{uuid.uuid4().hex}")
+    mat_dir = os.path.join(root, f"erx-vecmat-{uuid.uuid4().hex}")
     os.makedirs(mat_dir, exist_ok=True)
     _register_stage_dir(mat_dir)
 
@@ -778,7 +701,7 @@ def stage_vector_matrix(
                 continue
             arr = np.stack(pdf["embedding"].to_numpy()).astype(np.float32)
             # pre-normalize: downstream cosine is then one dot product;
-            # original norms ride a sidecar (>0 flag = presence mask)
+            # original norms ride a sidecar
             norms = np.linalg.norm(arr, axis=1)
             nz = norms > 0
             arr[nz] /= norms[nz, None]
@@ -820,353 +743,141 @@ def pair_features_hashed(
     unique_strings: DataFrame,
     vectors: DataFrame,
     cfg: FeatureConfig = FeatureConfig(),
-    _score_model=None,
     staged=None,
 ) -> DataFrame:
-    """The scale-path feature battery: every expensive similarity is computed
-    once per DISTINCT (left_hash, right_hash) pair — not per record pair —
-    then equi-joined back; interactions are pure column math.
-
-    Why: person/title strings are power-law (159 uniques over 2,354 records
-    in the reference's dev data, output/field_statistics.json), so distinct
-    hash pairs ≪ record pairs, and no embedding vector ever rides along a
-    record-pair row (the naive pair⋈repr⋈repr join ships
-    |pairs|·fields·2·dim floats through the shuffle — the dominant cost at
-    any scale).  This is the reference's dedup-before-embed optimization
-    (embedding.py:106-119) applied to pairwise scoring.
+    """The scale-path feature battery, one fused Python stage per Arrow
+    batch.  Pair rows carry field hashes, never embedding vectors (the
+    naive pair⋈repr⋈repr join ships |pairs|·fields·2·dim floats through
+    the shuffle — the dominant cost at any scale); each vector is staged
+    once per distinct string (`stage_vector_matrix`) and gathered by hash
+    inside the stage.  This is the reference's dedup-before-embed
+    optimization (embedding.py:106-119) applied to pairwise scoring.
 
     Inputs: pairs(left_id, right_id[, match]); rfh = record_field_hashes
-    wide table; unique_strings(hash, value); vectors(hash, embedding).
-    Output schema identical to :func:`pair_features`.
+    wide table; unique_strings(hash, value); vectors(hash, embedding);
+    `staged`, a prebuilt stage_vector_matrix result (staged here when
+    None).  Output schema identical to :func:`pair_features`.
     """
-    from pyspark import StorageLevel
+    return _fused_pairs(pairs, rfh, unique_strings, vectors, cfg, None, staged)
 
+
+def pair_predictions_hashed(
+    pairs: DataFrame,
+    rfh: DataFrame,
+    unique_strings: DataFrame,
+    vectors: DataFrame,
+    model,
+    cfg: FeatureConfig = FeatureConfig(),
+    staged=None,
+) -> DataFrame:
+    """Fused featurize+score for the predict path: the same Python stage
+    as pair_features_hashed computes the battery AND the LR probability
+    per Arrow batch, emitting the narrow PREDICTIONS schema — the 20+-column
+    feature table never materializes.  Bit-identical to
+    classify.score(pair_features_hashed(...)) (pinned by test_features)."""
+    return _fused_pairs(pairs, rfh, unique_strings, vectors, cfg, model, staged)
+
+
+def _fused_pairs(pairs, rfh, unique_strings, vectors, cfg, model, staged) -> DataFrame:
     valid = lambda c: c.isNotNull() & (c != _NULL_SENT)  # noqa: E731
     sfld = cfg.string_similarity_field
-    raw_metrics = tuple(
-        m for m in cfg.string_similarity_metrics if m in ("levenshtein", "jaro_winkler")
-    )
-    norm_metrics = tuple(
-        m for m in cfg.normalized_name_sims if m in ("levenshtein", "jaro_winkler")
-    )
+    raw_metrics, norm_metrics = _string_metrics(cfg)
 
+    # String-similarity and birth/death inputs resolved ONCE per distinct
+    # person hash and carried as pair-row COLUMNS: levenshtein then runs as
+    # a whole-stage-codegen JVM expression over the pair table (the pure-
+    # Python DP was ~60 µs/pair — the dominant per-pair cost at 2M+
+    # candidates), and jaro-winkler and the year cascade read the strings
+    # without any per-row dict lookup.  The normalize cascade runs once per
+    # distinct hash, not once per pair.
+    pstr = (
+        rfh.select(F.col(sfld).alias("hash"))
+        .where(valid(F.col("hash")))
+        .distinct()
+        .join(unique_strings, "hash")
+        .select("hash", F.col("value").alias("pv"))
+    )
+    sel_l = [F.col("hash").alias(f"l_{sfld}_h"), F.col("pv").alias("l_pv")]
+    sel_r = [F.col("hash").alias(f"r_{sfld}_h"), F.col("pv").alias("r_pv")]
+    if norm_metrics:
+        from ..functions.birth_death import normalize_name_udf
+
+        pstr = pstr.withColumn("pn", normalize_name_udf("pv"))
+        sel_l.append(F.col("pn").alias("l_pn"))
+        sel_r.append(F.col("pn").alias("r_pn"))
+    pstr = F.broadcast(pstr)
     l = rfh.select(
         F.col("record_id").alias("left_id"),
         *[F.col(f).alias(f"l_{f}_h") for f in EMBED_FIELDS],
-    )
+    ).join(pstr.select(*sel_l), f"l_{sfld}_h", "left")
     r = rfh.select(
         F.col("record_id").alias("right_id"),
         *[F.col(f).alias(f"r_{f}_h") for f in EMBED_FIELDS],
-    )
-    # the raw person value is also carried when the fused path needs
-    # birth/death years — extracting them from the carried column kills the
-    # separate person-strings collect+broadcast job the driver used to run
-    need_pv = bool(raw_metrics) or (cfg.birth_death_enabled and cfg.broadcast_vectors)
-    if need_pv or norm_metrics:
-        # String-similarity inputs resolved ONCE per distinct person hash and
-        # carried as pair-row COLUMNS: levenshtein then runs as a
-        # whole-stage-codegen JVM expression over the pair table (the pure-
-        # Python DP was ~60 µs/pair — the dominant per-pair cost at 2M+
-        # candidates), and jaro-winkler reads the strings without any
-        # per-row dict lookup.  The normalize cascade runs once per distinct
-        # hash, not once per pair.
-        from ..functions.birth_death import normalize_name_udf
+    ).join(pstr.select(*sel_r), f"r_{sfld}_h", "left")
+    pw = pairs.join(l, "left_id").join(r, "right_id")
 
-        pstr = (
-            rfh.select(F.col(sfld).alias("hash"))
-            .where(valid(F.col("hash")))
-            .distinct()
-            .join(unique_strings, "hash")
-            .select("hash", "value")
+    if staged is None:
+        staged = stage_vector_matrix(vectors)
+    # NOTE: the staging dir must outlive the DataFrame — workers mmap
+    # shards lazily at first task use
+    bc = pairs.sparkSession.sparkContext.broadcast(staged)
+
+    fields = [
+        StructField("left_id", pw.schema["left_id"].dataType, False),
+        StructField("right_id", pw.schema["right_id"].dataType, False),
+    ]
+    score_params = None
+    if model is not None:
+        from pyspark.sql.types import BooleanType
+
+        # fold the scaler into the weights (see classify.score)
+        mu = np.array([model.scaler[c][0] for c in model.feature_names])
+        sd = np.array([model.scaler[c][1] for c in model.feature_names])
+        w_eff = model.weights / sd
+        b_eff = float(model.bias - np.dot(model.weights, mu / sd))
+        score_params = (
+            list(model.feature_names), w_eff, b_eff, model.decision_threshold
         )
-        scols = []
-        if need_pv:
-            scols.append(F.col("value").alias("pv"))
-        if norm_metrics:
-            pstr = pstr.withColumn("nval", normalize_name_udf("value"))
-            scols.append(F.col("nval").alias("pn"))
-        pstr = F.broadcast(pstr.select("hash", *scols))
-        sel_l = [F.col("hash").alias(f"l_{sfld}_h")]
-        sel_r = [F.col("hash").alias(f"r_{sfld}_h")]
-        if need_pv:
-            sel_l.append(F.col("pv").alias("l_pv"))
-            sel_r.append(F.col("pv").alias("r_pv"))
-        if norm_metrics:
-            sel_l.append(F.col("pn").alias("l_pn"))
-            sel_r.append(F.col("pn").alias("r_pn"))
-        l = l.join(pstr.select(*sel_l), f"l_{sfld}_h", "left")
-        r = r.join(pstr.select(*sel_r), f"r_{sfld}_h", "left")
-    # The narrow pair×hash base is materialized ONCE; every distinct-hash-pair
-    # set derives from it (deriving them from the growing join chain would
-    # re-execute each sim UDF per downstream join — quadratic lineage).  In
-    # the stage-table pipeline this persist is the stage's parquet write.
-    pw0 = pairs.join(l, "left_id").join(r, "right_id").persist(StorageLevel.MEMORY_AND_DISK)
-    pw = pw0
-
-    if cfg.broadcast_vectors:
-        sc = pairs.sparkSession.sparkContext
-        # `staged`: a prebuilt matrix (stage_vector_matrix result or a
-        # zero-arg callable/future-resolver returning one) — lets prepare()
-        # stage the matrix in its background thread so the staging job
-        # overlaps the blocking phase instead of serializing at the head of
-        # the scoring window.
-        if staged is not None:
-            index, shard_paths, dim, mat_dir = (
-                staged() if callable(staged) else staged
-            )
-        else:
-            index, shard_paths, dim, mat_dir = stage_vector_matrix(vectors, cfg)
-        # NOTE: the staging dir must outlive the DataFrame — workers mmap
-        # shards lazily at first task use
-        bc = sc.broadcast((index, shard_paths, dim, mat_dir))
-        # birth/death years read the carried l_pv/r_pv pair-row columns —
-        # no separate person-strings collect+broadcast job
-
-        has_match = "match" in pairs.columns
-        fields = [
-            StructField("left_id", pw0.schema["left_id"].dataType, False),
-            StructField("right_id", pw0.schema["right_id"].dataType, False),
+        fields += [
+            StructField("probability", DoubleType(), False),
+            StructField("match", BooleanType(), False),
         ]
-        score_params = None
-        if _score_model is not None:
-            from pyspark.sql.types import BooleanType
+    else:
+        if "match" in pairs.columns:
+            fields.append(StructField("match", pw.schema["match"].dataType, True))
+        fields += [StructField(nm, DoubleType(), True) for nm in feature_names(cfg)]
+    out_schema = StructType(fields)
 
-            # fold the scaler into the weights (see classify.score)
-            mu = np.array([_score_model.scaler[c][0] for c in _score_model.feature_names])
-            sd = np.array([_score_model.scaler[c][1] for c in _score_model.feature_names])
-            w_eff = _score_model.weights / sd
-            b_eff = float(_score_model.bias - np.dot(_score_model.weights, mu / sd))
-            score_params = (
-                list(_score_model.feature_names),
-                w_eff,
-                b_eff,
-                _score_model.decision_threshold,
+    # levenshtein similarities as whole-stage-codegen JVM expressions
+    # over the carried string columns; the fused UDF passes them through
+    def lev_expr(a, b):
+        mx = F.greatest(F.length(a), F.length(b))
+        return (
+            F.when(
+                (F.length(a) > 0) & (F.length(b) > 0),
+                1.0 - F.levenshtein(a, b) / mx,
             )
-            fields += [
-                StructField("probability", DoubleType(), False),
-                StructField("match", BooleanType(), False),
-            ]
-            out_schema = StructType(fields)
-        else:
-            if has_match:
-                fields.append(StructField("match", pw0.schema["match"].dataType, True))
-            fields += [StructField(nm, DoubleType(), True) for nm in feature_names(cfg)]
-            out_schema = StructType(fields)
-
-        # levenshtein similarities as whole-stage-codegen JVM expressions
-        # over the carried string columns; the fused UDF passes them through
-        def lev_expr(a, b):
-            mx = F.greatest(F.length(a), F.length(b))
-            return (
-                F.when(
-                    (F.length(a) > 0) & (F.length(b) > 0),
-                    1.0 - F.levenshtein(a, b) / mx,
-                )
-                .otherwise(0.0)
-                .cast("double")
-            )
-
-        pw_in = pw0
-        jvm_sims = []
-        if "levenshtein" in raw_metrics:
-            pw_in = pw_in.withColumn(f"{sfld}_levenshtein", lev_expr(F.col("l_pv"), F.col("r_pv")))
-            jvm_sims.append(f"{sfld}_levenshtein")
-        if "levenshtein" in norm_metrics:
-            pw_in = pw_in.withColumn(
-                f"{sfld}_norm_levenshtein", lev_expr(F.col("l_pn"), F.col("r_pn"))
-            )
-            jvm_sims.append(f"{sfld}_norm_levenshtein")
-
-        fused = _fused_battery_udf(
-            bc, cfg, out_schema,
-            passthrough=tuple(jvm_sims), score_params=score_params,
+            .otherwise(0.0)
+            .cast("double")
         )
-        # explicit repartition: the Python stage must run at half-width
-        # regardless of AQE's byte-based coalescing (UDF cost/row ≫ bytes/row)
-        return pw_in.repartition(_parallelism(pairs)).mapInPandas(fused, schema=out_schema)
 
-    # ---- shuffle-join path (vector table exceeds executor memory) ----
-    ncos = _ncos_udf()
-    vec_l = vectors.select(F.col("hash").alias("lh"), F.col("embedding").alias("lv"))
-    vec_r = vectors.select(F.col("hash").alias("rh"), F.col("embedding").alias("rv"))
+    jvm_sims = []
+    if "levenshtein" in raw_metrics:
+        pw = pw.withColumn(f"{sfld}_levenshtein", lev_expr(F.col("l_pv"), F.col("r_pv")))
+        jvm_sims.append(f"{sfld}_levenshtein")
+    if "levenshtein" in norm_metrics:
+        pw = pw.withColumn(
+            f"{sfld}_norm_levenshtein", lev_expr(F.col("l_pn"), F.col("r_pn"))
+        )
+        jvm_sims.append(f"{sfld}_norm_levenshtein")
 
-    # Cosine at GLOBAL distinct-hash-pair granularity: cosine is a function
-    # of the hash pair alone, so ONE fused UDF stage serves every field —
-    # stage count, scheduling latency, and per-worker broadcast loads don't
-    # multiply by the field count, and a hash pair shared by two fields is
-    # computed once.  Explicit repartition: the Python stage must run at
-    # full width regardless of AQE's byte-based coalescing (UDF cost/row ≫
-    # bytes/row).
-    hp_parts = [
-        pw0.select(
-            F.col(f"l_{f}_h").alias("lh"), F.col(f"r_{f}_h").alias("rh")
-        ).where(valid(F.col(f"l_{f}_h")) & valid(F.col(f"r_{f}_h")))
-        for f in cfg.cosine_similarities
-    ]
-    hp_all = hp_parts[0]
-    for p in hp_parts[1:]:
-        hp_all = hp_all.unionAll(p)
-    hp_all = hp_all.distinct().repartition(_parallelism(pairs))
-    sim_all = (
-        hp_all.join(vec_l, "lh")
-        .join(vec_r, "rh")
-        .repartition(_parallelism(pairs))
-        .select("lh", "rh", ncos("lv", "rv").alias("ncos"))
+    fused = _fused_battery_udf(
+        bc, cfg, out_schema,
+        passthrough=tuple(jvm_sims), score_params=score_params,
     )
-    sim_all = sim_all.persist(StorageLevel.MEMORY_AND_DISK)
-    sim_all.count()  # eager: materialize the UDF stage now — left lazy, AQE
-    # may fold it into a broadcast-side build evaluated near-serially inside
-    # the assembly job (measured 6×)
-    for f in cfg.cosine_similarities:
-        lh, rh = f"l_{f}_h", f"r_{f}_h"
-        simf = sim_all.select(
-            F.col("lh").alias(lh), F.col("rh").alias(rh), F.col("ncos").alias(f"{f}_cosine")
-        )
-        pw = pw.join(simf, [lh, rh], "left")
-        pw = pw.withColumn(f"{f}_cosine", F.coalesce(F.col(f"{f}_cosine"), F.lit(0.0)))
-
-    presence = {
-        f: valid(F.col(f"l_{f}_h")) & valid(F.col(f"r_{f}_h"))
-        for f in cfg.cosine_similarities
-    }
-
-    if cfg.title_cosine_squared_enabled and "title" in cfg.cosine_similarities:
-        pw = pw.withColumn("title_cosine_squared", F.pow(F.col("title_cosine"), 2))
-    if cfg.low_composite_penalty_enabled and "composite" in cfg.cosine_similarities:
-        pw = pw.withColumn(
-            "low_composite_penalty",
-            F.when(
-                presence["composite"]
-                & (F.col("composite_cosine") < F.lit(cfg.low_composite_penalty_threshold)),
-                1.0,
-            ).otherwise(0.0),
-        )
-
-    # string sims + birth/death over the person field, hash-pair deduped
-    sf = cfg.string_similarity_field
-    raw_metrics = tuple(m for m in cfg.string_similarity_metrics if m in ("levenshtein", "jaro_winkler"))
-    norm_metrics = tuple(m for m in cfg.normalized_name_sims if m in ("levenshtein", "jaro_winkler"))
-    if raw_metrics or norm_metrics:
-        lh, rh = f"l_{sf}_h", f"r_{sf}_h"
-        hp = (
-            pw0.select(F.col(lh), F.col(rh))
-            .where(valid(F.col(lh)) & valid(F.col(rh)))
-            .distinct()
-            .repartition(_parallelism(pairs))
-        )
-        us_l = unique_strings.select(F.col("hash").alias("lh"), F.col("value").alias("lval"))
-        us_r = unique_strings.select(F.col("hash").alias("rh"), F.col("value").alias("rval"))
-        sims_udf = _string_sims_udf(raw_metrics, norm_metrics)
-        sim = (
-            hp.join(us_l, F.col(lh) == F.col("lh"))
-            .join(us_r, F.col(rh) == F.col("rh"))
-            .repartition(_parallelism(pairs))
-            .select(F.col(lh), F.col(rh), sims_udf("lval", "rval").alias("ss"))
-        ).persist(StorageLevel.MEMORY_AND_DISK)
-        sim.count()  # eager (see cosine note)
-        cols = [F.col(lh), F.col(rh)]
-        for m in raw_metrics:
-            cols.append(F.col(f"ss.raw_{m}").alias(f"{sf}_{m}"))
-        for m in norm_metrics:
-            cols.append(F.col(f"ss.norm_{m}").alias(f"{sf}_norm_{m}"))
-        pw = pw.join(sim.select(*cols), [lh, rh], "left")
-        for m in raw_metrics:
-            pw = pw.withColumn(f"{sf}_{m}", F.coalesce(F.col(f"{sf}_{m}"), F.lit(0.0)))
-        for m in norm_metrics:
-            pw = pw.withColumn(f"{sf}_norm_{m}", F.coalesce(F.col(f"{sf}_norm_{m}"), F.lit(0.0)))
-
-    # interactions: pure column math over normalized cosines
-    def _cos(f: str):
-        return F.col(f"{f}_cosine") if f"{f}_cosine" in pw.columns else None
-
-    for f1, f2 in cfg.harmonic_means:
-        s1, s2 = _cos(f1), _cos(f2)
-        if s1 is None or s2 is None:
-            continue
-        pw = pw.withColumn(
-            f"{f1}_{f2}_harmonic",
-            F.when((s1 > 0) & (s2 > 0), 2.0 * s1 * s2 / (s1 + s2)).otherwise(0.0),
-        )
-    for f1, f2 in cfg.products:
-        s1, s2 = _cos(f1), _cos(f2)
-        if s1 is None or s2 is None:
-            continue
-        pw = pw.withColumn(f"{f1}_{f2}_product", s1 * s2)
-    for f1, f2 in cfg.ratios:
-        s1, s2 = _cos(f1), _cos(f2)
-        if s1 is None or s2 is None:
-            continue
-        pw = pw.withColumn(
-            f"{f1}_{f2}_ratio",
-            F.when(
-                presence[f1] & presence[f2] & (s2 > 0),
-                2.0 / (1.0 + F.exp(-s1 / s2)) - 1.0,
-            ).otherwise(0.0),
-        )
-
-    # birth/death: extract years once per DISTINCT person hash
-    if cfg.birth_death_enabled:
-        from ..functions.birth_death import birth_death_udf
-
-        lh, rh = f"l_{sf}_h", f"r_{sf}_h"
-        person_hashes = (
-            pw0.select(F.col(lh).alias("h"))
-            .unionAll(pw0.select(F.col(rh).alias("h")))
-            .where(valid(F.col("h")))
-            .distinct()
-        )
-        years = (
-            person_hashes.join(unique_strings, F.col("h") == F.col("hash"))
-            .repartition(_parallelism(pairs))
-            .select("h", birth_death_udf("value").alias("bd"))
-            .select("h", F.col("bd.birth_year").alias("by"), F.col("bd.death_year").alias("dy"))
-        ).persist(StorageLevel.MEMORY_AND_DISK)
-        years.count()  # eager (see cosine note)
-        pw = pw.join(
-            years.select(F.col("h").alias(lh), F.col("by").alias("l_by"), F.col("dy").alias("l_dy")),
-            lh,
-            "left",
-        ).join(
-            years.select(F.col("h").alias(rh), F.col("by").alias("r_by"), F.col("dy").alias("r_dy")),
-            rh,
-            "left",
-        )
-        has = lambda b, d: (b.isNotNull() | d.isNotNull()).cast("double")  # noqa: E731
-        pw = pw.withColumn("birth_death_left", F.coalesce(has(F.col("l_by"), F.col("l_dy")), F.lit(0.0)))
-        pw = pw.withColumn("birth_death_right", F.coalesce(has(F.col("r_by"), F.col("r_dy")), F.lit(0.0)))
-        bd_match = (
-            (F.col("l_by").isNotNull() & F.col("r_by").isNotNull() & (F.col("l_by") == F.col("r_by")))
-            | (F.col("l_dy").isNotNull() & F.col("r_dy").isNotNull() & (F.col("l_dy") == F.col("r_dy")))
-        ).cast("double")
-        pw = pw.withColumn("birth_death_match", F.coalesce(bd_match, F.lit(0.0)))
-        lev_name = f"{sf}_levenshtein"
-        if cfg.person_lev_bd_product_enabled and lev_name in pw.columns:
-            pw = pw.withColumn(
-                "person_levenshtein_birth_death_match_product",
-                F.when(F.col("birth_death_match") == 1.0, F.col(lev_name)).otherwise(
-                    F.col(lev_name) * cfg.person_lev_bd_dampening
-                ),
-            )
-        if cfg.person_cos_bd_product_enabled and "person" in cfg.cosine_similarities:
-            pc = F.col("person_cosine")
-            pw = pw.withColumn(
-                "person_cosine_birth_death_match_product",
-                F.when(
-                    presence["person"],
-                    F.when(F.col("birth_death_match") == 1.0, pc).otherwise(
-                        pc * cfg.person_cos_bd_dampening
-                    ),
-                ).otherwise(0.0),
-            )
-
-    names = feature_names(cfg)
-    out_cols = ["left_id", "right_id"]
-    if "match" in pairs.columns:
-        out_cols.append("match")
-    out_cols += [
-        nm if nm in pw.columns else F.lit(0.0).alias(nm) for nm in names
-    ]
-    return pw.select(*out_cols)
+    # explicit repartition: the Python stage must run at half-width
+    # regardless of AQE's byte-based coalescing (UDF cost/row ≫ bytes/row)
+    return pw.repartition(_parallelism(pairs)).mapInPandas(fused, schema=out_schema)
 
 
 def fit_scaler(features_df: DataFrame, cols: list[str]) -> dict[str, tuple[float, float]]:

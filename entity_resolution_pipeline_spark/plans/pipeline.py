@@ -88,8 +88,7 @@ class PipelineResult:
     @property
     def staged(self):
         """Pre-staged vector matrix (features.stage_vector_matrix result)
-        built by prepare()'s background thread, or None when the
-        shuffle-join path is configured."""
+        built by prepare()'s background thread."""
         self._resolve_emb()
         return self._staged
 
@@ -98,9 +97,9 @@ def prepare(pages: DataFrame, cfg: PipelineConfig = DEFAULT_CONFIG) -> PipelineR
     """pages → records → melted/unique_strings/record_field_hashes →
     embeddings (the shared prefix of both mainline plans).
 
-    The per-record representation is the narrow hash-wide table; vectors and
-    string values stay keyed by unique hash and are only touched at
-    distinct-hash-pair granularity in featurization (pair_features_hashed)."""
+    The per-record representation is the narrow hash-wide table; vectors
+    stay keyed by unique hash in the staged matrix that featurization
+    (pair_features_hashed) gathers from."""
     from pyspark import StorageLevel
 
     records = X.extract_records(pages).persist(StorageLevel.MEMORY_AND_DISK)
@@ -128,14 +127,11 @@ def prepare(pages: DataFrame, cfg: PipelineConfig = DEFAULT_CONFIG) -> PipelineR
             StorageLevel.MEMORY_AND_DISK
         )
         emb.count()  # pre-materialize while off the critical path
-        staged = None
-        if cfg.features.broadcast_vectors:
-            # pre-stage the scoring matrix too: it depends only on the
-            # (now materialized) vector table, so the staging job also
-            # overlaps blocking instead of heading the scoring window
-            vectors = emb.select("hash", "embedding").dropDuplicates(["hash"])
-            staged = FE.stage_vector_matrix(vectors, cfg.features)
-        return emb, weights, staged
+        # pre-stage the scoring matrix too: it depends only on the (now
+        # materialized) vector table, so the staging job also overlaps
+        # blocking instead of heading the scoring window
+        vectors = emb.select("hash", "embedding").dropDuplicates(["hash"])
+        return emb, weights, FE.stage_vector_matrix(vectors)
 
     pool = ThreadPoolExecutor(max_workers=1)
     fut = pool.submit(_build_emb)

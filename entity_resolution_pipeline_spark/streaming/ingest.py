@@ -171,8 +171,8 @@ def _batch_processor(
         }
         if model is not None:
             from ..operators import embedding as E
+            from ..operators import features as FE
             from ..operators import preprocess as P
-            from ..operators.features import pair_predictions_hashed
 
             melted = P.melt_fields(records)
             P.record_field_hashes(melted).write.mode("overwrite").parquet(
@@ -206,15 +206,23 @@ def _batch_processor(
                 .drop("ingest_batch")
                 .dropDuplicates(["hash"])
             )
-            preds = pair_predictions_hashed(
-                pairs, rfh_all, us_all, vec_all, model, cfg.features
-            ).persist()
-            n_scored = preds.count()
-            n_match = preds.where("match").count()
-            preds.write.mode("overwrite").parquet(
-                os.path.join(pred_root, f"ingest_batch={batch_id}")
-            )
-            preds.unpersist()
+            # one staged matrix per batch, freed once this batch's
+            # predictions are written (it holds the whole accumulated vector
+            # table; other pipelines' matrices stay registered)
+            staged = FE.stage_vector_matrix(vec_all)
+            try:
+                preds = FE.pair_predictions_hashed(
+                    pairs, rfh_all, us_all, vec_all, model, cfg.features,
+                    staged=staged,
+                ).persist()
+                n_scored = preds.count()
+                n_match = preds.where("match").count()
+                preds.write.mode("overwrite").parquet(
+                    os.path.join(pred_root, f"ingest_batch={batch_id}")
+                )
+                preds.unpersist()
+            finally:
+                FE.release_stage_dir(staged[3])
             metrics["pairs_scored"] = float(n_scored)
             metrics["pairs_matched"] = float(n_match)
 
@@ -251,8 +259,15 @@ def run_incremental(
 
     Pass a trained `model` (+ its frozen `idf_weights`) to also score each
     batch's new candidate pairs incrementally (accumulated `predictions`
-    table, see _batch_processor).
+    table, see _batch_processor).  With IDF on, `idf_weights` is required:
+    weights computed per micro-batch would disagree with training and with
+    every other batch.
     """
+    if model is not None and cfg.embedding.use_idf and idf_weights is None:
+        raise ValueError(
+            "run_incremental: a model under cfg.embedding.use_idf needs its "
+            "train-time idf_weights (PipelineResult.idf_weights)"
+        )
     stream = read_pages_stream(spark, in_path, max_files_per_trigger)
     q = (
         stream.writeStream.foreachBatch(

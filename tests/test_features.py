@@ -97,6 +97,18 @@ def test_fused_scoring_matches_unfused(prep):
     )
 
 
+def test_feature_config_has_no_path_switches():
+    """One featurization path: the old path switch is a read-only constant
+    and neither it nor a staging root can be set."""
+    import dataclasses
+
+    cfg = DEFAULT_CONFIG.features
+    assert cfg.broadcast_vectors is True
+    for name in ("broadcast_vectors", "stage_root"):
+        with pytest.raises(TypeError):
+            dataclasses.replace(cfg, **{name: None})
+
+
 def test_feature_names_and_selection():
     cfg = DEFAULT_CONFIG.features
     names = FE.feature_names(cfg)

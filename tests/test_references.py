@@ -1,16 +1,19 @@
 """Static reference check: every name the code imports from the package,
-and every attribute it reads off an imported package module, must exist.
+every attribute it reads off an imported package module, and every config
+value it reads as `cfg.<section>.<name>` / `DEFAULT_CONFIG.<section>.<name>`
+must exist.
 
 Parses (never runs) the package, tests/, tools/, perfbench/ and the
 top-level scripts.  Function-level lazy imports count like module-level
-ones, so deleting a helper that some caller still names fails here rather
-than at the first run of that caller.  Needs no Spark session: it only
-imports the package modules.
+ones, so deleting a helper or a config value that some caller still names
+fails here rather than at the first run of that caller.  Needs no Spark
+session: it only imports the package modules.
 """
 
 from __future__ import annotations
 
 import ast
+import dataclasses
 import importlib
 import os
 import types
@@ -180,11 +183,48 @@ def _check(relpath: str) -> _Checker:
     return c
 
 
+def _config_reads(relpath: str, tree: ast.AST) -> tuple[int, list[str]]:
+    """(chains seen, errors) for `cfg.<section>.<name>` and
+    `DEFAULT_CONFIG.<section>.<name>` reads whose <section> is a
+    PipelineConfig field, resolved against DEFAULT_CONFIG."""
+    from entity_resolution_pipeline_spark.config import DEFAULT_CONFIG, PipelineConfig
+
+    sections = {f.name for f in dataclasses.fields(PipelineConfig)}
+    seen, errors = 0, []
+    for n in ast.walk(tree):
+        if not (
+            isinstance(n, ast.Attribute)
+            and isinstance(n.value, ast.Attribute)
+            and isinstance(n.value.value, ast.Name)
+            and n.value.value.id in ("cfg", "DEFAULT_CONFIG")
+            and n.value.attr in sections
+        ):
+            continue
+        seen += 1
+        if not hasattr(getattr(DEFAULT_CONFIG, n.value.attr), n.attr):
+            errors.append(
+                f"{relpath}:{n.lineno}: `{n.value.value.id}.{n.value.attr}.{n.attr}`: "
+                f"no such config value"
+            )
+    return seen, errors
+
+
 FILES = _py_files()
 
 
 def test_package_references_resolve():
     errors = [e for f in FILES for e in _check(f).errors]
+    assert not errors, "\n".join(errors)
+
+
+def test_config_reads_resolve():
+    seen, errors = 0, []
+    for f in FILES:
+        with open(os.path.join(ROOT, f), encoding="utf-8") as fh:
+            n, errs = _config_reads(f, ast.parse(fh.read(), filename=f))
+        seen += n
+        errors += errs
+    assert seen > 5, seen  # the scan still finds the pipeline's reads
     assert not errors, "\n".join(errors)
 
 
@@ -207,3 +247,12 @@ def test_scan_covers_the_callers():
         None,
     )
     assert len(bad.errors) == 2, bad.errors
+    seen, errors = _config_reads(
+        "tests/x.py",
+        ast.parse(
+            "cfg.features.no_such_knob\n"
+            "DEFAULT_CONFIG.blocking.max_block_size\n"
+            "cfg.other.anything\n"  # not a PipelineConfig section: skipped
+        ),
+    )
+    assert seen == 2 and len(errors) == 1 and "no_such_knob" in errors[0], errors

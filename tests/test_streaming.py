@@ -164,6 +164,59 @@ def test_incremental_scoring_matches_batch(spark, tmp_path):
     assert any(v[1] for v in stream_preds.values())  # some matches found
 
 
+@pytest.fixture(scope="module")
+def trained(spark):
+    """(model, idf_weights) trained on a small labeled corpus."""
+    from entity_resolution_pipeline_spark.plans import pipeline as PL
+    from entity_resolution_pipeline_spark.schemas import LABELED_PAIRS
+
+    n = 120
+    pages = spark.createDataFrame(
+        synth.pages_pdf(n)[["url", "warc_ts", "html", "text", "lang"]], PAGES
+    )
+    gt = spark.createDataFrame(synth.ground_truth_pdf(n), LABELED_PAIRS)
+    prep = PL.run_labeled(pages, gt, DEFAULT_CONFIG)
+    return prep.model, prep.idf_weights
+
+
+def test_incremental_scoring_frees_staged_matrices(spark, tmp_path, monkeypatch, trained):
+    """Each scored micro-batch stages the accumulated vector matrix once and
+    removes it after writing its predictions: nothing is left under the
+    staging root after a drain."""
+    model, weights = trained
+    tmp = str(tmp_path)
+    stage_root = os.path.join(tmp, "stage")
+    os.makedirs(stage_root)
+    monkeypatch.setenv("ERX_STAGE_ROOT", stage_root)
+    out = os.path.join(tmp, "out")
+    in_path = _write_pages(spark, tmp, "b0", 0, 60)
+    _write_pages(spark, tmp, "b1", 60, 120)
+    run_incremental(
+        spark, in_path, out, DEFAULT_CONFIG, max_files_per_trigger=1,
+        model=model, idf_weights=weights,
+    )
+    from entity_resolution_pipeline_spark.sources.manifest import read_manifest
+
+    batches = [r["stage"] for r in read_manifest(spark, out).collect()]
+    assert len([s for s in batches if s.startswith("stream_ingest_batch_")]) == 2
+    assert read_accumulated(spark, out, "predictions").count() > 0
+    left = [d for d in os.listdir(stage_root) if d.startswith("erx-vecmat-")]
+    assert left == []
+
+
+def test_incremental_model_needs_idf_weights(spark, tmp_path, trained):
+    """A model without its train-time IDF weights is refused before the
+    stream starts (per-batch IDF would disagree with training)."""
+    model, _ = trained
+    assert DEFAULT_CONFIG.embedding.use_idf
+    tmp = str(tmp_path)
+    out = os.path.join(tmp, "out")
+    in_path = _write_pages(spark, tmp, "b0", 0, 40)
+    with pytest.raises(ValueError, match="idf_weights"):
+        run_incremental(spark, in_path, out, DEFAULT_CONFIG, model=model)
+    assert not os.path.exists(os.path.join(out, "_stream_checkpoint"))
+
+
 def test_stream_extract_matches_batch(spark, tmp_path):
     """readStream → extraction == batch extraction on the same files (the
     byte-identical invariant lifts to streaming)."""
