@@ -63,15 +63,9 @@ class BlockingConfig:
     # keys are computed on the YEAR-STRIPPED name, making same-entity strings
     # near-identical).  The exact-name key covers J=1.0 independently; fewer
     # false candidates is the single biggest scoring-cost lever.
-    max_block_size: int = 2000     # per-block member cap; see hot_block_strategy
-    # Skew handling for hot (over-cap) block keys (SURVEY.md §7 risk 3):
-    # * "drop": over-cap keys are non-discriminative "stop keys" — dropped
-    #   and counted (surfaced in stage metrics, never silent); recall/cost knob.
-    # * "salt": triangle-decomposition salting — members get ceil(size/cap)
-    #   salt groups, each unordered group pair becomes its own join bucket,
-    #   so pair enumeration stays COMPLETE while no task sees more than
-    #   ~2·cap members.  Residual within-cap imbalance → AQE skew-join.
-    hot_block_strategy: str = "drop"
+    max_block_size: int = 2000     # per-block member cap (SURVEY.md §7 risk 3):
+    # over-cap keys are non-discriminative "stop keys", dropped by batch and
+    # incremental blocking alike and counted in stage metrics; recall/cost knob
     also_exact_name_key: bool = True  # add a normalized-name exact block key
 
 
@@ -109,7 +103,6 @@ class FeatureConfig:
     person_lev_bd_dampening: float = 0.25
     person_cos_bd_product_enabled: bool = True
     person_cos_bd_dampening: float = 0.25
-    normalize_features: bool = True    # StandardScaler (feature_engineering.py:931-960)
     broadcast_vectors = True  # not a field: one featurization path; perfbench still reads it
 
 
@@ -191,7 +184,8 @@ class ClusteringConfig:
 @dataclass(frozen=True)
 class ImputationConfig:
     """Vector hot-deck imputation (reference src/batch_parallel_imputation.py,
-    config.yml:66-73)."""
+    config.yml:66-73).  Passed to operators/impute.py directly; it is not a
+    PipelineConfig section, since no ER stage imputes."""
 
     fields_to_impute: tuple[str, ...] = ("provision", "subjects")
     vector_similarity_threshold: float = 0.30
@@ -203,15 +197,12 @@ class ImputationConfig:
 class PipelineConfig:
     """Top-level config: one object drives every stage."""
 
-    null_values: tuple[str, ...] = NULL_VALUES
-    normalize_strings: bool = True             # config.yml:61
     embedding: EmbeddingConfig = field(default_factory=EmbeddingConfig)
     blocking: BlockingConfig = field(default_factory=BlockingConfig)
     features: FeatureConfig = field(default_factory=FeatureConfig)
     feature_selection: FeatureSelectionConfig = field(default_factory=FeatureSelectionConfig)
     classifier: ClassifierConfig = field(default_factory=ClassifierConfig)
     clustering: ClusteringConfig = field(default_factory=ClusteringConfig)
-    imputation: ImputationConfig = field(default_factory=ImputationConfig)
     shuffle_partitions: int = 32               # sized per SF; cluster deploys override
 
     def replace(self, **kw: Any) -> "PipelineConfig":

@@ -159,9 +159,9 @@ def candidate_pairs(
     """Block self-join → distinct (left_id, right_id), left < right.
 
     The l.id < r.id predicate halves the join output before the exchange;
-    dropDuplicates collapses multi-band duplicates.  Hot keys are handled
-    per cfg.hot_block_strategy (dropped-and-counted, or salted into
-    complete-enumeration triangle buckets) so no single block key dominates
+    dropDuplicates collapses multi-band duplicates.  Hot (over-cap) keys are
+    dropped, as incremental ingest drops them; callers count them from
+    `prune_hot_blocks`' second output.  No single block key then dominates
     a shuffle partition; AQE skew-join handles the rest.
     """
     # membership is consumed four times (size agg, anti-join, both join
@@ -169,17 +169,10 @@ def candidate_pairs(
     # dedup._minhash_feats): a lazy persist raced its own concurrent AQE
     # subtree materializations, running the signature UDF pass per consumer
     membership = membership.localCheckpoint(eager=True)
-    salted = cfg.hot_block_strategy == "salt"
-    if salted:
-        kept = salt_hot_blocks(membership, cfg)
-    else:
-        kept, _ = prune_hot_blocks(membership, cfg)
+    kept, _ = prune_hot_blocks(membership, cfg)
     l = kept.alias("l")
     r = kept.alias("r")
-    pairs = l.join(r, "block_key").where(F.col("l.id") < F.col("r.id"))
-    if salted:
-        pairs = pairs.where(salted_pair_predicate())
-    pairs = pairs.select(
+    pairs = l.join(r, "block_key").where(F.col("l.id") < F.col("r.id")).select(
         F.col("l.id").alias("left_id"), F.col("r.id").alias("right_id")
     )
     return pairs.dropDuplicates(["left_id", "right_id"])

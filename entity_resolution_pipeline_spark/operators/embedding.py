@@ -3,9 +3,9 @@
 Keeps the reference's one key optimization — embed each unique string once,
 not once per record (embedding.py:106-119) — and replaces its OpenAI batch
 client + rate limiter + Weaviate upsert (embedding.py:300-386,
-indexing.py:467-504) with a local hashed-n-gram projection UDF and a plain
-parquet table keyed (hash, field_type); idempotency = dropDuplicates on the
-key (the reference's uuid5 trick, indexing.py:480).
+indexing.py:467-504) with a local hashed-n-gram projection UDF and one
+(hash, embedding) vector table, one row per distinct string; idempotency =
+dropDuplicates on the hash (the reference's uuid5 trick, indexing.py:480).
 """
 
 from __future__ import annotations
@@ -44,27 +44,24 @@ def embed_unique_strings(
     cfg: EmbeddingConfig = EmbeddingConfig(),
     weights: list[float] | None = None,
 ) -> DataFrame:
-    """melted (record_id, field, value_norm, hash) → EMBEDDINGS table
-    (hash, field_type, value, frequency, embedding).
+    """melted (record_id, field, value_norm, hash) → vector table
+    (hash, embedding), one row per distinct embeddable string.
 
     The embedding depends only on the string, so the UDF runs over distinct
-    hashes (the small side), then joins back to per-(hash, field) frequencies
-    — dedup-before-expensive-work, SURVEY.md §4 row 1.  With `weights`
-    None and `cfg.use_idf` on, the weights are `corpus_idf_weights(melted)`.
+    hashes — dedup-before-expensive-work, SURVEY.md §4 row 1.  With
+    `weights` None and `cfg.use_idf` on, the weights are
+    `corpus_idf_weights(melted)`.
     """
     from ..functions.embed import make_embed_udf
 
     from ..config import python_stage_width
 
-    embeddable = melted.where(F.col("field").isin(*cfg.fields_to_embed))
-    freq = embeddable.groupBy("hash", "field").agg(
-        F.count("*").alias("frequency"), F.first("value_norm").alias("value")
-    )
     # repartition-on-key BEFORE dropDuplicates: provides the hash
     # distribution the dedup needs (no extra exchange) while pinning the
     # downstream embed-UDF stage to half-width (config.python_stage_width)
     distinct_strings = (
-        embeddable.select("hash", "value_norm")
+        melted.where(F.col("field").isin(*cfg.fields_to_embed))
+        .select("hash", "value_norm")
         .repartition(python_stage_width(melted.sparkSession), "hash")
         .dropDuplicates(["hash"])
     )
@@ -73,16 +70,4 @@ def embed_unique_strings(
         weights = corpus_idf_weights(melted, cfg)
 
     embed_udf = make_embed_udf(dim=cfg.dimensions, n=cfg.char_ngram, weights=weights)
-    vectors = distinct_strings.select(
-        "hash", embed_udf("value_norm").alias("embedding")
-    )
-    return (
-        freq.join(vectors, "hash")
-        .select(
-            "hash",
-            F.col("field").alias("field_type"),
-            "value",
-            "frequency",
-            "embedding",
-        )
-    )
+    return distinct_strings.select("hash", embed_udf("value_norm").alias("embedding"))

@@ -1,5 +1,5 @@
 """records → (melted field values, record_field_hashes, unique_strings,
-field_hash_mapping, field_statistics).
+field_hash_mapping).
 
 Re-expresses the reference's preprocessing stage (batch_parallel_preprocessing
 .py:244-383: ProcessPoolExecutor per record, dict merges) as declarative
@@ -91,32 +91,3 @@ def record_field_hashes(melted: DataFrame) -> DataFrame:
         ],
     )
 
-
-def field_statistics(melted: DataFrame, records: DataFrame) -> DataFrame:
-    """Per-field: present count, null count, distinct strings (reference
-    preprocessing.py:500-509).  At 100 TB `approx_count_distinct` is the
-    right metric estimator; exact distinct kept here because the oracle
-    checks equality."""
-    total = records.count()
-    present = melted.groupBy("field").agg(
-        F.count("*").alias("count"),
-        F.countDistinct("hash").alias("unique_count"),
-    )
-    return present.select(
-        "field",
-        "count",
-        (F.lit(total) - F.col("count")).alias("null_count"),
-        "unique_count",
-    )
-
-
-def preprocess(records: DataFrame) -> dict[str, DataFrame]:
-    """Run the full stage; melted is the shared upstream (cache it when
-    materializing more than one output)."""
-    melted = melt_fields(records)
-    return {
-        "melted": melted,
-        "unique_strings": unique_strings(melted),
-        "field_hash_mapping": field_hash_mapping(melted),
-        "record_field_hashes": record_field_hashes(melted),
-    }

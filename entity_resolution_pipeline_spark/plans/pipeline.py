@@ -2,8 +2,10 @@
 
 The reference's `Pipeline` class runs 8 sequential stages with pickle
 checkpoints (src/pipeline.py:66-120).  Here each stage is a pure
-DataFrame→DataFrame function (operators/*), and plans are thin compositions;
-`run_resumable` adds the manifest checkpoint/resume protocol between stages.
+DataFrame→DataFrame function (operators/*), and plans are thin compositions.
+`train` and `score_pairs` are the one train/score composition: these plans,
+the CLI (main.py) and incremental ingest all call them over a
+`PipelineResult`.
 
 Two mainline plans:
 
@@ -33,14 +35,20 @@ from ..operators import preprocess as P
 class PipelineResult:
     """Stage handles of the shared pipeline prefix.
 
-    `embeddings` / `idf_weights` may be built ASYNCHRONOUSLY (prepare()
+    `embeddings` is the (hash, embedding) vector table, one row per distinct
+    string.  It and `idf_weights` may be built ASYNCHRONOUSLY (prepare()
     hands them off to a background thread so the IDF agg and the embed-UDF
     materialization overlap the blocking phase, which never reads vectors);
     the properties block until the build completes, so consumers see
     exactly the values the synchronous construction produced.
     `idf_weights` are the frozen featurization params the embeddings were
     computed under (None when cfg.embedding.use_idf is off); incremental /
-    streaming scoring re-embeds NEW strings under these same weights."""
+    streaming scoring re-embeds NEW strings under these same weights.
+
+    Callers that already hold the tables (the CLI, ingest) pass
+    `embeddings` directly; `staged` then stages it on first access, and the
+    caller frees it with `features.release_stage_dir(result.staged[3])`
+    once everything scored against it is written."""
 
     def __init__(
         self,
@@ -87,9 +95,11 @@ class PipelineResult:
 
     @property
     def staged(self):
-        """Pre-staged vector matrix (features.stage_vector_matrix result)
-        built by prepare()'s background thread."""
+        """Staged vector matrix (features.stage_vector_matrix result): built
+        by prepare()'s background thread, else staged here on first access."""
         self._resolve_emb()
+        if self._staged is None:
+            self._staged = FE.stage_vector_matrix(self._embeddings)
         return self._staged
 
 
@@ -130,8 +140,7 @@ def prepare(pages: DataFrame, cfg: PipelineConfig = DEFAULT_CONFIG) -> PipelineR
         # pre-stage the scoring matrix too: it depends only on the (now
         # materialized) vector table, so the staging job also overlaps
         # blocking instead of heading the scoring window
-        vectors = emb.select("hash", "embedding").dropDuplicates(["hash"])
-        return emb, weights, FE.stage_vector_matrix(vectors)
+        return emb, weights, FE.stage_vector_matrix(emb)
 
     pool = ThreadPoolExecutor(max_workers=1)
     fut = pool.submit(_build_emb)
@@ -150,9 +159,8 @@ def featurize_pairs(
 ) -> DataFrame:
     from pyspark import StorageLevel
 
-    vectors = prep.embeddings.select("hash", "embedding").dropDuplicates(["hash"])
     feats = FE.pair_features_hashed(
-        pairs, prep.record_field_hashes, prep.unique_strings, vectors,
+        pairs, prep.record_field_hashes, prep.unique_strings, prep.embeddings,
         cfg.features, staged=prep.staged,
     )
     # consumers run several actions (scaler agg, collect, scoring); in the
@@ -165,11 +173,25 @@ def score_pairs(
 ) -> DataFrame:
     """Predict-path scoring: fused featurize+score, one Python stage, narrow
     PREDICTIONS out (see features.pair_predictions_hashed)."""
-    vectors = prep.embeddings.select("hash", "embedding").dropDuplicates(["hash"])
     return FE.pair_predictions_hashed(
-        pairs, prep.record_field_hashes, prep.unique_strings, vectors, model,
-        cfg.features, staged=prep.staged,
+        pairs, prep.record_field_hashes, prep.unique_strings, prep.embeddings,
+        model, cfg.features, staged=prep.staged,
     )
+
+
+def train(
+    labeled_pairs: DataFrame, prep: PipelineResult, cfg: PipelineConfig = DEFAULT_CONFIG
+) -> tuple[Any, dict]:
+    """Labeled (left, right, match) pairs → (model, metrics): featurize the
+    pairs over `prep`, fit on the selected features."""
+    pairs = labeled_pairs.select(
+        F.col("left").alias("left_id"), F.col("right").alias("right_id"), "match"
+    )
+    features_df = featurize_pairs(pairs, prep, cfg)
+    feature_cols = FE.selected_feature_names(cfg.features, cfg.feature_selection)
+    model, metrics = C.fit(features_df, feature_cols, cfg.classifier)
+    features_df.unpersist()
+    return model, metrics
 
 
 def run_labeled(
@@ -179,14 +201,7 @@ def run_labeled(
 ) -> PipelineResult:
     """Ground-truth path: train + evaluate on labeled (left, right, match)."""
     prep = prepare(pages, cfg)
-    pairs = labeled_pairs.select(
-        F.col("left").alias("left_id"), F.col("right").alias("right_id"), "match"
-    )
-    features_df = featurize_pairs(pairs, prep, cfg)
-    feature_cols = FE.selected_feature_names(cfg.features, cfg.feature_selection)
-    model, metrics = C.fit(features_df, feature_cols, cfg.classifier)
-    prep.model = model
-    prep.metrics = metrics
+    prep.model, prep.metrics = train(labeled_pairs, prep, cfg)
     return prep
 
 
@@ -202,13 +217,7 @@ def run_dedup(
     if model is None:
         if labeled_pairs is None:
             raise ValueError("run_dedup needs `model` or `labeled_pairs`")
-        lp = labeled_pairs.select(
-            F.col("left").alias("left_id"), F.col("right").alias("right_id"), "match"
-        )
-        lp_features = featurize_pairs(lp, prep, cfg)
-        feature_cols = FE.selected_feature_names(cfg.features, cfg.feature_selection)
-        model, metrics = C.fit(lp_features, feature_cols, cfg.classifier)
-        prep.metrics = metrics
+        model, prep.metrics = train(labeled_pairs, prep, cfg)
     prep.model = model
 
     membership = B.block_membership(prep.records, cfg.blocking)

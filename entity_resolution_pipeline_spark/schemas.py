@@ -8,11 +8,9 @@ and never rely on inference (SURVEY.md §1.2).
 from __future__ import annotations
 
 from pyspark.sql.types import (
-    ArrayType,
     BinaryType,
     BooleanType,
     DoubleType,
-    FloatType,
     IntegerType,
     LongType,
     MapType,
@@ -75,18 +73,6 @@ RECORD_FIELD_HASHES = StructType(
     + [
         StructField(f, StringType(), True)
         for f in ("composite", "person", "title", "provision", "subjects", "roles")
-    ]
-)
-
-# Per-(unique string, field) embedding row (reference Weaviate object,
-# indexing.py:441-454, re-expressed as a table).
-EMBEDDINGS = StructType(
-    [
-        StructField("hash", StringType(), False),
-        StructField("field_type", StringType(), False),
-        StructField("value", StringType(), True),
-        StructField("frequency", LongType(), True),
-        StructField("embedding", ArrayType(FloatType()), True),
     ]
 )
 

@@ -134,9 +134,7 @@ def _batch_processor(
         membership_new.write.mode("overwrite").parquet(
             os.path.join(mem_root, f"ingest_batch={batch_id}")
         )
-        membership_all = (
-            spark.read.option("basePath", mem_root).parquet(mem_root).drop("ingest_batch")
-        )
+        membership_all = read_accumulated(spark, out_dir, "membership")
 
         # hot-block cap on ACCUMULATED size (drop-and-count semantics)
         sizes = membership_all.groupBy("block_key").agg(F.count("*").alias("size"))
@@ -173,48 +171,38 @@ def _batch_processor(
             from ..operators import embedding as E
             from ..operators import features as FE
             from ..operators import preprocess as P
+            from ..plans import pipeline as PL
 
             melted = P.melt_fields(records)
             P.record_field_hashes(melted).write.mode("overwrite").parquet(
                 os.path.join(rfh_root, f"ingest_batch={batch_id}")
             )
-            melted.select("hash", F.col("value_norm").alias("value")).dropDuplicates(
-                ["hash"]
-            ).write.mode("overwrite").parquet(
+            P.unique_strings(melted).write.mode("overwrite").parquet(
                 os.path.join(us_root, f"ingest_batch={batch_id}")
             )
-            E.embed_unique_strings(melted, cfg.embedding, weights=idf_weights).select(
-                "hash", "embedding"
-            ).dropDuplicates(["hash"]).write.mode("overwrite").parquet(
-                os.path.join(emb_root, f"ingest_batch={batch_id}")
-            )
+            E.embed_unique_strings(melted, cfg.embedding, weights=idf_weights).write.mode(
+                "overwrite"
+            ).parquet(os.path.join(emb_root, f"ingest_batch={batch_id}"))
             # accumulated featurization tables (old pairs' sides may be old
-            # records); cross-batch duplicate hashes collapse here — at
-            # corpus scale these are Iceberg MERGE targets instead
-            rfh_all = spark.read.option("basePath", rfh_root).parquet(rfh_root).drop(
-                "ingest_batch"
-            )
-            us_all = (
-                spark.read.option("basePath", us_root)
-                .parquet(us_root)
-                .drop("ingest_batch")
-                .dropDuplicates(["hash"])
-            )
-            vec_all = (
-                spark.read.option("basePath", emb_root)
-                .parquet(emb_root)
-                .drop("ingest_batch")
-                .dropDuplicates(["hash"])
+            # records); two micro-batches can embed the same new string, so
+            # cross-batch duplicate hashes collapse here — at corpus scale
+            # these are Iceberg MERGE targets instead
+            def accumulated(table: str) -> DataFrame:
+                return read_accumulated(spark, out_dir, table).dropDuplicates(["hash"])
+
+            prep = PL.PipelineResult(
+                records,
+                melted,
+                accumulated("unique_strings"),
+                read_accumulated(spark, out_dir, "record_field_hashes"),
+                embeddings=accumulated("embeddings"),
             )
             # one staged matrix per batch, freed once this batch's
             # predictions are written (it holds the whole accumulated vector
             # table; other pipelines' matrices stay registered)
-            staged = FE.stage_vector_matrix(vec_all)
+            staged = prep.staged
             try:
-                preds = FE.pair_predictions_hashed(
-                    pairs, rfh_all, us_all, vec_all, model, cfg.features,
-                    staged=staged,
-                ).persist()
+                preds = PL.score_pairs(pairs, prep, model, cfg).persist()
                 n_scored = preds.count()
                 n_match = preds.where("match").count()
                 preds.write.mode("overwrite").parquet(
@@ -284,6 +272,8 @@ def run_incremental(
 
 def read_accumulated(spark: SparkSession, out_dir: str, table: str) -> DataFrame:
     """Read the accumulated output of `run_incremental` ('records',
-    'membership', or 'candidates') across all ingested batches."""
+    'membership', 'candidates', or with a model 'record_field_hashes',
+    'unique_strings', 'embeddings' and 'predictions') across all ingested
+    batches."""
     root = os.path.join(out_dir, table)
     return spark.read.option("basePath", root).parquet(root).drop("ingest_batch")

@@ -52,8 +52,6 @@ def build_spark(app: str, shuffle_partitions: int | None = None):
 
 
 def run(args: argparse.Namespace, stop_spark: bool = True) -> None:
-    from pyspark.sql import functions as F
-
     from entity_resolution_pipeline_spark.config import DEFAULT_CONFIG
     from entity_resolution_pipeline_spark.operators import blocking as B
     from entity_resolution_pipeline_spark.operators import classify as C
@@ -62,6 +60,7 @@ def run(args: argparse.Namespace, stop_spark: bool = True) -> None:
     from entity_resolution_pipeline_spark.operators import extract as X
     from entity_resolution_pipeline_spark.operators import features as FE
     from entity_resolution_pipeline_spark.operators import preprocess as P
+    from entity_resolution_pipeline_spark.plans import pipeline as PL
     from entity_resolution_pipeline_spark.plans import reporting as R
     from entity_resolution_pipeline_spark.sources import inputs as I
     from entity_resolution_pipeline_spark.sources import manifest as M
@@ -126,6 +125,14 @@ def run(args: argparse.Namespace, stop_spark: bool = True) -> None:
             return produced[stage]
         return M.read_stage_table(spark, out, stage)
 
+    def prepared():
+        # the library's train/score composition over the stage tables; the
+        # caller frees its staged matrix once the stage output is written
+        return PL.PipelineResult(
+            table("extract"), table("preprocess"), table("unique_strings"),
+            table("record_field_hashes"), embeddings=table("embed"),
+        )
+
     if should_run("extract"):
         pages = I.read_pages(spark, args.pages)
         write(X.extract_records(pages), "extract")
@@ -157,15 +164,9 @@ def run(args: argparse.Namespace, stop_spark: bool = True) -> None:
     if should_run("train"):
         if not args.labeled_pairs:
             raise SystemExit("--labeled-pairs is required for the train stage")
-        lp = I.read_labeled_pairs(spark, args.labeled_pairs).select(
-            F.col("left").alias("left_id"), F.col("right").alias("right_id"), "match"
-        )
-        rfh = table("record_field_hashes")
-        uniq = table("unique_strings")
-        vectors = table("embed").select("hash", "embedding").dropDuplicates(["hash"])
-        lpf = FE.pair_features_hashed(lp, rfh, uniq, vectors, cfg.features)
-        cols = FE.selected_feature_names(cfg.features, cfg.feature_selection)
-        model, metrics = C.fit(lpf, cols, cfg.classifier)
+        prep = prepared()
+        model, metrics = PL.train(I.read_labeled_pairs(spark, args.labeled_pairs), prep, cfg)
+        FE.release_stage_dir(prep.staged[3])
         with open(os.path.join(out, "model.pkl"), "wb") as f:
             pickle.dump(model, f)
         with open(os.path.join(out, "classification_metrics.json"), "w") as f:
@@ -177,15 +178,9 @@ def run(args: argparse.Namespace, stop_spark: bool = True) -> None:
     if should_run("predict"):
         with open(os.path.join(out, "model.pkl"), "rb") as f:
             model = pickle.load(f)
-        preds = FE.pair_predictions_hashed(
-            table("block"),
-            table("record_field_hashes"),
-            table("unique_strings"),
-            table("embed").select("hash", "embedding").dropDuplicates(["hash"]),
-            model,
-            cfg.features,
-        )
-        write(preds, "predict")
+        prep = prepared()
+        write(PL.score_pairs(table("block"), prep, model, cfg), "predict")
+        FE.release_stage_dir(prep.staged[3])
 
     if should_run("cluster"):
         preds = table("predict")

@@ -1,5 +1,6 @@
-"""Blocking tests: LSH membership, hot-block handling, and the
-completeness guarantee of triangle-decomposition salting."""
+"""Blocking tests: hot-block dropping in candidate_pairs, and the
+completeness guarantee of triangle-decomposition salting (salt_hot_blocks,
+used by the dedup and ANN hot buckets)."""
 
 from __future__ import annotations
 
@@ -10,6 +11,18 @@ from entity_resolution_pipeline_spark.config import BlockingConfig
 from entity_resolution_pipeline_spark.operators import blocking as B
 
 
+def _salted_pairs(membership, cfg):
+    """Self-join of the salted membership under salted_pair_predicate."""
+    salted = B.salt_hot_blocks(membership, cfg)
+    l, r = salted.alias("l"), salted.alias("r")
+    return (
+        l.join(r, "block_key")
+        .where(F.col("l.id") < F.col("r.id"))
+        .where(B.salted_pair_predicate())
+        .select(F.col("l.id").alias("left_id"), F.col("r.id").alias("right_id"))
+    )
+
+
 def test_salt_hot_blocks_complete_enumeration(spark):
     """One hot block of 200 members, cap 50 → salted self-join must produce
     EXACTLY C(200,2) pairs — none lost, none duplicated."""
@@ -17,8 +30,8 @@ def test_salt_hot_blocks_complete_enumeration(spark):
     membership = spark.createDataFrame(
         [(f"id{i:04d}", "hot") for i in range(n)], ["id", "block_key"]
     )
-    cfg = BlockingConfig(max_block_size=cap, hot_block_strategy="salt")
-    pairs = B.candidate_pairs(membership, cfg)
+    cfg = BlockingConfig(max_block_size=cap)
+    pairs = _salted_pairs(membership, cfg)
     assert pairs.count() == n * (n - 1) // 2
     # bounded buckets: a bucket holds two hash-assigned salt groups of
     # expected size ≤ cap each (± hash-uniformity variance) — far below the
@@ -33,15 +46,15 @@ def test_salt_leaves_cold_blocks_intact(spark):
     membership = spark.createDataFrame(
         [(f"id{i}", "cold") for i in range(10)], ["id", "block_key"]
     )
-    cfg = BlockingConfig(max_block_size=50, hot_block_strategy="salt")
-    pairs = B.candidate_pairs(membership, cfg)
+    cfg = BlockingConfig(max_block_size=50)
+    pairs = _salted_pairs(membership, cfg)
     assert pairs.count() == 45
 
 
 def test_drop_strategy_removes_hot_blocks(spark):
     rows = [(f"a{i}", "hot") for i in range(100)] + [("x", "cold"), ("y", "cold")]
     membership = spark.createDataFrame(rows, ["id", "block_key"])
-    cfg = BlockingConfig(max_block_size=10, hot_block_strategy="drop")
+    cfg = BlockingConfig(max_block_size=10)
     pairs = B.candidate_pairs(membership, cfg).collect()
     assert {(r["left_id"], r["right_id"]) for r in pairs} == {("x", "y")}
     _, hot = B.prune_hot_blocks(membership, cfg)
@@ -50,11 +63,11 @@ def test_drop_strategy_removes_hot_blocks(spark):
 
 def test_salt_determinism_across_parallelism(spark):
     rows = [(f"id{i:03d}", "hot") for i in range(120)]
-    cfg = BlockingConfig(max_block_size=30, hot_block_strategy="salt")
+    cfg = BlockingConfig(max_block_size=30)
     a = sorted(
-        B.candidate_pairs(spark.createDataFrame(rows, ["id", "block_key"]).repartition(1), cfg).collect()
+        _salted_pairs(spark.createDataFrame(rows, ["id", "block_key"]).repartition(1), cfg).collect()
     )
     b = sorted(
-        B.candidate_pairs(spark.createDataFrame(rows, ["id", "block_key"]).repartition(8), cfg).collect()
+        _salted_pairs(spark.createDataFrame(rows, ["id", "block_key"]).repartition(8), cfg).collect()
     )
     assert a == b

@@ -60,6 +60,20 @@ def test_cli_all_stages_and_resume(spark, fixture_dirs, capsys):
     assert out_text.count("[resume] skipping complete stage") >= 7
 
 
+def test_cli_frees_staged_matrices(spark, fixture_dirs, tmp_path, monkeypatch):
+    """The train and predict stages each free the vector matrix they staged
+    once their output is written: nothing is left under the staging root
+    while the process lives on."""
+    pages_path, lp_path, out = fixture_dirs
+    stage_root = os.path.join(str(tmp_path), "stage")
+    os.makedirs(stage_root)
+    monkeypatch.setenv("ERX_STAGE_ROOT", stage_root)
+    cli.run_keep(_args(pages=pages_path, labeled_pairs=lp_path, out=out))
+    assert M.stage_complete(spark, out, "predict")
+    left = [d for d in os.listdir(stage_root) if d.startswith("erx-vecmat-")]
+    assert left == []
+
+
 def test_cli_ingest_stage(spark, fixture_dirs):
     pages_path, lp_path, out = fixture_dirs
     cli.run_keep(_args(pages=pages_path, out=out, stage="ingest"))

@@ -228,6 +228,35 @@ def test_config_reads_resolve():
     assert not errors, "\n".join(errors)
 
 
+def test_every_config_field_is_read():
+    """Every settable config value has a reader: an attribute of that name
+    is read somewhere in the package outside config.py, in main.py or in
+    perfbench/.  A value nothing reads changes nothing when set."""
+    from entity_resolution_pipeline_spark.config import PipelineConfig
+
+    readers = [
+        f for f in FILES
+        if (f.startswith(PKG + os.sep) and f != os.path.join(PKG, "config.py"))
+        or f == "main.py"
+        or f.startswith("perfbench" + os.sep)
+    ]
+    read = set()
+    for f in readers:
+        with open(os.path.join(ROOT, f), encoding="utf-8") as fh:
+            tree = ast.parse(fh.read(), filename=f)
+        read |= {n.attr for n in ast.walk(tree) if isinstance(n, ast.Attribute)}
+    fields = dataclasses.fields(PipelineConfig)
+    sections = [f.default_factory for f in fields if dataclasses.is_dataclass(f.default_factory)]
+    assert len(sections) >= 5, sections  # the nested config sections were found
+    unread = [
+        f"{cls.__name__}.{f.name}"
+        for cls in [PipelineConfig, *sections]
+        for f in dataclasses.fields(cls)
+        if f.name not in read
+    ]
+    assert not unread, unread
+
+
 def test_scan_covers_the_callers():
     """Guard the scanner itself: it must see the CLI, the benchmark and the
     package's own lazy imports, and find a dangling reference when there is
