@@ -4,8 +4,7 @@ Mirrors the semantics of the reference's single ``config.yml``
 (/root/reference/config.yml) as a frozen dataclass tree so every stage is
 config-driven (reference pattern I8, SURVEY.md §2.10).  Defaults reproduce
 the reference's shipped configuration exactly where semantics depend on it
-(null tokens, thresholds, dampening factors, feature selection, LR
-hyper-parameters, clustering knobs).
+(null tokens, thresholds, LR hyper-parameters, clustering knobs).
 """
 
 from __future__ import annotations
@@ -71,68 +70,16 @@ class BlockingConfig:
 
 @dataclass(frozen=True)
 class FeatureConfig:
-    """Pairwise feature battery (reference src/batch_parallel_feature_engineering.py
-    426-665; toggles from config.yml:76-193)."""
+    """No settings: the pairwise battery is fixed (operators/features.py
+    FEATURES).  The section stays because perfbench still reads it."""
 
-    cosine_similarities: tuple[str, ...] = ("person", "title", "provision", "subjects", "composite")
-    string_similarity_field: str = "person"
-    string_similarity_metrics: tuple[str, ...] = ()   # config.yml:90 ships [""] → none
-    # Our extension (north_rule: "Jaro-Winkler + Levenshtein on normalized
-    # title/url fields"): string similarities over the YEAR-STRIPPED
-    # normalized person name (reference normalize_name,
-    # birth_death_regexes.py:197-225).  Raw-person levenshtein is noisy —
-    # "Haddad, Jan" vs "Haddad, Jan, 1797-1828" scores 0.5 while the truly
-    # different "Haddad, Jan" vs "Haddad, Eszter" scores 0.57; stripping the
-    # life dates first makes given-name differences the dominant signal.
-    normalized_name_sims: tuple[str, ...] = ("levenshtein", "jaro_winkler")
-    harmonic_means: tuple[tuple[str, str], ...] = (
-        ("person", "title"),
-        ("person", "provision"),
-        ("person", "subjects"),
-        ("title", "subjects"),
-        ("title", "provision"),
-        ("provision", "subjects"),
-    )
-    products: tuple[tuple[str, str], ...] = (("person", "provision"),)
-    ratios: tuple[tuple[str, str], ...] = ()
-    birth_death_enabled: bool = True
-    low_composite_penalty_enabled: bool = True
-    low_composite_penalty_threshold: float = 0.65
-    title_cosine_squared_enabled: bool = True
-    person_lev_bd_product_enabled: bool = True
-    person_lev_bd_dampening: float = 0.25
-    person_cos_bd_product_enabled: bool = True
-    person_cos_bd_dampening: float = 0.25
     broadcast_vectors = True  # not a field: one featurization path; perfbench still reads it
 
 
 @dataclass(frozen=True)
 class FeatureSelectionConfig:
-    """Include-mode whitelist (reference config.yml:163-193 +
-    feature_engineering.py:704-803)."""
-
-    enabled: bool = True
-    mode: str = "include"
-    base_features: tuple[str, ...] = (
-        "person_cosine",
-        "composite_cosine",
-        "person_norm_levenshtein",
-        "person_norm_jaro_winkler",
-    )
-    interaction_features: tuple[str, ...] = ("person_title_harmonic", "person_subjects_harmonic")
-    # Deviation from the reference default (config.yml:169): with semantic
-    # OpenAI embeddings, composite+person cosines carry most signal; with our
-    # hashed char-n-gram embeddings the entity-distinctive vocabulary signal
-    # lives in the per-field title/subjects cosines, so all cosines are
-    # selected by default.
-    include_all_cosine: bool = True
-    include_all_levenshtein: bool = False
-    include_all_harmonic: bool = False
-    include_all_product: bool = False
-    include_all_ratio: bool = False
-    include_all_birth_death: bool = True
-    keep_custom_features: bool = True          # keeps low_composite_penalty
-    custom_feature_patterns: tuple[str, ...] = ("low_composite_penalty",)
+    """No settings: the model trains on the whole fixed battery.  Returned by
+    PipelineConfig.feature_selection, which perfbench still reads."""
 
 
 @dataclass(frozen=True)
@@ -200,10 +147,14 @@ class PipelineConfig:
     embedding: EmbeddingConfig = field(default_factory=EmbeddingConfig)
     blocking: BlockingConfig = field(default_factory=BlockingConfig)
     features: FeatureConfig = field(default_factory=FeatureConfig)
-    feature_selection: FeatureSelectionConfig = field(default_factory=FeatureSelectionConfig)
     classifier: ClassifierConfig = field(default_factory=ClassifierConfig)
     clustering: ClusteringConfig = field(default_factory=ClusteringConfig)
     shuffle_partitions: int = 32               # sized per SF; cluster deploys override
+
+    @property
+    def feature_selection(self) -> FeatureSelectionConfig:
+        """Not a field: nothing to select; perfbench still reads it."""
+        return FeatureSelectionConfig()
 
     def replace(self, **kw: Any) -> "PipelineConfig":
         return dataclasses.replace(self, **kw)

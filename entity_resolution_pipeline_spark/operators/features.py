@@ -15,6 +15,11 @@ Arrow pass (`pair_features_hashed`, `pair_predictions_hashed`):
 * StandardScaler as agg + select expressions (feature_engineering.py:931-960;
   sklearn population std, zero-variance columns scale 1.0)
 
+The battery is fixed: `FEATURES`, the columns the model trains on.  The
+reference computed a wider configurable battery and then selected from it
+(config.yml:76-193, feature_engineering.py:704-803); the features its
+shipped selection never trained on are not computed (COVERAGE.md §2.7).
+
 The wide-row path (`record_repr` → `assemble_pairs` → `pair_features` over
 `compute_features_pdf`) is the direct per-pair re-expression, kept as the
 parity oracle the fused stage is tested against.
@@ -38,7 +43,30 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import DoubleType, StructField, StructType
 
-from ..config import EMBED_FIELDS, FeatureConfig, FeatureSelectionConfig
+from ..config import EMBED_FIELDS
+
+HARMONICS: tuple[tuple[str, str], ...] = (("person", "title"), ("person", "subjects"))
+LOW_COMPOSITE_THRESHOLD = 0.65
+BIRTH_DEATH: tuple[str, ...] = ("birth_death_left", "birth_death_right", "birth_death_match")
+# The battery, sorted (the reference sorts its final feature_names).
+# * Cosines over every embedded field.  Deviation from the reference's
+#   selection (config.yml:169): with semantic OpenAI embeddings composite and
+#   person cosines carried most signal; with hashed char-n-gram embeddings
+#   the entity-distinctive vocabulary lives in the per-field title/subjects
+#   cosines.
+# * String similarities on the YEAR-STRIPPED normalized person name
+#   (reference normalize_name, birth_death_regexes.py:197-225).  Raw-person
+#   levenshtein is noisy — "Haddad, Jan" vs "Haddad, Jan, 1797-1828" scores
+#   0.5 while the truly different "Haddad, Jan" vs "Haddad, Eszter" scores
+#   0.57; stripping the life dates makes given-name differences the signal.
+FEATURES: tuple[str, ...] = tuple(
+    sorted(
+        [f"{f}_cosine" for f in EMBED_FIELDS]
+        + ["low_composite_penalty", "person_norm_levenshtein", "person_norm_jaro_winkler"]
+        + [f"{a}_{b}_harmonic" for a, b in HARMONICS]
+        + list(BIRTH_DEATH)
+    )
+)
 
 
 def record_repr(melted: DataFrame, vectors: DataFrame) -> DataFrame:
@@ -75,31 +103,6 @@ def assemble_pairs(pairs: DataFrame, repr_df: DataFrame) -> DataFrame:
     return pairs.join(l, "left_id").join(r, "right_id")
 
 
-def feature_names(cfg: FeatureConfig = FeatureConfig()) -> list[str]:
-    """The full battery's column list under `cfg` (pre-selection)."""
-    names = [f"{f}_cosine" for f in cfg.cosine_similarities]
-    if cfg.title_cosine_squared_enabled and "title" in cfg.cosine_similarities:
-        names.append("title_cosine_squared")
-    if cfg.low_composite_penalty_enabled and "composite" in cfg.cosine_similarities:
-        names.append("low_composite_penalty")
-    for m in cfg.string_similarity_metrics:
-        if m in ("levenshtein", "jaro_winkler"):
-            names.append(f"{cfg.string_similarity_field}_{m}")
-    for m in cfg.normalized_name_sims:
-        if m in ("levenshtein", "jaro_winkler"):
-            names.append(f"{cfg.string_similarity_field}_norm_{m}")
-    names += [f"{a}_{b}_harmonic" for a, b in cfg.harmonic_means]
-    names += [f"{a}_{b}_product" for a, b in cfg.products]
-    names += [f"{a}_{b}_ratio" for a, b in cfg.ratios]
-    if cfg.birth_death_enabled:
-        names += ["birth_death_left", "birth_death_right", "birth_death_match"]
-        if cfg.person_lev_bd_product_enabled and f"{cfg.string_similarity_field}_levenshtein" in names:
-            names.append("person_levenshtein_birth_death_match_product")
-        if cfg.person_cos_bd_product_enabled and "person" in cfg.cosine_similarities:
-            names.append("person_cosine_birth_death_match_product")
-    return names
-
-
 def _stack_vectors(col: pd.Series, dim: int) -> tuple[np.ndarray, np.ndarray]:
     """Series of list/None → (matrix (n,dim) zero-filled, present mask)."""
     present = col.map(lambda v: v is not None and len(v) > 0).to_numpy()
@@ -110,10 +113,18 @@ def _stack_vectors(col: pd.Series, dim: int) -> tuple[np.ndarray, np.ndarray]:
     return mat, present
 
 
-def compute_features_pdf(pdf: pd.DataFrame, cfg: FeatureConfig) -> pd.DataFrame:
-    """The whole battery for one Arrow batch: numpy matrix ops, no per-pair
-    Python in the similarity math."""
-    from ..functions.birth_death import extract_birth_death_years
+def _harmonic(s1: np.ndarray, s2: np.ndarray) -> np.ndarray:
+    """Harmonic mean of two normalized cosines; 0.0 unless both are > 0
+    (a missing field's cosine is 0.0)."""
+    with np.errstate(divide="ignore", invalid="ignore"):
+        h = 2.0 * s1 * s2 / (s1 + s2)
+    return np.where((s1 > 0) & (s2 > 0) & np.isfinite(h), h, 0.0)
+
+
+def compute_features_pdf(pdf: pd.DataFrame) -> pd.DataFrame:
+    """The whole battery for one Arrow batch of wide pair rows: numpy matrix
+    ops, no per-pair Python in the similarity math."""
+    from ..functions.birth_death import extract_birth_death_years, normalize_name
     from ..functions.similarity import (
         batch_cosine,
         jaro_winkler_similarity,
@@ -122,11 +133,9 @@ def compute_features_pdf(pdf: pd.DataFrame, cfg: FeatureConfig) -> pd.DataFrame:
 
     n = len(pdf)
     out: dict[str, np.ndarray] = {}
-    norm: dict[str, np.ndarray] = {}
-    present: dict[str, np.ndarray] = {}
 
     # cosine block — one stacked matrix op per field
-    for f in cfg.cosine_similarities:
+    for f in EMBED_FIELDS:
         lv = pdf[f"l_{f}_vec"]
         rv = pdf[f"r_{f}_vec"]
         dim = next((len(v) for v in lv if v is not None and len(v)), 0) or next(
@@ -136,123 +145,55 @@ def compute_features_pdf(pdf: pd.DataFrame, cfg: FeatureConfig) -> pd.DataFrame:
         R, pr = _stack_vectors(rv, dim)
         both = pl & pr
         raw = np.where(both, batch_cosine(L, R), 0.0)
-        nrm = np.where(both, (raw + 1.0) / 2.0, 0.0)
-        out[f"{f}_cosine"] = nrm          # pre-scaler value = normalized cosine
-        norm[f"{f}_cosine"] = nrm
-        present[f] = both
-        if f == "title" and cfg.title_cosine_squared_enabled:
-            out["title_cosine_squared"] = np.where(both, nrm**2, 0.0)
-        if f == "composite" and cfg.low_composite_penalty_enabled:
+        out[f"{f}_cosine"] = np.where(both, (raw + 1.0) / 2.0, 0.0)
+        if f == "composite":
             out["low_composite_penalty"] = np.where(
-                both & (nrm < cfg.low_composite_penalty_threshold), 1.0, 0.0
+                both & (out["composite_cosine"] < LOW_COMPOSITE_THRESHOLD), 1.0, 0.0
             )
 
-    # string similarities (config-gated; per-row Python only when enabled)
-    sf = cfg.string_similarity_field
-    for m in cfg.string_similarity_metrics:
-        if m not in ("levenshtein", "jaro_winkler"):
-            continue
-        ls = pdf[f"l_{sf}_value"]
-        rs = pdf[f"r_{sf}_value"]
+    # normalized-name string sims (year-stripped; see FEATURES)
+    ln = pdf["l_person_value"].map(lambda v: normalize_name(v) if v else "")
+    rn = pdf["r_person_value"].map(lambda v: normalize_name(v) if v else "")
+    for m, fn in (("levenshtein", levenshtein_similarity), ("jaro_winkler", jaro_winkler_similarity)):
         vals = np.zeros(n)
-        fn = levenshtein_similarity if m == "levenshtein" else jaro_winkler_similarity
-        for i, (a, b) in enumerate(zip(ls, rs)):
+        for i, (a, b) in enumerate(zip(ln, rn)):
             if a and b:
                 vals[i] = fn(a, b)
-        out[f"{sf}_{m}"] = vals
+        out[f"person_norm_{m}"] = vals
 
-    # normalized-name string sims (year-stripped; see FeatureConfig docstring)
-    if cfg.normalized_name_sims:
-        from ..functions.birth_death import normalize_name
-
-        ln = pdf[f"l_{sf}_value"].map(lambda v: normalize_name(v) if v else "")
-        rn = pdf[f"r_{sf}_value"].map(lambda v: normalize_name(v) if v else "")
-        for m in cfg.normalized_name_sims:
-            if m not in ("levenshtein", "jaro_winkler"):
-                continue
-            vals = np.zeros(n)
-            fn = levenshtein_similarity if m == "levenshtein" else jaro_winkler_similarity
-            for i, (a, b) in enumerate(zip(ln, rn)):
-                if a and b:
-                    vals[i] = fn(a, b)
-            out[f"{sf}_norm_{m}"] = vals
-
-    # interactions over normalized cosines (harmonic / product / ratio)
-    def _sims(f1: str, f2: str):
-        s1 = norm.get(f"{f1}_cosine")
-        s2 = norm.get(f"{f2}_cosine")
-        if s1 is None or s2 is None:
-            return None, None, None
-        both = present[f1] & present[f2]
-        return s1, s2, both
-
-    for f1, f2 in cfg.harmonic_means:
-        s1, s2, both = _sims(f1, f2)
-        if s1 is None:
-            continue
-        with np.errstate(divide="ignore", invalid="ignore"):
-            h = 2.0 * s1 * s2 / (s1 + s2)
-        h = np.where((s1 > 0) & (s2 > 0) & np.isfinite(h), h, 0.0)
-        out[f"{f1}_{f2}_harmonic"] = np.where(both, h, 0.0)
-    for f1, f2 in cfg.products:
-        s1, s2, both = _sims(f1, f2)
-        if s1 is None:
-            continue
-        out[f"{f1}_{f2}_product"] = np.where(both, s1 * s2, 0.0)
-    for f1, f2 in cfg.ratios:
-        s1, s2, both = _sims(f1, f2)
-        if s1 is None:
-            continue
-        with np.errstate(divide="ignore", invalid="ignore"):
-            ratio = np.where(s2 > 0, 2.0 / (1.0 + np.exp(-s1 / np.where(s2 > 0, s2, 1.0))) - 1.0, 0.0)
-        out[f"{f1}_{f2}_ratio"] = np.where(both, ratio, 0.0)
+    for f1, f2 in HARMONICS:
+        out[f"{f1}_{f2}_harmonic"] = _harmonic(out[f"{f1}_cosine"], out[f"{f2}_cosine"])
 
     # birth/death block
-    if cfg.birth_death_enabled:
-        lb = np.full(n, np.nan)
-        ld = np.full(n, np.nan)
-        rb = np.full(n, np.nan)
-        rd = np.full(n, np.nan)
-        for i, (a, b) in enumerate(zip(pdf["l_person_value"], pdf["r_person_value"])):
-            if a:
-                y = extract_birth_death_years(a)
-                lb[i] = np.nan if y[0] is None else y[0]
-                ld[i] = np.nan if y[1] is None else y[1]
-            if b:
-                y = extract_birth_death_years(b)
-                rb[i] = np.nan if y[0] is None else y[0]
-                rd[i] = np.nan if y[1] is None else y[1]
-        out["birth_death_left"] = (~np.isnan(lb) | ~np.isnan(ld)).astype(np.float64)
-        out["birth_death_right"] = (~np.isnan(rb) | ~np.isnan(rd)).astype(np.float64)
-        birth_match = ~np.isnan(lb) & ~np.isnan(rb) & (lb == rb)
-        death_match = ~np.isnan(ld) & ~np.isnan(rd) & (ld == rd)
-        bd_match = (birth_match | death_match).astype(np.float64)
-        out["birth_death_match"] = bd_match
-        lev_name = f"{sf}_levenshtein"
-        if cfg.person_lev_bd_product_enabled and lev_name in out:
-            out["person_levenshtein_birth_death_match_product"] = np.where(
-                bd_match == 1.0, out[lev_name], out[lev_name] * cfg.person_lev_bd_dampening
-            )
-        if cfg.person_cos_bd_product_enabled and "person_cosine" in norm:
-            pc = norm["person_cosine"]
-            out["person_cosine_birth_death_match_product"] = np.where(
-                present["person"],
-                np.where(bd_match == 1.0, pc, pc * cfg.person_cos_bd_dampening),
-                0.0,
-            )
+    lb = np.full(n, np.nan)
+    ld = np.full(n, np.nan)
+    rb = np.full(n, np.nan)
+    rd = np.full(n, np.nan)
+    for i, (a, b) in enumerate(zip(pdf["l_person_value"], pdf["r_person_value"])):
+        if a:
+            y = extract_birth_death_years(a)
+            lb[i] = np.nan if y[0] is None else y[0]
+            ld[i] = np.nan if y[1] is None else y[1]
+        if b:
+            y = extract_birth_death_years(b)
+            rb[i] = np.nan if y[0] is None else y[0]
+            rd[i] = np.nan if y[1] is None else y[1]
+    out["birth_death_left"] = (~np.isnan(lb) | ~np.isnan(ld)).astype(np.float64)
+    out["birth_death_right"] = (~np.isnan(rb) | ~np.isnan(rd)).astype(np.float64)
+    birth_match = ~np.isnan(lb) & ~np.isnan(rb) & (lb == rb)
+    death_match = ~np.isnan(ld) & ~np.isnan(rd) & (ld == rd)
+    out["birth_death_match"] = (birth_match | death_match).astype(np.float64)
 
     res = pd.DataFrame({"left_id": pdf["left_id"], "right_id": pdf["right_id"]})
     if "match" in pdf.columns:
         res["match"] = pdf["match"]
-    for name in feature_names(cfg):
-        res[name] = out.get(name, np.zeros(n))
+    for name in FEATURES:
+        res[name] = out[name]
     return res
 
 
-def pair_features(
-    assembled: DataFrame, cfg: FeatureConfig = FeatureConfig()
-) -> DataFrame:
-    """Wide pair rows → (left_id, right_id[, match], <feature ×k>)."""
+def pair_features(assembled: DataFrame) -> DataFrame:
+    """Wide pair rows → (left_id, right_id[, match], <FEATURES>)."""
     has_match = "match" in assembled.columns
     fields = [
         StructField("left_id", assembled.schema["left_id"].dataType, False),
@@ -260,48 +201,22 @@ def pair_features(
     ]
     if has_match:
         fields.append(StructField("match", assembled.schema["match"].dataType, True))
-    fields += [StructField(nm, DoubleType(), True) for nm in feature_names(cfg)]
+    fields += [StructField(nm, DoubleType(), True) for nm in FEATURES]
     schema = StructType(fields)
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             if len(pdf):
-                yield compute_features_pdf(pdf, cfg)
+                yield compute_features_pdf(pdf)
 
     return assembled.mapInPandas(run, schema=schema)
 
 
-def selected_feature_names(
-    cfg: FeatureConfig = FeatureConfig(),
-    sel: FeatureSelectionConfig = FeatureSelectionConfig(),
-) -> list[str]:
-    """Reference include/exclude selection logic
-    (feature_engineering.py:704-803), evaluated over the battery's columns;
-    returns a sorted list (the reference sorts its final feature_names)."""
-    all_names = feature_names(cfg)
-    if not sel.enabled:
-        return sorted(all_names)
-    base = set(sel.base_features)
-    inter = set(sel.interaction_features)
-    if sel.include_all_cosine:
-        base |= {f for f in all_names if f.endswith("_cosine")}
-    if sel.include_all_levenshtein:
-        base |= {f for f in all_names if f.endswith("_levenshtein")}
-    if sel.include_all_harmonic:
-        inter |= {f for f in all_names if f.endswith("_harmonic")}
-    if sel.include_all_product:
-        inter |= {f for f in all_names if f.endswith("_product")}
-    if sel.include_all_ratio:
-        inter |= {f for f in all_names if f.endswith("_ratio")}
-    if sel.include_all_birth_death:
-        base |= {f for f in all_names if f.startswith("birth_death")}
-    if sel.keep_custom_features:
-        for pattern in sel.custom_feature_patterns:
-            base |= {f for f in all_names if pattern in f}
-    chosen = base | inter
-    if sel.mode == "include":
-        return sorted([f for f in all_names if f in chosen])
-    return sorted([f for f in all_names if f not in chosen])
+def selected_feature_names(cfg=None, sel=None) -> list[str]:
+    """The model's feature columns: the whole battery, sorted (the
+    reference sorts its final feature_names).  Both arguments are ignored;
+    perfbench still passes them."""
+    return list(FEATURES)
 
 
 _NULL_SENT = "NULL"
@@ -319,15 +234,14 @@ class _ShardedMatrix:
     """Worker-side view of the shard-staged vector matrix: lazy mmap per
     shard file, vectorized gather by (shard << 32 | row) codes.  Shards hold
     UNIT vectors (pre-normalized at write time, so cosine is one dot with no
-    per-pair norms); a `.norms.npy` sidecar carries the original norms."""
+    per-pair norms)."""
 
     def __init__(self, shard_paths: list[str], dim: int):
         self.paths = shard_paths
         self.dim = dim
         self._mats: list = [None] * len(shard_paths)
-        self._norms: list = [None] * len(shard_paths)
 
-    def _shard(self, s: int) -> tuple[np.ndarray, np.ndarray]:
+    def _shard(self, s: int) -> np.ndarray:
         m = self._mats[s]
         if m is None:
             try:
@@ -340,17 +254,12 @@ class _ShardedMatrix:
                     "and ALL executors."
                 ) from e
             self._mats[s] = m
-            self._norms[s] = np.load(
-                self.paths[s][: -len(".npy")] + ".norms.npy", mmap_mode="r"
-            )
-        return m, self._norms[s]
+        return m
 
-    def gather(self, codes: np.ndarray, ok: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
-        """codes: int64 (shard<<32|row), -1 for missing → (unit-vector matrix
-        (n,dim), norm vector (n,)); rows with ~ok stay zero."""
-        n = len(codes)
-        A = np.zeros((n, self.dim), dtype=np.float32)
-        nv = np.zeros(n, dtype=np.float32)
+    def gather(self, codes: np.ndarray, ok: np.ndarray) -> np.ndarray:
+        """codes: int64 (shard<<32|row), -1 for missing → unit-vector matrix
+        (n,dim); rows with ~ok stay zero."""
+        A = np.zeros((len(codes), self.dim), dtype=np.float32)
         if ok.any():
             act = codes[ok]
             rows_out = np.nonzero(ok)[0]
@@ -358,10 +267,8 @@ class _ShardedMatrix:
             rows = act & 0xFFFFFFFF
             for s in np.unique(shards):
                 m = shards == s
-                mat, norms = self._shard(int(s))
-                A[rows_out[m]] = mat[rows[m]]
-                nv[rows_out[m]] = norms[rows[m]]
-        return A, nv
+                A[rows_out[m]] = self._shard(int(s))[rows[m]]
+        return A
 
 
 _MMAP_CACHE: dict[str, "_ShardedMatrix"] = {}
@@ -432,20 +339,9 @@ def _register_stage_dir(path: str) -> None:
     _STAGE_DIRS.append(path)
 
 
-def _string_metrics(cfg: FeatureConfig) -> tuple[tuple[str, ...], tuple[str, ...]]:
-    """(raw, normalized-name) string-similarity metrics the battery computes."""
-    known = ("levenshtein", "jaro_winkler")
-    return (
-        tuple(m for m in cfg.string_similarity_metrics if m in known),
-        tuple(m for m in cfg.normalized_name_sims if m in known),
-    )
-
-
 def _fused_battery_udf(
     bc_vec,
-    cfg: FeatureConfig,
     out_schema: StructType,
-    passthrough: tuple[str, ...] = (),
     score_params: tuple | None = None,
 ):
     """ONE mapInPandas pass computing the entire battery over the narrow
@@ -455,9 +351,6 @@ def _fused_battery_udf(
     joins and no extra stages; string sims and year extraction stay
     deduplicated via worker-local memoization instead of a global
     distinct.  With `score_params` the same batch is also LR-scored."""
-    names = feature_names(cfg)
-    sf = cfg.string_similarity_field
-    raw_metrics, norm_metrics = _string_metrics(cfg)
     out_cols = [f.name for f in out_schema.fields]
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -501,138 +394,87 @@ def _fused_battery_udf(
                 return np.full(len(col), -1, dtype=np.int64)
             return np.where(codes >= 0, u_codes[np.clip(codes, 0, None)], -1)
 
+        def _years_arrays(col: pd.Series) -> tuple[np.ndarray, np.ndarray]:
+            """(birth, death) arrays; the year cascade runs once per DISTINCT
+            person string in the batch (memoized across batches)."""
+            codes, uniqs = pd.factorize(col)
+            b_u = np.full(len(uniqs) + 1, np.nan)
+            d_u = np.full(len(uniqs) + 1, np.nan)
+            for j, v in enumerate(uniqs):
+                y = _years(v)
+                b_u[j] = np.nan if y[0] is None else y[0]
+                d_u[j] = np.nan if y[1] is None else y[1]
+            # code -1 (null value → no person) maps to the trailing NaN
+            return b_u[codes], d_u[codes]
+
         for pdf in batches:
             n = len(pdf)
             if not n:
                 continue
             out: dict[str, np.ndarray] = {}
-            present: dict[str, np.ndarray] = {}
-            for f in cfg.cosine_similarities:
+            for f in EMBED_FIELDS:
                 li = _valid_idx(pdf[f"l_{f}_h"])
                 ri = _valid_idx(pdf[f"r_{f}_h"])
                 ok = (li >= 0) & (ri >= 0)
-                A, _ = mat.gather(li, ok)
-                B, _ = mat.gather(ri, ok)
+                A = mat.gather(li, ok)
+                B = mat.gather(ri, ok)
                 # shards hold unit vectors: cosine is one dot.  A PRESENT
                 # but zero-norm embedding stages as a zero row (dot 0 →
                 # ncos 0.5) — identical to the wide-row oracle, where
-                # batch_cosine yields raw 0.0 → (0+1)/2.  Masking such rows
-                # to 0.0 on norms (na>0 & nb>0) would silently diverge the
-                # two paths; only truly MISSING fields (ok False) are 0.0.
+                # batch_cosine yields raw 0.0 → (0+1)/2.  Only truly MISSING
+                # fields (ok False) are 0.0.
                 sims = np.einsum("ij,ij->i", A, B)
                 ncos = ((sims.astype(np.float64) + 1.0) / 2.0)
                 out[f"{f}_cosine"] = np.where(ok, ncos, 0.0)
-                present[f] = ok
-                if f == "title" and cfg.title_cosine_squared_enabled:
-                    out["title_cosine_squared"] = out["title_cosine"] ** 2
-                if f == "composite" and cfg.low_composite_penalty_enabled:
+                if f == "composite":
                     out["low_composite_penalty"] = np.where(
-                        ok & (out["composite_cosine"] < cfg.low_composite_penalty_threshold),
+                        ok & (out["composite_cosine"] < LOW_COMPOSITE_THRESHOLD),
                         1.0,
                         0.0,
                     )
 
             # levenshtein arrives precomputed (JVM codegen expression over
             # the carried string columns — see _fused_pairs)
-            for nm in passthrough:
-                out[nm] = pdf[nm].to_numpy(dtype=np.float64)
+            out["person_norm_levenshtein"] = pdf["person_norm_levenshtein"].to_numpy(
+                dtype=np.float64
+            )
             # jaro-winkler (no Spark builtin) runs here, straight off the
-            # carried string columns.  factorize → compute once per DISTINCT
-            # string pair in the batch (memoized across batches) → scatter
-            # by code: no per-row Python dict lookups in the hot loop.
-            def _jw_block(lcol: pd.Series, rcol: pd.Series, out_name: str) -> None:
-                combined = lcol.fillna("").str.cat(rcol.fillna(""), sep="\x01")
-                codes, uniqs = pd.factorize(combined)
-                vals_u = np.empty(len(uniqs))
-                for j, u in enumerate(uniqs):
-                    v = sims_c.get(u)
-                    if v is None:
-                        a, _, b = u.partition("\x01")
-                        v = jaro_winkler_similarity(a, b) if a and b else 0.0
-                        sims_c[u] = v
-                    vals_u[j] = v
-                out[out_name] = vals_u[codes]
+            # carried normalized names.  factorize → compute once per
+            # DISTINCT name pair in the batch (memoized across batches) →
+            # scatter by code: no per-row Python dict lookups in the hot loop.
+            combined = pdf["l_pn"].fillna("").str.cat(pdf["r_pn"].fillna(""), sep="\x01")
+            codes, uniqs = pd.factorize(combined)
+            jw_u = np.empty(len(uniqs))
+            for j, u in enumerate(uniqs):
+                v = sims_c.get(u)
+                if v is None:
+                    a, _, b = u.partition("\x01")
+                    v = jaro_winkler_similarity(a, b) if a and b else 0.0
+                    sims_c[u] = v
+                jw_u[j] = v
+            out["person_norm_jaro_winkler"] = jw_u[codes]
 
-            if "jaro_winkler" in raw_metrics:
-                _jw_block(pdf["l_pv"], pdf["r_pv"], f"{sf}_jaro_winkler")
-            if "jaro_winkler" in norm_metrics:
-                _jw_block(pdf["l_pn"], pdf["r_pn"], f"{sf}_norm_jaro_winkler")
-
-            def _sims2(f1: str, f2: str):
-                s1 = out.get(f"{f1}_cosine")
-                s2 = out.get(f"{f2}_cosine")
-                return s1, s2
-
-            for f1, f2 in cfg.harmonic_means:
-                s1, s2 = _sims2(f1, f2)
-                if s1 is None or s2 is None:
-                    continue
-                with np.errstate(divide="ignore", invalid="ignore"):
-                    h = 2.0 * s1 * s2 / (s1 + s2)
-                out[f"{f1}_{f2}_harmonic"] = np.where(
-                    (s1 > 0) & (s2 > 0) & np.isfinite(h), h, 0.0
+            for f1, f2 in HARMONICS:
+                out[f"{f1}_{f2}_harmonic"] = _harmonic(
+                    out[f"{f1}_cosine"], out[f"{f2}_cosine"]
                 )
-            for f1, f2 in cfg.products:
-                s1, s2 = _sims2(f1, f2)
-                if s1 is None or s2 is None:
-                    continue
-                out[f"{f1}_{f2}_product"] = s1 * s2
-            for f1, f2 in cfg.ratios:
-                s1, s2 = _sims2(f1, f2)
-                if s1 is None or s2 is None:
-                    continue
-                both = present[f1] & present[f2]
-                with np.errstate(divide="ignore", invalid="ignore"):
-                    ratio = 2.0 / (1.0 + np.exp(-s1 / np.where(s2 > 0, s2, 1.0))) - 1.0
-                out[f"{f1}_{f2}_ratio"] = np.where(both & (s2 > 0), ratio, 0.0)
 
-            if cfg.birth_death_enabled:
-                # factorize per side: the year cascade runs once per DISTINCT
-                # person string in the batch (memoized across batches)
-                def _years_arrays(col: pd.Series) -> tuple[np.ndarray, np.ndarray]:
-                    codes, uniqs = pd.factorize(col)
-                    b_u = np.full(len(uniqs) + 1, np.nan)
-                    d_u = np.full(len(uniqs) + 1, np.nan)
-                    for j, v in enumerate(uniqs):
-                        y = _years(v)
-                        b_u[j] = np.nan if y[0] is None else y[0]
-                        d_u[j] = np.nan if y[1] is None else y[1]
-                    # code -1 (null value → no person) maps to the trailing NaN
-                    return b_u[codes], d_u[codes]
-
-                lb, ld = _years_arrays(pdf["l_pv"])
-                rb, rd = _years_arrays(pdf["r_pv"])
-                out["birth_death_left"] = (~np.isnan(lb) | ~np.isnan(ld)).astype(np.float64)
-                out["birth_death_right"] = (~np.isnan(rb) | ~np.isnan(rd)).astype(np.float64)
-                bd_match = (
-                    (~np.isnan(lb) & ~np.isnan(rb) & (lb == rb))
-                    | (~np.isnan(ld) & ~np.isnan(rd) & (ld == rd))
-                ).astype(np.float64)
-                out["birth_death_match"] = bd_match
-                lev_name = f"{sf}_levenshtein"
-                if cfg.person_lev_bd_product_enabled and lev_name in out:
-                    out["person_levenshtein_birth_death_match_product"] = np.where(
-                        bd_match == 1.0,
-                        out[lev_name],
-                        out[lev_name] * cfg.person_lev_bd_dampening,
-                    )
-                if cfg.person_cos_bd_product_enabled and "person_cosine" in out:
-                    pc = out["person_cosine"]
-                    out["person_cosine_birth_death_match_product"] = np.where(
-                        present["person"],
-                        np.where(bd_match == 1.0, pc, pc * cfg.person_cos_bd_dampening),
-                        0.0,
-                    )
+            lb, ld = _years_arrays(pdf["l_pv"])
+            rb, rd = _years_arrays(pdf["r_pv"])
+            out["birth_death_left"] = (~np.isnan(lb) | ~np.isnan(ld)).astype(np.float64)
+            out["birth_death_right"] = (~np.isnan(rb) | ~np.isnan(rd)).astype(np.float64)
+            out["birth_death_match"] = (
+                (~np.isnan(lb) & ~np.isnan(rb) & (lb == rb))
+                | (~np.isnan(ld) & ~np.isnan(rd) & (ld == rd))
+            ).astype(np.float64)
 
             if score_params is not None:
                 # fused LR scoring: one matmul over the in-memory feature
                 # arrays — skips a full second Python stage (features →
                 # Arrow → score UDF → Arrow) and returns the narrow
-                # predictions schema instead of 20+ feature doubles/row
+                # predictions schema instead of the feature doubles/row
                 feat_cols, w_eff, b_eff, thr = score_params
-                X = np.column_stack(
-                    [out.get(c, np.zeros(n)) for c in feat_cols]
-                )
+                X = np.column_stack([out[c] for c in feat_cols])
                 z = np.clip(X @ w_eff + b_eff, -100, 100)
                 probs = 1.0 / (1.0 + np.exp(-z))
                 yield pd.DataFrame(
@@ -649,16 +491,15 @@ def _fused_battery_udf(
             data = {"left_id": pdf["left_id"], "right_id": pdf["right_id"]}
             if "match" in out_cols:
                 data["match"] = pdf["match"]
-            zeros = np.zeros(n)
-            for nm in names:
-                data[nm] = out.get(nm, zeros)
+            for nm in FEATURES:
+                data[nm] = out[nm]
             yield pd.DataFrame(data)[out_cols]
 
     return run
 
 
 def stage_vector_matrix(
-    vectors: DataFrame, cfg: FeatureConfig | None = None
+    vectors: DataFrame, cfg=None
 ) -> tuple[dict, list, int, str]:
     """DISTRIBUTED matrix staging: executors write float32 npy shards of
     the dedup'd vector table in parallel (one shard per Arrow batch); the
@@ -669,8 +510,7 @@ def stage_vector_matrix(
     The staging root is ERX_STAGE_ROOT, else /dev/shm, else the system
     tempdir.  Those defaults are host-local: on a multi-host cluster
     ERX_STAGE_ROOT must name a filesystem the driver and every executor
-    mount.  `cfg` is accepted for callers that pass the feature config;
-    no setting in it affects staging.
+    mount.  `cfg` is ignored; perfbench still passes it.
 
     Returns (index, shard_paths, dim, mat_dir).  Separate from the fused
     featurization so prepare() can run it in its background vector
@@ -700,14 +540,12 @@ def stage_vector_matrix(
             if not len(pdf):
                 continue
             arr = np.stack(pdf["embedding"].to_numpy()).astype(np.float32)
-            # pre-normalize: downstream cosine is then one dot product;
-            # original norms ride a sidecar
+            # pre-normalize: downstream cosine is then one dot product
             norms = np.linalg.norm(arr, axis=1)
             nz = norms > 0
             arr[nz] /= norms[nz, None]
             name = f"shard-{_uuid.uuid4().hex}.npy"
             np.save(os.path.join(mat_dir, name), arr)
-            np.save(os.path.join(mat_dir, name[: -len(".npy")] + ".norms.npy"), norms)
             yield pd.DataFrame(
                 {
                     "hash": pdf["hash"].to_numpy(),
@@ -742,7 +580,6 @@ def pair_features_hashed(
     rfh: DataFrame,
     unique_strings: DataFrame,
     vectors: DataFrame,
-    cfg: FeatureConfig = FeatureConfig(),
     staged=None,
 ) -> DataFrame:
     """The scale-path feature battery, one fused Python stage per Arrow
@@ -758,7 +595,7 @@ def pair_features_hashed(
     `staged`, a prebuilt stage_vector_matrix result (staged here when
     None).  Output schema identical to :func:`pair_features`.
     """
-    return _fused_pairs(pairs, rfh, unique_strings, vectors, cfg, None, staged)
+    return _fused_pairs(pairs, rfh, unique_strings, vectors, None, staged)
 
 
 def pair_predictions_hashed(
@@ -767,21 +604,22 @@ def pair_predictions_hashed(
     unique_strings: DataFrame,
     vectors: DataFrame,
     model,
-    cfg: FeatureConfig = FeatureConfig(),
+    cfg=None,
     staged=None,
 ) -> DataFrame:
     """Fused featurize+score for the predict path: the same Python stage
     as pair_features_hashed computes the battery AND the LR probability
-    per Arrow batch, emitting the narrow PREDICTIONS schema — the 20+-column
-    feature table never materializes.  Bit-identical to
-    classify.score(pair_features_hashed(...)) (pinned by test_features)."""
-    return _fused_pairs(pairs, rfh, unique_strings, vectors, cfg, model, staged)
+    per Arrow batch, emitting the narrow PREDICTIONS schema — the
+    13-column feature table never materializes.  Bit-identical to
+    classify.score(pair_features_hashed(...)) (pinned by test_features).
+    `cfg` is ignored; perfbench still passes it."""
+    return _fused_pairs(pairs, rfh, unique_strings, vectors, model, staged)
 
 
-def _fused_pairs(pairs, rfh, unique_strings, vectors, cfg, model, staged) -> DataFrame:
+def _fused_pairs(pairs, rfh, unique_strings, vectors, model, staged) -> DataFrame:
+    from ..functions.birth_death import normalize_name_udf
+
     valid = lambda c: c.isNotNull() & (c != _NULL_SENT)  # noqa: E731
-    sfld = cfg.string_similarity_field
-    raw_metrics, norm_metrics = _string_metrics(cfg)
 
     # String-similarity and birth/death inputs resolved ONCE per distinct
     # person hash and carried as pair-row COLUMNS: levenshtein then runs as
@@ -791,29 +629,27 @@ def _fused_pairs(pairs, rfh, unique_strings, vectors, cfg, model, staged) -> Dat
     # without any per-row dict lookup.  The normalize cascade runs once per
     # distinct hash, not once per pair.
     pstr = (
-        rfh.select(F.col(sfld).alias("hash"))
+        rfh.select(F.col("person").alias("hash"))
         .where(valid(F.col("hash")))
         .distinct()
         .join(unique_strings, "hash")
         .select("hash", F.col("value").alias("pv"))
+        .withColumn("pn", normalize_name_udf("pv"))
     )
-    sel_l = [F.col("hash").alias(f"l_{sfld}_h"), F.col("pv").alias("l_pv")]
-    sel_r = [F.col("hash").alias(f"r_{sfld}_h"), F.col("pv").alias("r_pv")]
-    if norm_metrics:
-        from ..functions.birth_death import normalize_name_udf
-
-        pstr = pstr.withColumn("pn", normalize_name_udf("pv"))
-        sel_l.append(F.col("pn").alias("l_pn"))
-        sel_r.append(F.col("pn").alias("r_pn"))
     pstr = F.broadcast(pstr)
+    side = lambda p: pstr.select(  # noqa: E731
+        F.col("hash").alias(f"{p}_person_h"),
+        F.col("pv").alias(f"{p}_pv"),
+        F.col("pn").alias(f"{p}_pn"),
+    )
     l = rfh.select(
         F.col("record_id").alias("left_id"),
         *[F.col(f).alias(f"l_{f}_h") for f in EMBED_FIELDS],
-    ).join(pstr.select(*sel_l), f"l_{sfld}_h", "left")
+    ).join(side("l"), "l_person_h", "left")
     r = rfh.select(
         F.col("record_id").alias("right_id"),
         *[F.col(f).alias(f"r_{f}_h") for f in EMBED_FIELDS],
-    ).join(pstr.select(*sel_r), f"r_{sfld}_h", "left")
+    ).join(side("r"), "r_person_h", "left")
     pw = pairs.join(l, "left_id").join(r, "right_id")
 
     if staged is None:
@@ -845,36 +681,23 @@ def _fused_pairs(pairs, rfh, unique_strings, vectors, cfg, model, staged) -> Dat
     else:
         if "match" in pairs.columns:
             fields.append(StructField("match", pw.schema["match"].dataType, True))
-        fields += [StructField(nm, DoubleType(), True) for nm in feature_names(cfg)]
+        fields += [StructField(nm, DoubleType(), True) for nm in FEATURES]
     out_schema = StructType(fields)
 
-    # levenshtein similarities as whole-stage-codegen JVM expressions
-    # over the carried string columns; the fused UDF passes them through
-    def lev_expr(a, b):
-        mx = F.greatest(F.length(a), F.length(b))
-        return (
-            F.when(
-                (F.length(a) > 0) & (F.length(b) > 0),
-                1.0 - F.levenshtein(a, b) / mx,
-            )
-            .otherwise(0.0)
-            .cast("double")
+    # normalized-name levenshtein similarity as a whole-stage-codegen JVM
+    # expression over the carried string columns; the fused UDF reads it
+    a, b = F.col("l_pn"), F.col("r_pn")
+    pw = pw.withColumn(
+        "person_norm_levenshtein",
+        F.when(
+            (F.length(a) > 0) & (F.length(b) > 0),
+            1.0 - F.levenshtein(a, b) / F.greatest(F.length(a), F.length(b)),
         )
-
-    jvm_sims = []
-    if "levenshtein" in raw_metrics:
-        pw = pw.withColumn(f"{sfld}_levenshtein", lev_expr(F.col("l_pv"), F.col("r_pv")))
-        jvm_sims.append(f"{sfld}_levenshtein")
-    if "levenshtein" in norm_metrics:
-        pw = pw.withColumn(
-            f"{sfld}_norm_levenshtein", lev_expr(F.col("l_pn"), F.col("r_pn"))
-        )
-        jvm_sims.append(f"{sfld}_norm_levenshtein")
-
-    fused = _fused_battery_udf(
-        bc, cfg, out_schema,
-        passthrough=tuple(jvm_sims), score_params=score_params,
+        .otherwise(0.0)
+        .cast("double"),
     )
+
+    fused = _fused_battery_udf(bc, out_schema, score_params=score_params)
     # explicit repartition: the Python stage must run at half-width
     # regardless of AQE's byte-based coalescing (UDF cost/row ≫ bytes/row)
     return pw.repartition(_parallelism(pairs)).mapInPandas(fused, schema=out_schema)

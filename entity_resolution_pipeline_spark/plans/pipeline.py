@@ -157,11 +157,13 @@ def prepare(pages: DataFrame, cfg: PipelineConfig = DEFAULT_CONFIG) -> PipelineR
 def featurize_pairs(
     pairs: DataFrame, prep: PipelineResult, cfg: PipelineConfig = DEFAULT_CONFIG
 ) -> DataFrame:
+    """Pairs → the fixed battery (features.FEATURES), persisted.  The
+    battery has no settings, so `cfg` is unused; perfbench still passes it."""
     from pyspark import StorageLevel
 
     feats = FE.pair_features_hashed(
         pairs, prep.record_field_hashes, prep.unique_strings, prep.embeddings,
-        cfg.features, staged=prep.staged,
+        staged=prep.staged,
     )
     # consumers run several actions (scaler agg, collect, scoring); in the
     # stage-table pipeline this is the stage's parquet write
@@ -172,10 +174,11 @@ def score_pairs(
     pairs: DataFrame, prep: PipelineResult, model: Any, cfg: PipelineConfig = DEFAULT_CONFIG
 ) -> DataFrame:
     """Predict-path scoring: fused featurize+score, one Python stage, narrow
-    PREDICTIONS out (see features.pair_predictions_hashed)."""
+    PREDICTIONS out (see features.pair_predictions_hashed).  `cfg` is
+    unused; the CLI, ingest and perfbench pass it."""
     return FE.pair_predictions_hashed(
         pairs, prep.record_field_hashes, prep.unique_strings, prep.embeddings,
-        model, cfg.features, staged=prep.staged,
+        model, staged=prep.staged,
     )
 
 
@@ -183,13 +186,12 @@ def train(
     labeled_pairs: DataFrame, prep: PipelineResult, cfg: PipelineConfig = DEFAULT_CONFIG
 ) -> tuple[Any, dict]:
     """Labeled (left, right, match) pairs → (model, metrics): featurize the
-    pairs over `prep`, fit on the selected features."""
+    pairs over `prep`, fit on the whole battery."""
     pairs = labeled_pairs.select(
         F.col("left").alias("left_id"), F.col("right").alias("right_id"), "match"
     )
-    features_df = featurize_pairs(pairs, prep, cfg)
-    feature_cols = FE.selected_feature_names(cfg.features, cfg.feature_selection)
-    model, metrics = C.fit(features_df, feature_cols, cfg.classifier)
+    features_df = featurize_pairs(pairs, prep)
+    model, metrics = C.fit(features_df, list(FE.FEATURES), cfg.classifier)
     features_df.unpersist()
     return model, metrics
 
@@ -222,7 +224,7 @@ def run_dedup(
 
     membership = B.block_membership(prep.records, cfg.blocking)
     candidates = B.candidate_pairs(membership, cfg.blocking)
-    predictions = score_pairs(candidates, prep, model, cfg)
+    predictions = score_pairs(candidates, prep, model)
     clusters = G.cluster_predictions(
         predictions, prep.records.select("record_id"), cfg.clustering
     )

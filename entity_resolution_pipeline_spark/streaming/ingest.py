@@ -15,12 +15,13 @@ Design (Spark-first; no analog in the strictly-batch reference):
   (`foreachBatch`), extract → drop re-crawled record_ids → blocking keys →
   NEW candidate pairs (new×all block join).  Each batch's outputs land in
   `batch_id`-keyed partition dirs (idempotent overwrite ⇒ exactly-once under
-  replay), with one manifest lineage row per batch.  Scoring + clustering
-  stay batch jobs over the accumulated candidate backlog: pair scoring is
-  embarrassingly parallel (run it on any cadence), while transitive
-  clustering is a global fixpoint that cannot be windowed without breaking
-  cluster identity — the same split the reference's train-once/predict-many
-  design implies (src/pipeline.py:334-388).
+  replay), with one manifest lineage row per batch.  Given a trained model,
+  each micro-batch also scores its new candidate pairs (the fused battery +
+  LR stage, under the model's frozen IDF weights).  Clustering stays a batch
+  job over the accumulated predictions: transitive clustering is a global
+  fixpoint that cannot be windowed without breaking cluster identity — the
+  same split the reference's train-once/predict-many design implies
+  (src/pipeline.py:334-388).
 
 Pair-emission invariant: a candidate pair is emitted exactly once, in the
 arrival batch of its LATER record — (old,new) pairs come from the new×all
@@ -43,7 +44,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..config import DEFAULT_CONFIG, PipelineConfig
-from ..operators.blocking import block_membership
+from ..operators.blocking import block_membership, prune_hot_blocks
 from ..operators.extract import extract_records
 from ..schemas import PAGES
 from ..sources import manifest as MF
@@ -136,13 +137,12 @@ def _batch_processor(
         )
         membership_all = read_accumulated(spark, out_dir, "membership")
 
-        # hot-block cap on ACCUMULATED size (drop-and-count semantics)
-        sizes = membership_all.groupBy("block_key").agg(F.count("*").alias("size"))
-        hot = sizes.where(F.col("size") > cfg.blocking.max_block_size).persist()
+        # hot-block cap on ACCUMULATED size, batch blocking's rule
+        # (drop-and-count); `hot` is persisted for its count and both
+        # anti-joins
+        kept_all, hot = prune_hot_blocks(membership_all, cfg.blocking)
+        hot = hot.persist()
         n_hot = hot.count()
-        kept_all = membership_all.join(
-            F.broadcast(hot.select("block_key")), "block_key", "left_anti"
-        )
         kept_new = membership_new.join(
             F.broadcast(hot.select("block_key")), "block_key", "left_anti"
         )

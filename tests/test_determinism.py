@@ -66,7 +66,7 @@ def test_candidates_and_features_identical(spark, both):
             .select("hash", "embedding")
             .dropDuplicates(["hash"])
         )
-        feats = FE.pair_features_hashed(pairs, rfh, uniq, vectors, DEFAULT_CONFIG.features)
+        feats = FE.pair_features_hashed(pairs, rfh, uniq, vectors)
         out.append(
             (
                 sorted(map(tuple, cands.collect())),

@@ -44,12 +44,11 @@ def prep(spark):
 
 def test_hashed_equals_wide_row_battery(prep):
     melted, uniq, rfh, vectors, pairs = prep
-    cfg = DEFAULT_CONFIG.features
     old = FE.pair_features(
-        FE.assemble_pairs(pairs, FE.record_repr(melted, vectors)), cfg
+        FE.assemble_pairs(pairs, FE.record_repr(melted, vectors))
     ).toPandas().set_index(["left_id", "right_id"]).sort_index()
     new = (
-        FE.pair_features_hashed(pairs, rfh, uniq, vectors, cfg)
+        FE.pair_features_hashed(pairs, rfh, uniq, vectors)
         .toPandas()
         .set_index(["left_id", "right_id"])
         .sort_index()
@@ -72,7 +71,7 @@ def test_fused_scoring_matches_unfused(prep):
 
     melted, uniq, rfh, vectors, pairs = prep
     cfg = DEFAULT_CONFIG
-    feats = FE.pair_features_hashed(pairs, rfh, uniq, vectors, cfg.features)
+    feats = FE.pair_features_hashed(pairs, rfh, uniq, vectors)
     cols = FE.selected_feature_names(cfg.features, cfg.feature_selection)
     model, _ = C.fit(feats, cols, cfg.classifier)
 
@@ -98,28 +97,35 @@ def test_fused_scoring_matches_unfused(prep):
 
 
 def test_feature_config_has_no_path_switches():
-    """One featurization path: the old path switch is a read-only constant
-    and neither it nor a staging root can be set."""
+    """One featurization path and one fixed battery: the old path switch is
+    a read-only constant, neither it nor a staging root can be set, and
+    neither feature section has a settable value."""
     import dataclasses
+
+    from entity_resolution_pipeline_spark.config import (
+        FeatureConfig,
+        FeatureSelectionConfig,
+    )
 
     cfg = DEFAULT_CONFIG.features
     assert cfg.broadcast_vectors is True
     for name in ("broadcast_vectors", "stage_root"):
         with pytest.raises(TypeError):
             dataclasses.replace(cfg, **{name: None})
+    assert dataclasses.fields(FeatureConfig) == ()
+    assert dataclasses.fields(FeatureSelectionConfig) == ()
 
 
-def test_feature_names_and_selection():
-    cfg = DEFAULT_CONFIG.features
-    names = FE.feature_names(cfg)
-    assert "person_cosine" in names and "composite_cosine" in names
-    assert "title_cosine_squared" in names and "low_composite_penalty" in names
-    assert "person_norm_levenshtein" in names and "person_norm_jaro_winkler" in names
-    assert "birth_death_match" in names
-    sel = FE.selected_feature_names(cfg, DEFAULT_CONFIG.feature_selection)
-    assert set(sel) <= set(names)
-    assert "person_title_harmonic" in sel and "low_composite_penalty" in sel
-    assert sel == sorted(sel)
+def test_feature_names_and_selection(prep):
+    """The battery is the 13 sorted columns the model trains on, and the
+    featurized table carries exactly those after the pair key and label."""
+    assert list(FE.FEATURES) == sorted(FE.FEATURES) and len(FE.FEATURES) == 13
+    assert FE.selected_feature_names(
+        DEFAULT_CONFIG.features, DEFAULT_CONFIG.feature_selection
+    ) == list(FE.FEATURES)
+    _, uniq, rfh, vectors, pairs = prep
+    feats = FE.pair_features_hashed(pairs, rfh, uniq, vectors)
+    assert feats.columns == ["left_id", "right_id", "match", *FE.FEATURES]
 
 
 def test_scaler_roundtrip(spark):

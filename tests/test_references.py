@@ -15,6 +15,7 @@ from __future__ import annotations
 import ast
 import dataclasses
 import importlib
+import inspect
 import os
 import types
 
@@ -106,6 +107,8 @@ class _Checker:
         self.relpath = relpath
         self.errors: list[str] = []
         self.n_attrs = 0
+        # (call node, callee) for every `ALIAS.fn(...)` on a package module
+        self.calls: list[tuple[ast.Call, object]] = []
 
     def err(self, node: ast.AST, msg: str) -> None:
         self.errors.append(f"{self.relpath}:{node.lineno}: {msg}")
@@ -159,6 +162,8 @@ class _Checker:
         for n in own:
             if isinstance(n, ast.Attribute) and isinstance(n.value, ast.Name):
                 self.attribute(n, s)
+            if isinstance(n, ast.Call) and isinstance(n.func, ast.Attribute):
+                self.call(n, s)
             if isinstance(n, _SCOPES):
                 self.scope(n, s)
 
@@ -173,6 +178,13 @@ class _Checker:
             importlib.import_module(f"{mod.__name__}.{node.attr}")
         except ImportError:
             self.err(node, f"`{node.value.id}.{node.attr}`: {mod.__name__} has no `{node.attr}`")
+
+
+    def call(self, node: ast.Call, s: _Scope) -> None:
+        f = node.func
+        mod = s.resolve(f.value.id) if isinstance(f.value, ast.Name) else None
+        if mod is not None and hasattr(mod, f.attr):
+            self.calls.append((node, getattr(mod, f.attr)))
 
 
 def _check(relpath: str) -> _Checker:
@@ -255,6 +267,31 @@ def test_every_config_field_is_read():
         if f.name not in read
     ]
     assert not unread, unread
+
+
+def test_perfbench_calls_bind():
+    """Every `<package module alias>.<fn>(...)` call in the frozen
+    benchmark binds to fn's current signature: the same number of
+    positional arguments and only keyword names fn accepts.  A signature
+    change that breaks the benchmark fails here, which the attribute check
+    cannot see."""
+    c = _check(os.path.join("perfbench", "run.py"))
+    assert len(c.calls) > 20, len(c.calls)
+    errors = []
+    for call, fn in c.calls:
+        where = f"perfbench/run.py:{call.lineno}: {ast.unparse(call.func)}"
+        if any(isinstance(a, ast.Starred) for a in call.args) or any(
+            k.arg is None for k in call.keywords
+        ):
+            errors.append(f"{where}: *args/**kwargs call cannot be checked")
+            continue
+        try:
+            inspect.signature(fn).bind(
+                *[None] * len(call.args), **{k.arg: None for k in call.keywords}
+            )
+        except TypeError as e:
+            errors.append(f"{where}: {e}")
+    assert not errors, "\n".join(errors)
 
 
 def test_scan_covers_the_callers():

@@ -101,6 +101,59 @@ def test_incremental_matches_batch_and_resumes(spark, tmp_path):
     assert sp == bp
 
 
+def test_incremental_hot_block_cap(spark, tmp_path):
+    """Under a cap small enough to make blocks hot, ingest drops and counts
+    them by batch blocking's rule: the last micro-batch reports every
+    over-cap key of the accumulated membership, and every batch candidate
+    pair was emitted incrementally (block sizes only grow, so a block under
+    the cap at the end was under it at every emission)."""
+    import dataclasses
+
+    from entity_resolution_pipeline_spark.sources.manifest import read_manifest
+
+    tmp = str(tmp_path)
+    out = os.path.join(tmp, "out")
+    # synthetic entities have 5 records each: most blocks hold 5 members,
+    # and name collisions make a few larger ones
+    cfg = DEFAULT_CONFIG.replace(
+        blocking=dataclasses.replace(DEFAULT_CONFIG.blocking, max_block_size=5)
+    )
+    in_path = _write_pages(spark, tmp, "b0", 0, 120)
+    _write_pages(spark, tmp, "b1", 120, 200)
+    run_incremental(spark, in_path, out, cfg, max_files_per_trigger=1)
+
+    n_hot = (
+        read_accumulated(spark, out, "membership")
+        .groupBy("block_key")
+        .count()
+        .where(F.col("count") > cfg.blocking.max_block_size)
+        .count()
+    )
+    assert n_hot > 0
+    batches = {
+        int(r["stage"].rsplit("_", 1)[1]): r["metrics"]
+        for r in read_manifest(spark, out).collect()
+        if r["stage"].startswith("stream_ingest_batch_")
+    }
+    assert len(batches) == 2
+    assert batches[max(batches)]["hot_blocks_capped"] == n_hot
+
+    pages_all = spark.createDataFrame(
+        synth.pages_pdf(200)[["url", "warc_ts", "html", "text", "lang"]], PAGES
+    )
+    bp = {
+        (r["left_id"], r["right_id"])
+        for r in candidate_pairs(
+            block_membership(extract_records(pages_all), cfg.blocking), cfg.blocking
+        ).collect()
+    }
+    sp = {
+        (r["left_id"], r["right_id"])
+        for r in read_accumulated(spark, out, "candidates").collect()
+    }
+    assert bp and bp <= sp
+
+
 def test_recrawled_urls_are_dropped(spark, tmp_path):
     """A record_id seen in an earlier batch is not re-ingested (streaming
     exact-dedup against history)."""
