@@ -116,7 +116,6 @@ class ClusteringConfig:
     large-star/small-star connected components."""
 
     min_edge_weight: float = 0.5
-    min_cluster_size: int = 1
     max_iterations: int = 50                   # safety bound for CC iterations
     # Once the (shrinking) edge set fits one task's memory budget, finish CC
     # with a single-task vectorized min-label kernel instead of paying full

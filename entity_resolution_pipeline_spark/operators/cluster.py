@@ -214,7 +214,6 @@ def cluster_predictions(
     sizes = assignments.groupBy("root").agg(F.count("*").alias("cluster_size"))
     out = (
         assignments.join(sizes, "root")
-        .where(F.col("cluster_size") >= cfg.min_cluster_size)
         .select(
             "entity_id",
             F.xxhash64("root").alias("cluster_id"),

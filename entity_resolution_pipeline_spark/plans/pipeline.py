@@ -3,9 +3,9 @@
 The reference's `Pipeline` class runs 8 sequential stages with pickle
 checkpoints (src/pipeline.py:66-120).  Here each stage is a pure
 DataFrame→DataFrame function (operators/*), and plans are thin compositions.
-`train` and `score_pairs` are the one train/score composition: these plans,
-the CLI (main.py) and incremental ingest all call them over a
-`PipelineResult`.
+`prepare_records`, `train` and `score_pairs` are the one stage composition:
+these plans, incremental ingest and (over its stage tables) the CLI
+(main.py) all train and score over a `PipelineResult`.
 
 Two mainline plans:
 
@@ -36,19 +36,19 @@ class PipelineResult:
     """Stage handles of the shared pipeline prefix.
 
     `embeddings` is the (hash, embedding) vector table, one row per distinct
-    string.  It and `idf_weights` may be built ASYNCHRONOUSLY (prepare()
-    hands them off to a background thread so the IDF agg and the embed-UDF
-    materialization overlap the blocking phase, which never reads vectors);
-    the properties block until the build completes, so consumers see
-    exactly the values the synchronous construction produced.
+    string.  It and `idf_weights` may be built ASYNCHRONOUSLY
+    (prepare_records() hands them off to a background thread so the IDF agg
+    and the embed-UDF materialization overlap the blocking phase, which
+    never reads vectors); the properties block until the build completes,
+    so consumers see exactly the values the synchronous construction
+    produced.
     `idf_weights` are the frozen featurization params the embeddings were
-    computed under (None when cfg.embedding.use_idf is off); incremental /
-    streaming scoring re-embeds NEW strings under these same weights.
+    computed under (None when cfg.embedding.use_idf is off); incremental
+    ingest re-embeds the strings it scores under these same weights.
 
-    Callers that already hold the tables (the CLI, ingest) pass
-    `embeddings` directly; `staged` then stages it on first access, and the
-    caller frees it with `features.release_stage_dir(result.staged[3])`
-    once everything scored against it is written."""
+    Only the CLI, which already holds the stage tables, passes `embeddings`
+    in; `staged` then stages it on first access.  Every owner calls
+    `release()` once everything scored against the result is written."""
 
     def __init__(
         self,
@@ -57,23 +57,18 @@ class PipelineResult:
         unique_strings: DataFrame,
         record_field_hashes: DataFrame,
         embeddings: DataFrame | None = None,
-        model: Any = None,
-        metrics: dict | None = None,
-        predictions: DataFrame | None = None,
-        clusters: DataFrame | None = None,
-        idf_weights: list | None = None,
         emb_future: Any = None,
     ) -> None:
         self.records = records
         self.melted = melted
         self.unique_strings = unique_strings
         self.record_field_hashes = record_field_hashes
-        self.model = model
-        self.metrics = metrics if metrics is not None else {}
-        self.predictions = predictions
-        self.clusters = clusters
+        self.model: Any = None
+        self.metrics: dict = {}
+        self.predictions: DataFrame | None = None
+        self.clusters: DataFrame | None = None
         self._embeddings = embeddings
-        self._idf_weights = idf_weights
+        self._idf_weights = None
         self._staged = None
         self._emb_future = emb_future
 
@@ -95,24 +90,50 @@ class PipelineResult:
 
     @property
     def staged(self):
-        """Staged vector matrix (features.stage_vector_matrix result): built
-        by prepare()'s background thread, else staged here on first access."""
+        """Staged vector matrix (features.stage_vector_matrix result):
+        built by prepare_records()' background thread, else staged here on
+        first access."""
         self._resolve_emb()
         if self._staged is None:
             self._staged = FE.stage_vector_matrix(self._embeddings)
         return self._staged
 
+    def release(self) -> None:
+        """Wait for the vector build, then free its staged matrix and the
+        prefix tables' caches.  Call once everything scored against this
+        result is written."""
+        try:
+            self._resolve_emb()
+        finally:
+            if self._staged is not None:
+                FE.release_stage_dir(self._staged[3])
+            for df in (self.records, self.melted, self.unique_strings,
+                       self.record_field_hashes, self._embeddings):
+                if df is not None:
+                    df.unpersist()
+
 
 def prepare(pages: DataFrame, cfg: PipelineConfig = DEFAULT_CONFIG) -> PipelineResult:
-    """pages → records → melted/unique_strings/record_field_hashes →
-    embeddings (the shared prefix of both mainline plans).
+    """pages → records → the shared prefix (see prepare_records)."""
+    return prepare_records(X.extract_records(pages), cfg)
+
+
+def prepare_records(
+    records: DataFrame,
+    cfg: PipelineConfig = DEFAULT_CONFIG,
+    idf_weights: list | None = None,
+) -> PipelineResult:
+    """records → melted/unique_strings/record_field_hashes → embeddings
+    (the shared prefix of both mainline plans and of incremental ingest).
 
     The per-record representation is the narrow hash-wide table; vectors
     stay keyed by unique hash in the staged matrix that featurization
-    (pair_features_hashed) gathers from."""
+    (pair_features_hashed) gathers from.  Given `idf_weights` (a model's
+    frozen train-time weights), the vectors are embedded under them instead
+    of under `corpus_idf_weights` of these records."""
     from pyspark import StorageLevel
 
-    records = X.extract_records(pages).persist(StorageLevel.MEMORY_AND_DISK)
+    records = records.persist(StorageLevel.MEMORY_AND_DISK)
     melted = P.melt_fields(records).persist(StorageLevel.MEMORY_AND_DISK)
     uniq = P.unique_strings(melted).persist(StorageLevel.MEMORY_AND_DISK)
     rfh = P.record_field_hashes(melted).persist(StorageLevel.MEMORY_AND_DISK)
@@ -128,11 +149,9 @@ def prepare(pages: DataFrame, cfg: PipelineConfig = DEFAULT_CONFIG) -> PipelineR
     from concurrent.futures import ThreadPoolExecutor
 
     def _build_emb():
-        weights = (
-            E.corpus_idf_weights(melted, cfg.embedding)
-            if cfg.embedding.use_idf
-            else None
-        )
+        weights = idf_weights
+        if weights is None and cfg.embedding.use_idf:
+            weights = E.corpus_idf_weights(melted, cfg.embedding)
         emb = E.embed_unique_strings(melted, cfg.embedding, weights=weights).persist(
             StorageLevel.MEMORY_AND_DISK
         )
@@ -145,13 +164,7 @@ def prepare(pages: DataFrame, cfg: PipelineConfig = DEFAULT_CONFIG) -> PipelineR
     pool = ThreadPoolExecutor(max_workers=1)
     fut = pool.submit(_build_emb)
     pool.shutdown(wait=False)
-    return PipelineResult(
-        records=records,
-        melted=melted,
-        unique_strings=uniq,
-        record_field_hashes=rfh,
-        emb_future=fut,
-    )
+    return PipelineResult(records, melted, uniq, rfh, emb_future=fut)
 
 
 def featurize_pairs(

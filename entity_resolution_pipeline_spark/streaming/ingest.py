@@ -16,11 +16,13 @@ Design (Spark-first; no analog in the strictly-batch reference):
   NEW candidate pairs (new×all block join).  Each batch's outputs land in
   `batch_id`-keyed partition dirs (idempotent overwrite ⇒ exactly-once under
   replay), with one manifest lineage row per batch.  Given a trained model,
-  each micro-batch also scores its new candidate pairs (the fused battery +
-  LR stage, under the model's frozen IDF weights).  Clustering stays a batch
-  job over the accumulated predictions: transitive clustering is a global
-  fixpoint that cannot be windowed without breaking cluster identity — the
-  same split the reference's train-once/predict-many design implies
+  each micro-batch also scores its new candidate pairs through the batch
+  prefix (`plans.pipeline.prepare_records` over just the records those
+  pairs name, under the model's frozen IDF weights) and the fused battery
+  + LR stage.  Clustering stays a batch job over the accumulated
+  predictions: transitive clustering is a global fixpoint that cannot be
+  windowed without breaking cluster identity — the same split the
+  reference's train-once/predict-many design implies
   (src/pipeline.py:334-388).
 
 Pair-emission invariant: a candidate pair is emitted exactly once, in the
@@ -100,19 +102,17 @@ def _batch_processor(
     replayed batch (crash between sink write and checkpoint commit)
     reproduces byte-identical outputs instead of duplicating them.
 
-    With `model`, each batch additionally maintains the accumulated
-    featurization tables (record_field_hashes / unique_strings / embeddings
-    — new rows only; embeddings computed under the FROZEN train-time
-    `idf_weights`, PipelineResult.idf_weights) and scores the batch's new
-    candidate pairs with the fused battery+LR stage — incremental ER minus
-    the global clustering fixpoint, which stays a batch job over the
-    accumulated predictions."""
+    With `model`, each batch also scores its new candidate pairs: it runs
+    the batch prefix (plans.pipeline.prepare_records) over only the
+    accumulated records those pairs name, embedding under the FROZEN
+    train-time `idf_weights` (PipelineResult.idf_weights), then the fused
+    battery+LR stage, and frees that prefix once the predictions are
+    written.  No featurization table is kept across batches.  This is
+    incremental ER minus the global clustering fixpoint, which stays a
+    batch job over the accumulated predictions."""
     rec_root = os.path.join(out_dir, "records")
     mem_root = os.path.join(out_dir, "membership")
     cand_root = os.path.join(out_dir, "candidates")
-    rfh_root = os.path.join(out_dir, "record_field_hashes")
-    us_root = os.path.join(out_dir, "unique_strings")
-    emb_root = os.path.join(out_dir, "embeddings")
     pred_root = os.path.join(out_dir, "predictions")
 
     def process(pages_batch: DataFrame, batch_id: int) -> None:
@@ -168,39 +168,16 @@ def _batch_processor(
             "hot_blocks_capped": float(n_hot),
         }
         if model is not None:
-            from ..operators import embedding as E
-            from ..operators import features as FE
-            from ..operators import preprocess as P
             from ..plans import pipeline as PL
 
-            melted = P.melt_fields(records)
-            P.record_field_hashes(melted).write.mode("overwrite").parquet(
-                os.path.join(rfh_root, f"ingest_batch={batch_id}")
-            )
-            P.unique_strings(melted).write.mode("overwrite").parquet(
-                os.path.join(us_root, f"ingest_batch={batch_id}")
-            )
-            E.embed_unique_strings(melted, cfg.embedding, weights=idf_weights).write.mode(
-                "overwrite"
-            ).parquet(os.path.join(emb_root, f"ingest_batch={batch_id}"))
-            # accumulated featurization tables (old pairs' sides may be old
-            # records); two micro-batches can embed the same new string, so
-            # cross-batch duplicate hashes collapse here — at corpus scale
-            # these are Iceberg MERGE targets instead
-            def accumulated(table: str) -> DataFrame:
-                return read_accumulated(spark, out_dir, table).dropDuplicates(["hash"])
-
-            prep = PL.PipelineResult(
-                records,
-                melted,
-                accumulated("unique_strings"),
-                read_accumulated(spark, out_dir, "record_field_hashes"),
-                embeddings=accumulated("embeddings"),
-            )
-            # one staged matrix per batch, freed once this batch's
-            # predictions are written (it holds the whole accumulated vector
-            # table; other pipelines' matrices stay registered)
-            staged = prep.staged
+            # the batch prefix over the records the new pairs name (new
+            # records and the old ones they pair with), under the FROZEN
+            # train-time weights: vectors depend only on the string and
+            # the weights, so these equal the batch path's
+            ids = pairs.select(F.explode(F.array("left_id", "right_id")).alias("record_id"))
+            records_all = read_accumulated(spark, out_dir, "records")
+            touched = records_all.join(ids, "record_id", "left_semi")
+            prep = PL.prepare_records(touched, cfg, idf_weights=idf_weights)
             try:
                 preds = PL.score_pairs(pairs, prep, model, cfg).persist()
                 n_scored = preds.count()
@@ -210,7 +187,7 @@ def _batch_processor(
                 )
                 preds.unpersist()
             finally:
-                FE.release_stage_dir(staged[3])
+                prep.release()
             metrics["pairs_scored"] = float(n_scored)
             metrics["pairs_matched"] = float(n_match)
 
@@ -272,8 +249,7 @@ def run_incremental(
 
 def read_accumulated(spark: SparkSession, out_dir: str, table: str) -> DataFrame:
     """Read the accumulated output of `run_incremental` ('records',
-    'membership', 'candidates', or with a model 'record_field_hashes',
-    'unique_strings', 'embeddings' and 'predictions') across all ingested
-    batches."""
+    'membership', 'candidates', or with a model 'predictions') across all
+    ingested batches."""
     root = os.path.join(out_dir, table)
     return spark.read.option("basePath", root).parquet(root).drop("ingest_batch")

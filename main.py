@@ -58,7 +58,6 @@ def run(args: argparse.Namespace, stop_spark: bool = True) -> None:
     from entity_resolution_pipeline_spark.operators import cluster as G
     from entity_resolution_pipeline_spark.operators import embedding as E
     from entity_resolution_pipeline_spark.operators import extract as X
-    from entity_resolution_pipeline_spark.operators import features as FE
     from entity_resolution_pipeline_spark.operators import preprocess as P
     from entity_resolution_pipeline_spark.plans import pipeline as PL
     from entity_resolution_pipeline_spark.plans import reporting as R
@@ -127,7 +126,7 @@ def run(args: argparse.Namespace, stop_spark: bool = True) -> None:
 
     def prepared():
         # the library's train/score composition over the stage tables; the
-        # caller frees its staged matrix once the stage output is written
+        # caller releases it once the stage output is written
         return PL.PipelineResult(
             table("extract"), table("preprocess"), table("unique_strings"),
             table("record_field_hashes"), embeddings=table("embed"),
@@ -154,19 +153,22 @@ def run(args: argparse.Namespace, stop_spark: bool = True) -> None:
 
     if should_run("block"):
         records = table("extract")
-        membership = B.block_membership(records, cfg.blocking)
+        # the hot-key count materializes membership, so candidate_pairs
+        # reads it back instead of re-running the MinHash pass
+        membership = B.block_membership(records, cfg.blocking).persist()
         _, hot = B.prune_hot_blocks(membership, cfg.blocking)
         n_hot = hot.count()
         cands = B.candidate_pairs(membership, cfg.blocking)
         write(cands, "block", metrics={"hot_blocks_dropped": float(n_hot)},
               bucket_by=("left_id",), num_buckets=16)
+        membership.unpersist()
 
     if should_run("train"):
         if not args.labeled_pairs:
             raise SystemExit("--labeled-pairs is required for the train stage")
         prep = prepared()
         model, metrics = PL.train(I.read_labeled_pairs(spark, args.labeled_pairs), prep, cfg)
-        FE.release_stage_dir(prep.staged[3])
+        prep.release()
         with open(os.path.join(out, "model.pkl"), "wb") as f:
             pickle.dump(model, f)
         with open(os.path.join(out, "classification_metrics.json"), "w") as f:
@@ -180,7 +182,7 @@ def run(args: argparse.Namespace, stop_spark: bool = True) -> None:
             model = pickle.load(f)
         prep = prepared()
         write(PL.score_pairs(table("block"), prep, model, cfg), "predict")
-        FE.release_stage_dir(prep.staged[3])
+        prep.release()
 
     if should_run("cluster"):
         preds = table("predict")

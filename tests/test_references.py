@@ -294,6 +294,33 @@ def test_perfbench_calls_bind():
     assert not errors, "\n".join(errors)
 
 
+def test_perfbench_prepare_attributes_exist():
+    """Every attribute the frozen benchmark reads on a `PL.prepare(...)`
+    result (its `prep` variables) exists on a PipelineResult, looked up
+    statically so no property runs."""
+    from entity_resolution_pipeline_spark.plans.pipeline import PipelineResult
+
+    with open(os.path.join(ROOT, "perfbench", "run.py"), encoding="utf-8") as f:
+        tree = ast.parse(f.read())
+    read = {
+        n.attr for n in ast.walk(tree)
+        if isinstance(n, ast.Attribute) and isinstance(n.value, ast.Name)
+        and n.value.id == "prep"
+    }
+    assert read >= {
+        "records", "melted", "unique_strings", "record_field_hashes",
+        "embeddings", "staged", "idf_weights",
+    }, read
+    result = PipelineResult(None, None, None, None)
+    missing = []
+    for name in sorted(read):
+        try:
+            inspect.getattr_static(result, name)
+        except AttributeError:
+            missing.append(name)
+    assert not missing, missing
+
+
 def test_scan_covers_the_callers():
     """Guard the scanner itself: it must see the CLI, the benchmark and the
     package's own lazy imports, and find a dangling reference when there is

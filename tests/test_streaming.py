@@ -233,14 +233,27 @@ def trained(spark):
 
 
 def test_incremental_scoring_frees_staged_matrices(spark, tmp_path, monkeypatch, trained):
-    """Each scored micro-batch stages the accumulated vector matrix once and
-    removes it after writing its predictions: nothing is left under the
-    staging root after a drain."""
+    """Each scored micro-batch stages only the vectors of the records its new
+    pairs name, once, and removes them after writing its predictions:
+    nothing is left under the staging root after a drain, and no
+    featurization table is kept across batches."""
+    from entity_resolution_pipeline_spark.operators import features as FE
+    from entity_resolution_pipeline_spark.operators import preprocess as P
+
     model, weights = trained
     tmp = str(tmp_path)
     stage_root = os.path.join(tmp, "stage")
     os.makedirs(stage_root)
     monkeypatch.setenv("ERX_STAGE_ROOT", stage_root)
+    index_sizes = []
+    stage = FE.stage_vector_matrix
+
+    def recording_stage(*args, **kwargs):
+        staged = stage(*args, **kwargs)
+        index_sizes.append(len(staged[0]))
+        return staged
+
+    monkeypatch.setattr(FE, "stage_vector_matrix", recording_stage)
     out = os.path.join(tmp, "out")
     in_path = _write_pages(spark, tmp, "b0", 0, 60)
     _write_pages(spark, tmp, "b1", 60, 120)
@@ -255,6 +268,28 @@ def test_incremental_scoring_frees_staged_matrices(spark, tmp_path, monkeypatch,
     assert read_accumulated(spark, out, "predictions").count() > 0
     left = [d for d in os.listdir(stage_root) if d.startswith("erx-vecmat-")]
     assert left == []
+
+    def embeddable_hashes(records) -> int:
+        return (
+            P.melt_fields(records)
+            .where(F.col("field").isin(*DEFAULT_CONFIG.embedding.fields_to_embed))
+            .select("hash").distinct().count()
+        )
+
+    records = read_accumulated(spark, out, "records")
+    pairs = spark.read.parquet(os.path.join(out, "candidates", "ingest_batch=1"))
+    named = pairs.select(F.col("left_id").alias("record_id")).union(
+        pairs.select(F.col("right_id").alias("record_id"))
+    )
+    touched = embeddable_hashes(records.join(named, "record_id", "left_semi"))
+    assert len(index_sizes) == 2
+    assert index_sizes[1] == touched
+    assert touched < embeddable_hashes(records)
+    # no featurization table (record_field_hashes, unique_strings,
+    # embeddings) outlives its micro-batch
+    assert sorted(os.listdir(out)) == [
+        "_manifest", "_stream_checkpoint", "candidates", "membership", "predictions", "records",
+    ]
 
 
 def test_incremental_model_needs_idf_weights(spark, tmp_path, trained):
