@@ -36,11 +36,9 @@ class EmbeddingConfig:
     dimensions: int = 256          # hashed-projection width; reference used 1536
     # dense OpenAI dims (config.yml:29).  Empirically (synthetic fixture,
     # IDF on): 256/512/1024/4096 dims all reach pairwise F1 ≥ 0.999 — IDF
-    # weighting, not width, carries the signal — while EVERY downstream
-    # vector cost (embed UDF, unique-vector collect for the broadcast
-    # matrix, per-pair cosine gathers) scales linearly with width.  256 cut
-    # the serial vector-collect term 4× (the Amdahl bottleneck of the N-vs-4N
-    # scaling criterion) with no measurable quality change.
+    # weighting, not width, carries the signal — while every vector cost
+    # in the scoring kernel (the per-task embedding bincount, the unit-row
+    # memo, the per-pair cosine dots) scales linearly with width.
     char_ngram: int = 4            # character shingle width for the hashed projection
     fields_to_embed: tuple[str, ...] = EMBED_FIELDS
     use_idf: bool = True           # IDF-weight hash buckets by corpus document
@@ -73,7 +71,8 @@ class FeatureConfig:
     """No settings: the pairwise battery is fixed (operators/features.py
     FEATURES).  The section stays because perfbench still reads it."""
 
-    broadcast_vectors = True  # not a field: one featurization path; perfbench still reads it
+    # not a field: nothing is staged or broadcast; perfbench still reads it
+    broadcast_vectors = False
 
 
 @dataclass(frozen=True)

@@ -12,13 +12,16 @@ the classic feature-hashing / SimHash-style projection (Weinberger et al.,
 "Feature Hashing for Large Scale Multitask Learning") — same inner-product
 geometry contract the pipeline needs: near-identical strings ⇒ cosine ≈ 1.
 
-Runs as ONE numpy pass per Arrow batch inside a pandas UDF, over *distinct*
-strings only (dedup-before-embed, the reference's own key optimization at
+`embed_string` is the per-string definition; `embed_batch` computes the same
+vectors bit for bit for a whole Arrow batch in one numpy pass, and runs
+inside the fused scoring stage over each task's *distinct* strings only
+(dedup-before-embed, the reference's own key optimization at
 embedding.py:106-119).
 """
 
 from __future__ import annotations
 
+import functools
 import zlib
 
 import numpy as np
@@ -70,6 +73,96 @@ def embed_string(
     return vec.astype(np.float32)
 
 
+@functools.lru_cache(maxsize=None)
+def _crc_tables(max_len: int) -> tuple[np.ndarray, np.ndarray]:
+    """crc32 is affine over GF(2): for messages of one length L,
+    crc32(m) = crc32(0^L) ^ XOR_i U[L-1-i, m_i], where
+    U[d, b] = crc32(b 0^d) ^ crc32(0^(d+1)) depends only on the byte's
+    distance d from the end.  Returns (U flattened to index d*256 + b,
+    [crc32(0^L) for L in 0..max_len])."""
+    u = np.zeros((max_len, 256), dtype=np.uint32)
+    for d in range(max_len):
+        base = zlib.crc32(bytes(d + 1))
+        for b in range(256):
+            u[d, b] = zlib.crc32(bytes([b]) + bytes(d)) ^ base
+    zero = np.array([zlib.crc32(bytes(n)) for n in range(max_len + 1)], dtype=np.uint32)
+    return u.ravel(), zero
+
+
+def gram_hashes(texts, n: int) -> tuple[np.ndarray, np.ndarray]:
+    """(row, crc32) of every character n-gram of every text, as
+    `embed_string` hashes them (row i indexes texts[i]; empty and None
+    texts have no grams), in one numpy pass over the batch's concatenated
+    UTF-8 bytes: a gram's crc32 is an XOR of table lookups, one per byte."""
+    padded = []
+    rows = []
+    for i, t in enumerate(texts):
+        if t:
+            padded.append(f" {t.lower()} ")
+            rows.append(i)
+    if not padded:
+        return np.zeros(0, dtype=np.int64), np.zeros(0, dtype=np.uint32)
+    buf = np.frombuffer("".join(padded).encode("utf-8"), dtype=np.uint8)
+    chars = np.fromiter(map(len, padded), dtype=np.int64, count=len(padded))
+    # char_ngrams: len - n + 1 grams, or the whole padded string if shorter
+    grams = np.maximum(chars - n + 1, 1)
+    # global index of every gram's first character, and its length in chars
+    first = np.arange(int(grams.sum()), dtype=np.int64) + np.repeat(
+        np.cumsum(chars) - chars - (np.cumsum(grams) - grams), grams
+    )
+    width = np.repeat(np.minimum(chars, n), grams)
+    if len(buf) == int(chars.sum()):  # all ASCII: one byte per character
+        start, length = first, width
+    else:
+        char_at = np.append(np.flatnonzero((buf & 0xC0) != 0x80), len(buf))
+        start = char_at[first]
+        length = char_at[first + width] - start
+    u, zero = _crc_tables(4 * n)  # a UTF-8 character is at most 4 bytes
+    h = zero[length]
+    offset = (length - 1) * 256  # table row of each gram's first byte
+    shortest = int(length.min())
+    for j in range(int(length.max())):
+        if j < shortest:
+            h ^= u[offset + buf[start + j]]
+        else:  # only grams longer than j bytes have a byte j
+            sel = np.flatnonzero(length > j)
+            h[sel] ^= u[offset[sel] + buf[start[sel] + j]]
+        offset -= 256
+    return np.repeat(np.asarray(rows, dtype=np.int64), grams), h
+
+
+def embed_batch(
+    texts, dim: int = 256, n: int = 3, weights: np.ndarray | None = None
+) -> np.ndarray:
+    """float32 (len(texts), dim): row i equals embed_string(texts[i], dim,
+    n, weights) bit for bit, from one gram-hash pass and one bincount for
+    the whole batch."""
+    k = len(texts)
+    rows, hs = gram_hashes(texts, n)
+    signs = np.where((hs >> np.uint32(31)) & np.uint32(1), 1.0, -1.0)
+    keys = rows * dim + (hs % np.uint32(dim)).astype(np.int64)
+    # sums of ±1 are exact whatever the order, so this equals the
+    # per-string bincount
+    vec = np.bincount(keys, weights=signs, minlength=k * dim).astype(np.float64, copy=False)
+    vec = vec.reshape(k, dim)
+    if weights is not None:
+        vec = vec * np.asarray(weights, dtype=np.float64)
+    # per-row dot, as np.linalg.norm computes a vector's norm (a reduction
+    # along axis 1 sums in another order and can differ in the last bit)
+    norms = np.sqrt(np.fromiter((r.dot(r) for r in vec), dtype=np.float64, count=k))
+    nz = norms > 0
+    vec[nz] /= norms[nz, None]
+    return vec.astype(np.float32)
+
+
+def bucket_document_frequencies(texts, dim: int = 256, n: int = 3) -> np.ndarray:
+    """int64[dim]: how many of `texts` have at least one n-gram in each
+    bucket (the document frequencies `bucket_idf_weights` takes)."""
+    rows, hs = gram_hashes(texts, n)
+    keys = np.unique(rows * dim + (hs % np.uint32(dim)).astype(np.int64))
+    return np.bincount(keys % dim, minlength=dim)
+
+
 def make_embed_udf(dim: int = 256, n: int = 3, weights=None):
     """Factory for an Arrow pandas UDF: string column → array<float> column.
     ``weights``: optional list/array of per-bucket IDF weights (len dim),
@@ -78,78 +171,15 @@ def make_embed_udf(dim: int = 256, n: int = 3, weights=None):
 
     @pandas_udf(ArrayType(FloatType()))
     def embed_udf(texts: pd.Series) -> pd.Series:
-        return texts.map(lambda t: embed_string(t, dim=dim, n=n, weights=w).tolist())
+        return pd.Series(list(embed_batch(texts.tolist(), dim=dim, n=n, weights=w)))
 
     return embed_udf
 
 
-def _make_buckets_udf(dim: int, n: int):
-    """Arrow UDF: string → sorted distinct bucket ids of its char n-grams."""
-    from pyspark.sql.functions import pandas_udf as pudf
-    from pyspark.sql.types import ArrayType as AT, IntegerType as IT
-
-    @pudf(AT(IT()))
-    def buckets_udf(texts: pd.Series) -> pd.Series:
-        out = []
-        for t in texts:
-            if not t:
-                out.append([])
-                continue
-            grams = char_ngrams(t, n)
-            hs = np.fromiter(
-                (zlib.crc32(g.encode("utf-8")) for g in grams),
-                dtype=np.uint32,
-                count=len(grams),
-            )
-            out.append(np.unique(hs % np.uint32(dim)).astype(int).tolist())
-        return pd.Series(out)
-
-    return buckets_udf
-
-
-def bucket_frequencies_with_total(
-    strings_df, col: str, dim: int = 256, n: int = 3
-) -> tuple[list[tuple[int, int]], int]:
-    """Per-bucket document frequencies over a corpus of distinct strings
-    (n-grams → bucket id → count of source strings; dim rows, broadcastable
-    by construction) AND the distinct-string total in ONE agg job: a -1
-    sentinel bucket is prepended to every string's bucket array before the
-    explode, so count(bucket = -1) IS the string count and the
-    other rows are the per-bucket document frequencies — replacing the
-    persist + count() + agg sequence (two sequential jobs) the IDF stage
-    used to run.  Returns ([(bucket, df), ...], n_docs)."""
-    from pyspark.sql import functions as F
-
-    rows = (
-        strings_df.select(
-            F.explode(
-                F.concat(
-                    F.array(F.lit(-1)),
-                    _make_buckets_udf(dim, n)(F.col(col)),
-                )
-            ).alias("bucket")
-        )
-        .groupBy("bucket")
-        .agg(F.count("*").alias("df"))
-        .collect()
-    )
-    n_docs = 0
-    out: list[tuple[int, int]] = []
-    for r in rows:
-        if int(r["bucket"]) == -1:
-            n_docs = int(r["df"])
-        else:
-            out.append((int(r["bucket"]), int(r["df"])))
-    return out, n_docs
-
-
 def bucket_idf_weights(df_counts, n_docs: int, dim: int = 256) -> np.ndarray:
-    """(bucket, df) rows — a DataFrame or a pre-collected iterable of
-    (bucket, df) pairs — → smooth IDF weight vector log(1 + n_docs/(1+df));
+    """(bucket, df) pairs → smooth IDF weight vector log(1 + n_docs/(1+df));
     buckets never seen get the max weight."""
     weights = np.full(dim, np.log(1.0 + n_docs), dtype=np.float64)
-    rows = df_counts.collect() if hasattr(df_counts, "collect") else df_counts
-    for row in rows:
-        b, df = (row[0], row[1]) if isinstance(row, tuple) else (row["bucket"], row["df"])
+    for b, df in df_counts:
         weights[int(b)] = np.log(1.0 + n_docs / (1.0 + float(df)))
     return weights

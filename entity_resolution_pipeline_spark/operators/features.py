@@ -4,14 +4,16 @@ Re-expresses the reference's per-pair, per-process feature computation
 (feature_engineering.py:332-392 fan-out; battery 426-665) as ONE fused
 Arrow pass (`pair_features_hashed`, `pair_predictions_hashed`):
 
-* pair rows carry only the 5+5 field hashes and the person strings
-  (pair ⋈ record_field_hashes ⋈ record_field_hashes — reference J3,
-  querying.py:174-210); no embedding vector ever rides a pair row
-* one `mapInPandas` stage gathers vectors by hash from the staged
-  unit-vector matrix (`stage_vector_matrix`) and computes the whole battery
-  with stacked-matrix numpy (the reference's dominant overhead was per-pair
-  numpy calls across process pools — SURVEY.md §4 'Batched vector ops');
-  on the predict path the same batch is LR-scored
+* pair rows carry both records' normalized field values and year-stripped
+  person names (pair ⋈ record table ⋈ record table — reference J3,
+  querying.py:174-210); no embedding vector ever rides a pair row, and no
+  vector table is built before the stage
+* one `mapInPandas` stage embeds each distinct value once per task with
+  the batched kernel (functions/embed.py `embed_batch`, under the IDF
+  weights the stage closes over) and computes the whole battery
+  with stacked-matrix numpy (the reference's dominant overhead was
+  per-pair numpy calls across process pools — SURVEY.md §4 'Batched
+  vector ops'); on the predict path the same batch is LR-scored
 * StandardScaler as agg + select expressions (feature_engineering.py:931-960;
   sklearn population std, zero-variance columns scale 1.0)
 
@@ -34,7 +36,6 @@ low-composite penalty).
 
 from __future__ import annotations
 
-import os
 from typing import Iterator
 
 import numpy as np
@@ -43,7 +44,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import DoubleType, StructField, StructType
 
-from ..config import EMBED_FIELDS
+from ..config import EMBED_FIELDS, EmbeddingConfig
 
 HARMONICS: tuple[tuple[str, str], ...] = (("person", "title"), ("person", "subjects"))
 LOW_COMPOSITE_THRESHOLD = 0.65
@@ -219,9 +220,6 @@ def selected_feature_names(cfg=None, sel=None) -> list[str]:
     return list(FEATURES)
 
 
-_NULL_SENT = "NULL"
-
-
 def _parallelism(df: DataFrame) -> int:
     """Target partition count for Python-UDF stages (see
     config.python_stage_width for the half-width rationale)."""
@@ -230,145 +228,48 @@ def _parallelism(df: DataFrame) -> int:
     return python_stage_width(df.sparkSession)
 
 
-class _ShardedMatrix:
-    """Worker-side view of the shard-staged vector matrix: lazy mmap per
-    shard file, vectorized gather by (shard << 32 | row) codes.  Shards hold
-    UNIT vectors (pre-normalized at write time, so cosine is one dot with no
-    per-pair norms)."""
-
-    def __init__(self, shard_paths: list[str], dim: int):
-        self.paths = shard_paths
-        self.dim = dim
-        self._mats: list = [None] * len(shard_paths)
-
-    def _shard(self, s: int) -> np.ndarray:
-        m = self._mats[s]
-        if m is None:
-            try:
-                m = np.load(self.paths[s], mmap_mode="r")
-            except FileNotFoundError as e:
-                raise FileNotFoundError(
-                    f"vector shard {self.paths[s]!r} is not visible on this "
-                    "executor — the staging root is not shared across hosts. "
-                    "Set ERX_STAGE_ROOT to a filesystem mounted on the driver "
-                    "and ALL executors."
-                ) from e
-            self._mats[s] = m
-        return m
-
-    def gather(self, codes: np.ndarray, ok: np.ndarray) -> np.ndarray:
-        """codes: int64 (shard<<32|row), -1 for missing → unit-vector matrix
-        (n,dim); rows with ~ok stay zero."""
-        A = np.zeros((len(codes), self.dim), dtype=np.float32)
-        if ok.any():
-            act = codes[ok]
-            rows_out = np.nonzero(ok)[0]
-            shards = act >> 32
-            rows = act & 0xFFFFFFFF
-            for s in np.unique(shards):
-                m = shards == s
-                A[rows_out[m]] = self._shard(int(s))[rows[m]]
-        return A
-
-
-_MMAP_CACHE: dict[str, "_ShardedMatrix"] = {}
-
-# worker-local memoization shared across Arrow batches, keyed by the
-# per-invocation matrix file name (a new featurize call ⇒ fresh caches; same
-# job ⇒ every batch and every task on the worker reuses normalized names /
-# years / string sims computed for a hash (pair) once)
-_FUSED_CACHE: dict[str, dict[str, dict]] = {}
-
-# keep only the newest few invocations' caches/mmaps alive on a long-lived
-# worker (each can hold tens of MB of memoized strings at corpus scale)
-_CACHE_KEEP = 3
-
-
-def _evict_stale_caches(current_key: str) -> None:
-    for cache in (_MMAP_CACHE, _FUSED_CACHE):
-        while len(cache) > _CACHE_KEEP:
-            oldest = next(iter(k for k in cache if k != current_key), None)
-            if oldest is None:
-                break
-            cache.pop(oldest, None)
-
-
-# staging dirs created by THIS driver process; removed at exit so repeated
-# bench/pipeline runs don't accumulate matrices in tmpfs
-_STAGE_DIRS: list[str] = []
-
-
-def _cleanup_stage_dirs() -> None:
-    import shutil
-
-    for d in _STAGE_DIRS:
-        shutil.rmtree(d, ignore_errors=True)
-
-
 def cleanup_stage_dirs() -> None:
-    """Delete all vector-staging shard dirs registered this session.  The
-    atexit hook covers process exit, but a long-lived session that runs
-    MANY pipelines (bench loops, notebooks) must call this between runs —
-    on tmpfs the leaked shards are RAM, and ~20 accumulated runs
-    OOM-killed a 320k-record bench JVM.  Only safe once every DataFrame
-    that scores against the current staging matrix has been materialized
-    (workers mmap shards lazily at first task use)."""
-    _cleanup_stage_dirs()
-    _STAGE_DIRS.clear()
-
-
-def release_stage_dir(mat_dir: str) -> None:
-    """Delete ONE staging dir (the last element of a stage_vector_matrix
-    result) once everything scored against it has been materialized.
-    Unlike cleanup_stage_dirs it leaves every other registered matrix —
-    e.g. a concurrent pipeline's — in place."""
-    import shutil
-
-    shutil.rmtree(mat_dir, ignore_errors=True)
-    try:
-        _STAGE_DIRS.remove(mat_dir)
-    except ValueError:
-        pass  # already freed by cleanup_stage_dirs
-
-
-def _register_stage_dir(path: str) -> None:
-    if not _STAGE_DIRS:
-        import atexit
-
-        atexit.register(_cleanup_stage_dirs)
-    _STAGE_DIRS.append(path)
+    """No-op: nothing is staged on disk.  perfbench still calls it."""
 
 
 def _fused_battery_udf(
-    bc_vec,
     out_schema: StructType,
+    embedding: EmbeddingConfig,
+    weights: list | None,
     score_params: tuple | None = None,
 ):
-    """ONE mapInPandas pass computing the entire battery over the narrow
-    pair×hash rows: vectors are gathered from the staged mmap matrix
-    (cosine = one dot of unit vectors, ~2·dim flops per field), string sims
-    and birth/death years come off the carried person-string columns.  No
-    joins and no extra stages; string sims and year extraction stay
-    deduplicated via worker-local memoization instead of a global
-    distinct.  With `score_params` the same batch is also LR-scored."""
+    """ONE mapInPandas pass computing the entire battery over pair rows
+    that carry both records' field values: each distinct value is embedded
+    once per task (`embed_batch` over the batch's new strings, rows kept
+    as unit float32 vectors, so cosine is one dot of ~2·dim flops per
+    field), string sims and birth/death years come off the carried person
+    columns.  Every memo lives for one task, and a value's vector, years
+    and sims depend only on the value, so the output does not depend on
+    how pairs fall into tasks or batches.  With `score_params` the same
+    batch is also LR-scored."""
     out_cols = [f.name for f in out_schema.fields]
+    dim, ngram = embedding.dimensions, embedding.char_ngram
+    embedded = [f for f in EMBED_FIELDS if f in embedding.fields_to_embed]
+    w = None if weights is None else np.asarray(weights, dtype=np.float64)
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         from ..functions.birth_death import extract_birth_death_years
+        from ..functions.embed import embed_batch
         from ..functions.similarity import jaro_winkler_similarity
 
-        index, shard_paths, dim, mat_key = bc_vec.value
-        mat = _MMAP_CACHE.get(mat_key)
-        if mat is None:
-            mat = _ShardedMatrix(shard_paths, dim)
-            _MMAP_CACHE[mat_key] = mat
-        _evict_stale_caches(mat_key)
-        # keyed by the (per-invocation-unique) staging dir: worker-side
-        # Broadcast handles don't expose .id
-        caches = _FUSED_CACHE.setdefault(
-            mat_key, {"years": {}, "sims": {}}
-        )
-        years_c, sims_c = caches["years"], caches["sims"]
+        row_of: dict[str, int] = {}  # value → its row of `unit`
+        unit = np.zeros((0, dim), dtype=np.float32)
+        years_c: dict = {}
+        sims_c: dict = {}
+
+        def _rows(col: pd.Series) -> np.ndarray:
+            """Value column → rows of `unit`, -1 for a missing field;
+            one dict lookup per DISTINCT value in the batch."""
+            codes, uniqs = pd.factorize(col)
+            if not len(uniqs):
+                return np.full(len(col), -1, dtype=np.int64)
+            u = np.fromiter((row_of[v] for v in uniqs), dtype=np.int64, count=len(uniqs))
+            return np.where(codes >= 0, u[np.clip(codes, 0, None)], -1)
 
         def _years(value: str):
             """Years per distinct person string, memoized across batches."""
@@ -377,22 +278,6 @@ def _fused_battery_udf(
                 v = extract_birth_death_years(value or "")
                 years_c[value] = v
             return v
-
-        def _valid_idx(col: pd.Series) -> np.ndarray:
-            """Hash column → matrix codes, resolved once per DISTINCT hash in
-            the batch (factorize + per-unique dict get), -1 for missing."""
-            codes, uniqs = pd.factorize(col)
-            u_codes = np.fromiter(
-                (
-                    index.get(h, -1) if (h is not None and h != _NULL_SENT) else -1
-                    for h in uniqs
-                ),
-                dtype=np.int64,
-                count=len(uniqs),
-            )
-            if not len(uniqs):
-                return np.full(len(col), -1, dtype=np.int64)
-            return np.where(codes >= 0, u_codes[np.clip(codes, 0, None)], -1)
 
         def _years_arrays(col: pd.Series) -> tuple[np.ndarray, np.ndarray]:
             """(birth, death) arrays; the year cascade runs once per DISTINCT
@@ -411,20 +296,37 @@ def _fused_battery_udf(
             n = len(pdf)
             if not n:
                 continue
+            new = {
+                v: None
+                for f in embedded for p in "lr"
+                for v in pdf[f"{p}_{f}"].dropna().unique() if v not in row_of
+            }
+            if new:
+                vecs = embed_batch(list(new), dim=dim, n=ngram, weights=w)
+                # unit float32 rows: cosine is then one dot.  A present but
+                # empty value embeds to a zero row (dot 0 → ncos 0.5), as in
+                # the wide-row oracle, where batch_cosine yields raw 0.0.
+                norms = np.linalg.norm(vecs, axis=1)
+                nz = norms > 0
+                vecs[nz] /= norms[nz, None]
+                used = len(row_of)
+                if used + len(vecs) > len(unit):  # grow by doubling
+                    grown = np.empty((max(used + len(vecs), 2 * len(unit)), dim), np.float32)
+                    grown[:used] = unit[:used]
+                    unit = grown
+                unit[used:used + len(vecs)] = vecs
+                row_of.update(zip(new, range(used, used + len(vecs))))
             out: dict[str, np.ndarray] = {}
             for f in EMBED_FIELDS:
-                li = _valid_idx(pdf[f"l_{f}_h"])
-                ri = _valid_idx(pdf[f"r_{f}_h"])
-                ok = (li >= 0) & (ri >= 0)
-                A = mat.gather(li, ok)
-                B = mat.gather(ri, ok)
-                # shards hold unit vectors: cosine is one dot.  A PRESENT
-                # but zero-norm embedding stages as a zero row (dot 0 →
-                # ncos 0.5) — identical to the wide-row oracle, where
-                # batch_cosine yields raw 0.0 → (0+1)/2.  Only truly MISSING
-                # fields (ok False) are 0.0.
-                sims = np.einsum("ij,ij->i", A, B)
-                ncos = ((sims.astype(np.float64) + 1.0) / 2.0)
+                sims = np.zeros(n, dtype=np.float32)
+                ok = np.zeros(n, dtype=bool)
+                if f in embedded:
+                    li, ri = _rows(pdf[f"l_{f}"]), _rows(pdf[f"r_{f}"])
+                    # only MISSING fields (ok False) are 0.0
+                    ok = (li >= 0) & (ri >= 0)
+                    if ok.any():
+                        sims[ok] = np.einsum("ij,ij->i", unit[li[ok]], unit[ri[ok]])
+                ncos = (sims.astype(np.float64) + 1.0) / 2.0
                 out[f"{f}_cosine"] = np.where(ok, ncos, 0.0)
                 if f == "composite":
                     out["low_composite_penalty"] = np.where(
@@ -459,8 +361,8 @@ def _fused_battery_udf(
                     out[f"{f1}_cosine"], out[f"{f2}_cosine"]
                 )
 
-            lb, ld = _years_arrays(pdf["l_pv"])
-            rb, rd = _years_arrays(pdf["r_pv"])
+            lb, ld = _years_arrays(pdf["l_person"])
+            rb, rd = _years_arrays(pdf["r_person"])
             out["birth_death_left"] = (~np.isnan(lb) | ~np.isnan(ld)).astype(np.float64)
             out["birth_death_right"] = (~np.isnan(rb) | ~np.isnan(rd)).astype(np.float64)
             out["birth_death_match"] = (
@@ -498,165 +400,77 @@ def _fused_battery_udf(
     return run
 
 
-def stage_vector_matrix(
-    vectors: DataFrame, cfg=None
-) -> tuple[dict, list, int, str]:
-    """DISTRIBUTED matrix staging: executors write float32 npy shards of
-    the dedup'd vector table in parallel (one shard per Arrow batch); the
-    driver collects only (hash, shard, row) — O(uniques) small values,
-    never the vectors.  Workers np.load(mmap_mode='r') each shard lazily
-    and share page cache.
-
-    The staging root is ERX_STAGE_ROOT, else /dev/shm, else the system
-    tempdir.  Those defaults are host-local: on a multi-host cluster
-    ERX_STAGE_ROOT must name a filesystem the driver and every executor
-    mount.  `cfg` is ignored; perfbench still passes it.
-
-    Returns (index, shard_paths, dim, mat_dir).  Separate from the fused
-    featurization so prepare() can run it in its background vector
-    thread, overlapping the blocking phase."""
-    import tempfile
-    import uuid
-
-    root = os.environ.get("ERX_STAGE_ROOT")
-    if root is None:
-        root = "/dev/shm" if os.path.isdir("/dev/shm") else tempfile.gettempdir()
-    if not os.path.isdir(root):
-        raise FileNotFoundError(
-            f"vector staging root {root!r} is not a directory on the "
-            "driver. Set ERX_STAGE_ROOT to a filesystem shared by the driver "
-            "and ALL executors."
-        )
-    mat_dir = os.path.join(root, f"erx-vecmat-{uuid.uuid4().hex}")
-    os.makedirs(mat_dir, exist_ok=True)
-    _register_stage_dir(mat_dir)
-
-    def _write_shards(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import uuid as _uuid
-
-        for pdf in batches:
-            keep = pdf["embedding"].notna()
-            pdf = pdf[keep]
-            if not len(pdf):
-                continue
-            arr = np.stack(pdf["embedding"].to_numpy()).astype(np.float32)
-            # pre-normalize: downstream cosine is then one dot product
-            norms = np.linalg.norm(arr, axis=1)
-            nz = norms > 0
-            arr[nz] /= norms[nz, None]
-            name = f"shard-{_uuid.uuid4().hex}.npy"
-            np.save(os.path.join(mat_dir, name), arr)
-            yield pd.DataFrame(
-                {
-                    "hash": pdf["hash"].to_numpy(),
-                    "shard": name,
-                    "row": np.arange(len(pdf), dtype=np.int64),
-                }
-            )
-
-    idx_pdf = (
-        vectors.select("hash", "embedding")
-        .mapInPandas(_write_shards, schema="hash string, shard string, row long")
-        .toPandas()
+def stage_vector_matrix(vectors: DataFrame, cfg=None):
+    """Nothing is staged: the fused kernel embeds per task.
+    perfbench still names this behind `broadcast_vectors`, which is False."""
+    raise NotImplementedError(
+        "vectors are computed inside the fused scoring kernel; nothing is staged"
     )
-    if len(idx_pdf):
-        shard_names = sorted(idx_pdf["shard"].unique().tolist())
-        shard_ids = {nm: i for i, nm in enumerate(shard_names)}
-        codes = (
-            idx_pdf["shard"].map(shard_ids).to_numpy(dtype=np.int64) << 32
-        ) | idx_pdf["row"].to_numpy(dtype=np.int64)
-        index = dict(zip(idx_pdf["hash"], codes.tolist()))
-        shard_paths = [os.path.join(mat_dir, nm) for nm in shard_names]
-        # header-only read for the dimension (same shared path the workers
-        # use)
-        dim = int(np.load(shard_paths[0], mmap_mode="r").shape[1])
-    else:
-        index, shard_paths, dim = {}, [], 1
-    return index, shard_paths, dim, mat_dir
 
 
 def pair_features_hashed(
     pairs: DataFrame,
     rfh: DataFrame,
-    unique_strings: DataFrame,
-    vectors: DataFrame,
+    unique_strings: DataFrame | None = None,
+    vectors: DataFrame | None = None,
     staged=None,
+    weights: list | None = None,
+    embedding: EmbeddingConfig = EmbeddingConfig(),
 ) -> DataFrame:
     """The scale-path feature battery, one fused Python stage per Arrow
-    batch.  Pair rows carry field hashes, never embedding vectors (the
-    naive pair⋈repr⋈repr join ships |pairs|·fields·2·dim floats through
-    the shuffle — the dominant cost at any scale); each vector is staged
-    once per distinct string (`stage_vector_matrix`) and gathered by hash
-    inside the stage.  This is the reference's dedup-before-embed
-    optimization (embedding.py:106-119) applied to pairwise scoring.
-
-    Inputs: pairs(left_id, right_id[, match]); rfh = record_field_hashes
-    wide table; unique_strings(hash, value); vectors(hash, embedding);
-    `staged`, a prebuilt stage_vector_matrix result (staged here when
-    None).  Output schema identical to :func:`pair_features`.
-    """
-    return _fused_pairs(pairs, rfh, unique_strings, vectors, None, staged)
+    batch.  Pair rows carry both records' field values from `rfh`, the
+    row-wise record table (preprocess.record_table); no vector rides a
+    pair row or is built before the stage.  Vectors are embedded under
+    `weights`, else, with `embedding.use_idf` on, under the corpus IDF
+    weights of `rfh` (one driver-side action).  `unique_strings`,
+    `vectors` and `staged` are ignored; perfbench still passes the first
+    two.  Output schema identical to :func:`pair_features`."""
+    return _fused_pairs(pairs, rfh, None, weights, embedding)
 
 
 def pair_predictions_hashed(
     pairs: DataFrame,
     rfh: DataFrame,
-    unique_strings: DataFrame,
-    vectors: DataFrame,
+    unique_strings: DataFrame | None,
+    vectors: DataFrame | None,
     model,
     cfg=None,
     staged=None,
+    weights: list | None = None,
+    embedding: EmbeddingConfig = EmbeddingConfig(),
 ) -> DataFrame:
     """Fused featurize+score for the predict path: the same Python stage
     as pair_features_hashed computes the battery AND the LR probability
     per Arrow batch, emitting the narrow PREDICTIONS schema — the
     13-column feature table never materializes.  Bit-identical to
     classify.score(pair_features_hashed(...)) (pinned by test_features).
-    `cfg` is ignored; perfbench still passes it."""
-    return _fused_pairs(pairs, rfh, unique_strings, vectors, model, staged)
+    `unique_strings`, `vectors`, `cfg` and `staged` are ignored;
+    perfbench still passes them."""
+    return _fused_pairs(pairs, rfh, model, weights, embedding)
 
 
-def _fused_pairs(pairs, rfh, unique_strings, vectors, model, staged) -> DataFrame:
-    from ..functions.birth_death import normalize_name_udf
+def _fused_pairs(pairs, table, model, weights, embedding) -> DataFrame:
+    if weights is None and embedding.use_idf:
+        from .embedding import corpus_idf_weights
 
-    valid = lambda c: c.isNotNull() & (c != _NULL_SENT)  # noqa: E731
+        weights = corpus_idf_weights(table, embedding)
 
-    # String-similarity and birth/death inputs resolved ONCE per distinct
-    # person hash and carried as pair-row COLUMNS: levenshtein then runs as
-    # a whole-stage-codegen JVM expression over the pair table (the pure-
-    # Python DP was ~60 µs/pair — the dominant per-pair cost at 2M+
-    # candidates), and jaro-winkler and the year cascade read the strings
-    # without any per-row dict lookup.  The normalize cascade runs once per
-    # distinct hash, not once per pair.
-    pstr = (
-        rfh.select(F.col("person").alias("hash"))
-        .where(valid(F.col("hash")))
-        .distinct()
-        .join(unique_strings, "hash")
-        .select("hash", F.col("value").alias("pv"))
-        .withColumn("pn", normalize_name_udf("pv"))
+    # each side's field values and year-stripped name join onto the pair
+    # rows.  The narrow pairs are repartitioned to the Python stage's
+    # width BEFORE the joins: a broadcast join keeps that partitioning, so
+    # the wide rows never cross a shuffle.
+    def side(p: str, key: str) -> DataFrame:
+        return table.select(
+            F.col("record_id").alias(key),
+            *[F.col(f"{f}_value").alias(f"{p}_{f}") for f in EMBED_FIELDS],
+            F.col("pn").alias(f"{p}_pn"),
+        )
+
+    pw = (
+        pairs.repartition(_parallelism(pairs))
+        .join(side("l", "left_id"), "left_id")
+        .join(side("r", "right_id"), "right_id")
     )
-    pstr = F.broadcast(pstr)
-    side = lambda p: pstr.select(  # noqa: E731
-        F.col("hash").alias(f"{p}_person_h"),
-        F.col("pv").alias(f"{p}_pv"),
-        F.col("pn").alias(f"{p}_pn"),
-    )
-    l = rfh.select(
-        F.col("record_id").alias("left_id"),
-        *[F.col(f).alias(f"l_{f}_h") for f in EMBED_FIELDS],
-    ).join(side("l"), "l_person_h", "left")
-    r = rfh.select(
-        F.col("record_id").alias("right_id"),
-        *[F.col(f).alias(f"r_{f}_h") for f in EMBED_FIELDS],
-    ).join(side("r"), "r_person_h", "left")
-    pw = pairs.join(l, "left_id").join(r, "right_id")
-
-    if staged is None:
-        staged = stage_vector_matrix(vectors)
-    # NOTE: the staging dir must outlive the DataFrame — workers mmap
-    # shards lazily at first task use
-    bc = pairs.sparkSession.sparkContext.broadcast(staged)
 
     fields = [
         StructField("left_id", pw.schema["left_id"].dataType, False),
@@ -697,10 +511,8 @@ def _fused_pairs(pairs, rfh, unique_strings, vectors, model, staged) -> DataFram
         .cast("double"),
     )
 
-    fused = _fused_battery_udf(bc, out_schema, score_params=score_params)
-    # explicit repartition: the Python stage must run at half-width
-    # regardless of AQE's byte-based coalescing (UDF cost/row ≫ bytes/row)
-    return pw.repartition(_parallelism(pairs)).mapInPandas(fused, schema=out_schema)
+    fused = _fused_battery_udf(out_schema, embedding, weights, score_params=score_params)
+    return pw.mapInPandas(fused, schema=out_schema)
 
 
 def fit_scaler(features_df: DataFrame, cols: list[str]) -> dict[str, tuple[float, float]]:

@@ -1,16 +1,19 @@
-"""records → (melted field values, record_field_hashes, unique_strings,
-field_hash_mapping).
+"""records → the row-wise record table (record_field_hashes), plus the
+melted field values, unique_strings and field_hash_mapping.
 
 Re-expresses the reference's preprocessing stage (batch_parallel_preprocessing
 .py:244-383: ProcessPoolExecutor per record, dict merges) as declarative
 dataflow:
 
-* melt     — stack the 6 field columns to (record_id, field, value) rows
-* normalize+hash — ONE Arrow pandas UDF pass (parity path)
+* record_table — ONE Arrow pass over the records: per record, the
+  normalized value and hash of each of the 6 fields, and the year-stripped
+  person name.  This is the table featurization joins pairs against
+* melt — stack the 6 field columns to (record_id, field, value) rows, then
+  normalize+hash in one Arrow pass (the CLI's stage table and the parity
+  oracle `record_field_hashes(melted)`)
 * unique_strings — groupBy(hash) with map-side combine (the reference's
   manual local-dict merge, preprocessing.py:279-295, is exactly Spark's
   partial+final hash aggregate — free)
-* record_field_hashes — conditional-aggregation pivot back to wide
 
 Reference semantics preserved:
 * the 5 embed fields are whitespace-normalized before hashing
@@ -74,14 +77,64 @@ def field_hash_mapping(melted: DataFrame) -> DataFrame:
     )
 
 
+# the row-wise record table: the 6 field hashes, the 5 normalized embed
+# field values (NULL when the field is missing) and the year-stripped
+# person name `pn`
+RECORD_TABLE_COLUMNS: tuple[str, ...] = (
+    ("record_id",) + _ALL + tuple(f"{f}_value" for f in _NORMALIZED_FIELDS) + ("pn",)
+)
+
+
+def record_table(records: DataFrame) -> DataFrame:
+    """records → the row-wise record table, one row per record
+    (RECORD_TABLE_COLUMNS), in one Arrow pass: the per-value rules of
+    `melt_fields` and the sentinels of `record_field_hashes`, with no melt
+    and no pivot."""
+    import pandas as pd
+
+    from ..config import python_stage_width
+    from ..functions.birth_death import normalize_name
+    from ..functions.hashing import compute_string_hash, normalize_string
+
+    def _record_rows(batches):
+        for pdf in batches:
+            out = {"record_id": pdf["record_id"]}
+            for f in _ALL:
+                present = pdf[f].notna() & ~pdf[f].isin(NULL_VALUES)
+                value = pd.Series(None, index=pdf.index, dtype=object)
+                value[present] = pdf[f][present]
+                if f in _NORMALIZED_FIELDS:
+                    value[present] = value[present].map(normalize_string)
+                    out[f"{f}_value"] = value
+                h = pd.Series("NULL" if f in _SENTINEL_FIELDS else None, index=pdf.index,
+                              dtype=object)
+                h[present] = value[present].map(compute_string_hash)
+                out[f] = h
+            person = out["person_value"]
+            pn = pd.Series(None, index=pdf.index, dtype=object)
+            pn[person.notna()] = person[person.notna()].map(normalize_name)
+            out["pn"] = pn
+            yield pd.DataFrame(out)[list(RECORD_TABLE_COLUMNS)]
+
+    schema = ", ".join(f"{c} string" for c in RECORD_TABLE_COLUMNS)
+    return records.coalesce(python_stage_width(records.sparkSession)).select(
+        "record_id", *_ALL
+    ).mapInPandas(_record_rows, schema=schema)
+
+
 def record_field_hashes(melted: DataFrame) -> DataFrame:
-    """Wide (record_id, <field hash> ×6); "NULL" sentinel for the 4
-    sentinel fields, SQL NULL for absent composite/roles."""
+    """The record table's columns (RECORD_TABLE_COLUMNS) pivoted back from
+    melted rows: a groupBy(record_id) shuffle that `record_table` does
+    without.  The parity oracle of `record_table`; perfbench still builds
+    its traced pass from it."""
+    from ..functions.birth_death import normalize_name_udf
+
+    pick = lambda f, c: F.first(  # noqa: E731
+        F.when(F.col("field") == f, F.col(c)), ignorenulls=True
+    )
     pivoted = melted.groupBy("record_id").agg(
-        *[
-            F.first(F.when(F.col("field") == f, F.col("hash")), ignorenulls=True).alias(f)
-            for f in _ALL
-        ]
+        *[pick(f, "hash").alias(f) for f in _ALL],
+        *[pick(f, "value_norm").alias(f"{f}_value") for f in _NORMALIZED_FIELDS],
     )
     return pivoted.select(
         "record_id",
@@ -89,5 +142,8 @@ def record_field_hashes(melted: DataFrame) -> DataFrame:
             (F.coalesce(F.col(f), F.lit("NULL")) if f in _SENTINEL_FIELDS else F.col(f)).alias(f)
             for f in _ALL
         ],
+        *[f"{f}_value" for f in _NORMALIZED_FIELDS],
+        F.when(
+            F.col("person_value").isNotNull(), normalize_name_udf("person_value")
+        ).alias("pn"),
     )
-

@@ -4,7 +4,7 @@ The reference's `Pipeline` class runs 8 sequential stages with pickle
 checkpoints (src/pipeline.py:66-120).  Here each stage is a pure
 DataFrame→DataFrame function (operators/*), and plans are thin compositions.
 `prepare_records`, `train` and `score_pairs` are the one stage composition:
-these plans, incremental ingest and (over its stage tables) the CLI
+these plans, incremental ingest and (over its extract stage table) the CLI
 (main.py) all train and score over a `PipelineResult`.
 
 Two mainline plans:
@@ -17,12 +17,13 @@ Two mainline plans:
 
 from __future__ import annotations
 
+from concurrent.futures import Future, ThreadPoolExecutor
 from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..config import DEFAULT_CONFIG, PipelineConfig
+from ..config import DEFAULT_CONFIG, EmbeddingConfig, PipelineConfig
 from ..operators import blocking as B
 from ..operators import classify as C
 from ..operators import cluster as G
@@ -35,80 +36,73 @@ from ..operators import preprocess as P
 class PipelineResult:
     """Stage handles of the shared pipeline prefix.
 
-    `embeddings` is the (hash, embedding) vector table, one row per distinct
-    string.  It and `idf_weights` may be built ASYNCHRONOUSLY
-    (prepare_records() hands them off to a background thread so the IDF agg
-    and the embed-UDF materialization overlap the blocking phase, which
-    never reads vectors); the properties block until the build completes,
-    so consumers see exactly the values the synchronous construction
-    produced.
-    `idf_weights` are the frozen featurization params the embeddings were
-    computed under (None when cfg.embedding.use_idf is off); incremental
-    ingest re-embeds the strings it scores under these same weights.
+    `record_field_hashes` is the persisted row-wise record table
+    (preprocess.record_table): per record, the field hashes, the normalized
+    field values and the year-stripped person name.  Featurization joins
+    pairs against it and embeds the values inside the fused scoring kernel,
+    so no vector table is built.  `idf_weights` are the frozen
+    featurization params the kernel embeds under (None when
+    `embedding.use_idf` is off): the corpus weights of these records, built
+    by prepare_records() in a BACKGROUND thread that overlaps blocking, or
+    a model's train-time weights passed in.  The property blocks until the
+    build completes and re-raises a failed build at every read.
 
-    Only the CLI, which already holds the stage tables, passes `embeddings`
-    in; `staged` then stages it on first access.  Every owner calls
+    `melted`, `unique_strings` and `embeddings` are lazy DataFrames that no
+    pass runs; perfbench still reads them, and `staged` (nothing is staged:
+    it waits on the IDF build and returns None).  Every owner calls
     `release()` once everything scored against the result is written."""
 
     def __init__(
         self,
         records: DataFrame,
-        melted: DataFrame,
-        unique_strings: DataFrame,
         record_field_hashes: DataFrame,
-        embeddings: DataFrame | None = None,
-        emb_future: Any = None,
+        embedding: EmbeddingConfig = DEFAULT_CONFIG.embedding,
+        idf: Future | list | None = None,
     ) -> None:
         self.records = records
-        self.melted = melted
-        self.unique_strings = unique_strings
         self.record_field_hashes = record_field_hashes
+        self.embedding = embedding
         self.model: Any = None
         self.metrics: dict = {}
         self.predictions: DataFrame | None = None
         self.clusters: DataFrame | None = None
-        self._embeddings = embeddings
-        self._idf_weights = None
-        self._staged = None
-        self._emb_future = emb_future
-
-    def _resolve_emb(self) -> None:
-        # the future is kept, not cleared: a finished Future re-raises its
-        # error on every .result(), so every consumer sees a failed build
-        if self._emb_future is not None:
-            self._embeddings, self._idf_weights, self._staged = self._emb_future.result()
-
-    @property
-    def embeddings(self) -> DataFrame:
-        self._resolve_emb()
-        return self._embeddings
+        self._idf = idf
 
     @property
     def idf_weights(self) -> list | None:
-        self._resolve_emb()
-        return self._idf_weights
+        # a finished Future re-raises its error on every .result(), so
+        # every consumer sees a failed build
+        return self._idf.result() if isinstance(self._idf, Future) else self._idf
 
     @property
-    def staged(self):
-        """Staged vector matrix (features.stage_vector_matrix result):
-        built by prepare_records()' background thread, else staged here on
-        first access."""
-        self._resolve_emb()
-        if self._staged is None:
-            self._staged = FE.stage_vector_matrix(self._embeddings)
-        return self._staged
+    def staged(self) -> None:
+        """Waits on the IDF build; nothing is staged.  perfbench still
+        reads it."""
+        self.idf_weights
+        return None
+
+    @property
+    def melted(self) -> DataFrame:
+        """perfbench still unpersists it; no pass runs it."""
+        return P.melt_fields(self.records)
+
+    @property
+    def unique_strings(self) -> DataFrame:
+        """perfbench still unpersists it; no pass runs it."""
+        return P.unique_strings(self.melted)
+
+    @property
+    def embeddings(self) -> DataFrame:
+        """perfbench still unpersists it; no pass runs it."""
+        return E.embed_unique_strings(self.melted, self.embedding, weights=self.idf_weights)
 
     def release(self) -> None:
-        """Wait for the vector build, then free its staged matrix and the
-        prefix tables' caches.  Call once everything scored against this
-        result is written."""
+        """Wait for the IDF build, then free the prefix tables' caches.
+        Call once everything scored against this result is written."""
         try:
-            self._resolve_emb()
+            self.idf_weights
         finally:
-            if self._staged is not None:
-                FE.release_stage_dir(self._staged[3])
-            for df in (self.records, self.melted, self.unique_strings,
-                       self.record_field_hashes, self._embeddings):
+            for df in (self.records, self.record_field_hashes):
                 if df is not None:
                     df.unpersist()
 
@@ -123,48 +117,26 @@ def prepare_records(
     cfg: PipelineConfig = DEFAULT_CONFIG,
     idf_weights: list | None = None,
 ) -> PipelineResult:
-    """records → melted/unique_strings/record_field_hashes → embeddings
-    (the shared prefix of both mainline plans and of incremental ingest).
+    """records → the row-wise record table + IDF weights (the shared prefix
+    of both mainline plans and of incremental ingest).
 
-    The per-record representation is the narrow hash-wide table; vectors
-    stay keyed by unique hash in the staged matrix that featurization
-    (pair_features_hashed) gathers from.  Given `idf_weights` (a model's
-    frozen train-time weights), the vectors are embedded under them instead
-    of under `corpus_idf_weights` of these records."""
+    Given `idf_weights` (a model's frozen train-time weights), the kernel
+    embeds under them; else, with IDF on, under the corpus weights of
+    these records."""
     from pyspark import StorageLevel
 
     records = records.persist(StorageLevel.MEMORY_AND_DISK)
-    melted = P.melt_fields(records).persist(StorageLevel.MEMORY_AND_DISK)
-    uniq = P.unique_strings(melted).persist(StorageLevel.MEMORY_AND_DISK)
-    rfh = P.record_field_hashes(melted).persist(StorageLevel.MEMORY_AND_DISK)
-
-    # The entire vector build — IDF agg, embed-UDF plan, persist
-    # materialization — runs in a BACKGROUND thread: the blocking/candidate
-    # phase that follows prepare() in the dedup plan never reads vectors,
-    # so these jobs overlap it instead of serializing in front of the
-    # scoring stage's first action (guide-style independent-job overlap).
-    # PipelineResult.embeddings/.idf_weights block on the future, so every
-    # consumer sees exactly the synchronous result; the persist is
-    # populated once and real failures re-raise at every consumer.
-    from concurrent.futures import ThreadPoolExecutor
-
-    def _build_emb():
-        weights = idf_weights
-        if weights is None and cfg.embedding.use_idf:
-            weights = E.corpus_idf_weights(melted, cfg.embedding)
-        emb = E.embed_unique_strings(melted, cfg.embedding, weights=weights).persist(
-            StorageLevel.MEMORY_AND_DISK
-        )
-        emb.count()  # pre-materialize while off the critical path
-        # pre-stage the scoring matrix too: it depends only on the (now
-        # materialized) vector table, so the staging job also overlaps
-        # blocking instead of heading the scoring window
-        return emb, weights, FE.stage_vector_matrix(emb)
-
-    pool = ThreadPoolExecutor(max_workers=1)
-    fut = pool.submit(_build_emb)
-    pool.shutdown(wait=False)
-    return PipelineResult(records, melted, uniq, rfh, emb_future=fut)
+    table = P.record_table(records).persist(StorageLevel.MEMORY_AND_DISK)
+    idf: Future | list | None = idf_weights
+    if idf is None and cfg.embedding.use_idf:
+        # The IDF document-frequency pass (which also materializes the
+        # table) runs in a BACKGROUND thread: the blocking/candidate phase
+        # that follows prepare() in the dedup plan never reads it, so it
+        # overlaps blocking instead of heading the scoring stage.
+        pool = ThreadPoolExecutor(max_workers=1)
+        idf = pool.submit(E.corpus_idf_weights, table, cfg.embedding)
+        pool.shutdown(wait=False)
+    return PipelineResult(records, table, cfg.embedding, idf)
 
 
 def featurize_pairs(
@@ -175,8 +147,8 @@ def featurize_pairs(
     from pyspark import StorageLevel
 
     feats = FE.pair_features_hashed(
-        pairs, prep.record_field_hashes, prep.unique_strings, prep.embeddings,
-        staged=prep.staged,
+        pairs, prep.record_field_hashes,
+        weights=prep.idf_weights, embedding=prep.embedding,
     )
     # consumers run several actions (scaler agg, collect, scoring); in the
     # stage-table pipeline this is the stage's parquet write
@@ -190,8 +162,8 @@ def score_pairs(
     PREDICTIONS out (see features.pair_predictions_hashed).  `cfg` is
     unused; the CLI, ingest and perfbench pass it."""
     return FE.pair_predictions_hashed(
-        pairs, prep.record_field_hashes, prep.unique_strings, prep.embeddings,
-        model, staged=prep.staged,
+        pairs, prep.record_field_hashes, None, None, model,
+        weights=prep.idf_weights, embedding=prep.embedding,
     )
 
 

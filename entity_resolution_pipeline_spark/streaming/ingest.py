@@ -103,11 +103,11 @@ def _batch_processor(
     reproduces byte-identical outputs instead of duplicating them.
 
     With `model`, each batch also scores its new candidate pairs: it runs
-    the batch prefix (plans.pipeline.prepare_records) over only the
-    accumulated records those pairs name, embedding under the FROZEN
-    train-time `idf_weights` (PipelineResult.idf_weights), then the fused
-    battery+LR stage, and frees that prefix once the predictions are
-    written.  No featurization table is kept across batches.  This is
+    the batch prefix (plans.pipeline.prepare_records: the row-wise record
+    table) over only the accumulated records those pairs name, then the
+    fused battery+LR stage, which embeds under the FROZEN train-time
+    `idf_weights` (PipelineResult.idf_weights), and frees that prefix once
+    the predictions are written.  No featurization table is kept across batches.  This is
     incremental ER minus the global clustering fixpoint, which stays a
     batch job over the accumulated predictions."""
     rec_root = os.path.join(out_dir, "records")

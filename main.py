@@ -125,12 +125,10 @@ def run(args: argparse.Namespace, stop_spark: bool = True) -> None:
         return M.read_stage_table(spark, out, stage)
 
     def prepared():
-        # the library's train/score composition over the stage tables; the
-        # caller releases it once the stage output is written
-        return PL.PipelineResult(
-            table("extract"), table("preprocess"), table("unique_strings"),
-            table("record_field_hashes"), embeddings=table("embed"),
-        )
+        # the library's prefix over the extract stage table, for its
+        # train/score composition; the caller releases it once the stage
+        # output is written
+        return PL.prepare_records(table("extract"), cfg)
 
     if should_run("extract"):
         pages = I.read_pages(spark, args.pages)
@@ -141,10 +139,7 @@ def run(args: argparse.Namespace, stop_spark: bool = True) -> None:
         melted = P.melt_fields(records).persist()
         write(melted, "preprocess")
         write(P.unique_strings(melted), "unique_strings")
-        # bucketed on the predict-join key: pairs ⋈ rfh(left/right) then
-        # reads the co-located table in the same run
-        write(P.record_field_hashes(melted), "record_field_hashes",
-              bucket_by=("record_id",), num_buckets=16)
+        write(P.record_table(records), "record_field_hashes")
         write(P.field_hash_mapping(melted), "field_hash_mapping")
 
     if should_run("embed"):

@@ -82,15 +82,17 @@ def test_blocking_recall_on_labeled_positives(fixture):
     assert found / total >= 0.999, (found, total)
 
 
-def test_failed_vector_build_raises_at_every_consumer():
-    """A failed background vector build must surface at EVERY accessor, not
-    only the first: later reads of .staged / .idf_weights must not silently
-    return None."""
+def test_failed_idf_build_raises_at_every_consumer():
+    """A failed background IDF build must surface at EVERY consumer, not
+    only the first: later reads of .idf_weights / .staged and scoring
+    must not silently go on without weights."""
     from concurrent.futures import Future
 
     fut = Future()
-    fut.set_exception(RuntimeError("vector build failed"))
-    res = PL.PipelineResult(None, None, None, None, emb_future=fut)
-    for prop in ("embeddings", "staged", "idf_weights"):
-        with pytest.raises(RuntimeError, match="vector build failed"):
+    fut.set_exception(RuntimeError("idf build failed"))
+    res = PL.PipelineResult(None, None, None, fut)
+    for prop in ("idf_weights", "staged", "idf_weights"):
+        with pytest.raises(RuntimeError, match="idf build failed"):
             getattr(res, prop)
+    with pytest.raises(RuntimeError, match="idf build failed"):
+        PL.score_pairs(None, res, None)

@@ -42,6 +42,37 @@ def prep(spark):
     return melted, uniq, rfh, vectors, pairs
 
 
+def test_record_table_equals_melt_pivot(spark):
+    """The one-pass row-wise record table equals the melt → normalize/hash
+    → pivot it replaces, sentinels and NULL values included, on fixture
+    records plus hand-made missing, null-token and whitespace-only fields.
+    The one difference: a record with no field at all melts to no rows, so
+    the pivot drops it, while the record table keeps it (its pairs are
+    scored, on sentinels only, instead of vanishing from the join)."""
+    from entity_resolution_pipeline_spark.operators.extract import extract_records
+
+    records = extract_records(synth.pages_df(spark, 200))
+    odd = spark.createDataFrame(
+        [
+            ("odd#1", "u1", None, None, None, None, None, None),
+            ("odd#2", "u2", "  ", "NULL", "   ", "N/A", "  a\t b ", "x  y"),
+            ("odd#3", "u3", "c", "Doe,  Jane (1900-1980)", " r ", "", None, "s"),
+        ],
+        records.schema,
+    )
+    records = records.unionByName(odd)
+
+    def rows(df):
+        assert df.columns == list(P.RECORD_TABLE_COLUMNS)
+        return sorted(map(tuple, df.collect()))
+
+    table = rows(P.record_table(records))
+    assert ("odd#1", None, "NULL", "NULL", "NULL", "NULL", None, *[None] * 6) in table
+    assert [r for r in table if r[0] != "odd#1"] == rows(
+        P.record_field_hashes(P.melt_fields(records))
+    )
+
+
 def test_hashed_equals_wide_row_battery(prep):
     melted, uniq, rfh, vectors, pairs = prep
     old = FE.pair_features(
@@ -98,8 +129,9 @@ def test_fused_scoring_matches_unfused(prep):
 
 def test_feature_config_has_no_path_switches():
     """One featurization path and one fixed battery: the old path switch is
-    a read-only constant, neither it nor a staging root can be set, and
-    neither feature section has a settable value."""
+    a read-only constant (False: nothing is staged or broadcast), neither
+    it nor a staging root can be set, and neither feature section has a
+    settable value."""
     import dataclasses
 
     from entity_resolution_pipeline_spark.config import (
@@ -108,7 +140,7 @@ def test_feature_config_has_no_path_switches():
     )
 
     cfg = DEFAULT_CONFIG.features
-    assert cfg.broadcast_vectors is True
+    assert cfg.broadcast_vectors is False
     for name in ("broadcast_vectors", "stage_root"):
         with pytest.raises(TypeError):
             dataclasses.replace(cfg, **{name: None})

@@ -349,3 +349,17 @@ def test_scan_covers_the_callers():
         ),
     )
     assert seen == 2 and len(errors) == 1 and "no_such_knob" in errors[0], errors
+
+
+def test_no_host_local_staging_root():
+    """Defaults must not depend on host-local storage: no package module
+    reads a staging-root variable or names the shared-memory mount."""
+    shm = "/dev/" + "shm"
+    offenders = []
+    for f in FILES:
+        if not f.startswith(PKG + os.sep):
+            continue
+        with open(os.path.join(ROOT, f), encoding="utf-8") as fh:
+            text = fh.read()
+        offenders += [f"{f}: {w}" for w in ("ERX_STAGE_ROOT", shm) if w in text]
+    assert not offenders, offenders

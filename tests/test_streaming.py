@@ -232,28 +232,23 @@ def trained(spark):
     return prep.model, prep.idf_weights
 
 
-def test_incremental_scoring_frees_staged_matrices(spark, tmp_path, monkeypatch, trained):
-    """Each scored micro-batch stages only the vectors of the records its new
-    pairs name, once, and removes them after writing its predictions:
-    nothing is left under the staging root after a drain, and no
-    featurization table is kept across batches."""
-    from entity_resolution_pipeline_spark.operators import features as FE
+def test_incremental_scoring_builds_only_touched_records(spark, tmp_path, monkeypatch, trained):
+    """Each scored micro-batch builds the record table of only the records
+    its new pairs name, once, and keeps no featurization table across
+    batches."""
     from entity_resolution_pipeline_spark.operators import preprocess as P
 
     model, weights = trained
     tmp = str(tmp_path)
-    stage_root = os.path.join(tmp, "stage")
-    os.makedirs(stage_root)
-    monkeypatch.setenv("ERX_STAGE_ROOT", stage_root)
-    index_sizes = []
-    stage = FE.stage_vector_matrix
+    table_rows = []
+    build = P.record_table
 
-    def recording_stage(*args, **kwargs):
-        staged = stage(*args, **kwargs)
-        index_sizes.append(len(staged[0]))
-        return staged
+    def recording_build(records):
+        table = build(records)
+        table_rows.append(table.count())
+        return table
 
-    monkeypatch.setattr(FE, "stage_vector_matrix", recording_stage)
+    monkeypatch.setattr(P, "record_table", recording_build)
     out = os.path.join(tmp, "out")
     in_path = _write_pages(spark, tmp, "b0", 0, 60)
     _write_pages(spark, tmp, "b1", 60, 120)
@@ -266,27 +261,18 @@ def test_incremental_scoring_frees_staged_matrices(spark, tmp_path, monkeypatch,
     batches = [r["stage"] for r in read_manifest(spark, out).collect()]
     assert len([s for s in batches if s.startswith("stream_ingest_batch_")]) == 2
     assert read_accumulated(spark, out, "predictions").count() > 0
-    left = [d for d in os.listdir(stage_root) if d.startswith("erx-vecmat-")]
-    assert left == []
-
-    def embeddable_hashes(records) -> int:
-        return (
-            P.melt_fields(records)
-            .where(F.col("field").isin(*DEFAULT_CONFIG.embedding.fields_to_embed))
-            .select("hash").distinct().count()
-        )
 
     records = read_accumulated(spark, out, "records")
     pairs = spark.read.parquet(os.path.join(out, "candidates", "ingest_batch=1"))
     named = pairs.select(F.col("left_id").alias("record_id")).union(
         pairs.select(F.col("right_id").alias("record_id"))
     )
-    touched = embeddable_hashes(records.join(named, "record_id", "left_semi"))
-    assert len(index_sizes) == 2
-    assert index_sizes[1] == touched
-    assert touched < embeddable_hashes(records)
-    # no featurization table (record_field_hashes, unique_strings,
-    # embeddings) outlives its micro-batch
+    touched = records.join(named, "record_id", "left_semi").count()
+    assert len(table_rows) == 2
+    assert table_rows[1] == touched
+    assert touched < records.count()
+    # no featurization table (record table, unique_strings, embeddings)
+    # outlives its micro-batch
     assert sorted(os.listdir(out)) == [
         "_manifest", "_stream_checkpoint", "candidates", "membership", "predictions", "records",
     ]
