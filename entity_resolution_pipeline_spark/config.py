@@ -40,7 +40,6 @@ class EmbeddingConfig:
     # in the scoring kernel (the per-task embedding bincount, the unit-row
     # memo, the per-pair cosine dots) scales linearly with width.
     char_ngram: int = 4            # character shingle width for the hashed projection
-    fields_to_embed: tuple[str, ...] = EMBED_FIELDS
     use_idf: bool = True           # IDF-weight hash buckets by corpus document
     # frequency (one extra agg over unique strings + a dim-float broadcast):
     # downweights shared boilerplate so cosine measures distinctive overlap
@@ -63,7 +62,6 @@ class BlockingConfig:
     max_block_size: int = 2000     # per-block member cap (SURVEY.md §7 risk 3):
     # over-cap keys are non-discriminative "stop keys", dropped by batch and
     # incremental blocking alike and counted in stage metrics; recall/cost knob
-    also_exact_name_key: bool = True  # add a normalized-name exact block key
 
 
 @dataclass(frozen=True)
@@ -84,26 +82,23 @@ class FeatureSelectionConfig:
 @dataclass(frozen=True)
 class ClassifierConfig:
     """Logistic regression, mini-batch GD (reference classification.py:456-536,
-    hyper-parameters config.yml:196-206)."""
+    hyper-parameters config.yml:196-206): L2-regularized, balanced class
+    weights."""
 
-    regularization: str = "l2"
     regularization_strength: float = 1.0
     learning_rate: float = 0.01
     max_iterations: int = 1000
     convergence_tolerance: float = 1e-4
     batch_size: int = 1000
-    class_weight: str = "balanced"
-    decision_threshold: float = 0.95
-    # Threshold sweep (reference classification.py:576-601, W5 in SURVEY.md
-    # §2.5).  The reference sweeps np.linspace(0.1,0.9,9) ON THE TEST SET and
-    # mutates decision_threshold mid-eval (flagged bug, SURVEY.md §7 item 7);
-    # we sweep a finer grid on the TRAIN split only, ties broken toward the
+    # The decision threshold is the F1-maximizing point of this grid
+    # (reference classification.py:576-601, W5 in SURVEY.md §2.5).  The
+    # reference sweeps np.linspace(0.1,0.9,9) ON THE TEST SET and mutates
+    # decision_threshold mid-eval (flagged bug, SURVEY.md §7 item 7); we
+    # sweep a finer grid on the TRAIN split only, ties broken toward the
     # higher (more precise) threshold.
-    tune_threshold: bool = True
     threshold_grid_start: float = 0.05
     threshold_grid_stop: float = 0.95
     threshold_grid_steps: int = 19
-    threshold_metric: str = "f1"
     train_test_split: float = 0.7              # config.yml:22
     random_seed: int = 42                      # config.yml:15
 

@@ -60,12 +60,11 @@ def block_membership(
     # two exchanges (distinct + join-back) the dedup needs — recompute beats
     # shuffle for cheap-per-row pure functions at any scale, since this
     # formulation ships zero bytes before the block-key exchange.
-    keys = band_udf(minhash_udf("block_base"))
-    if cfg.also_exact_name_key:
-        keys = F.concat(
-            keys,
-            F.array(F.concat(F.lit("x:"), F.xxhash64("block_base").cast("string"))),
-        )
+    # the LSH band keys plus one exact key on the normalized name
+    keys = F.concat(
+        band_udf(minhash_udf("block_base")),
+        F.array(F.concat(F.lit("x:"), F.xxhash64("block_base").cast("string"))),
+    )
     return keyed.select("id", F.explode(keys).alias("block_key"))
 
 

@@ -81,13 +81,9 @@ def train_lr(X: np.ndarray, y: np.ndarray, cfg: ClassifierConfig) -> tuple[np.nd
     n_features = X.shape[1]
     weights = np.zeros(n_features)
     bias = 0.0
-    if cfg.class_weight == "balanced":
-        class_counts = np.maximum(np.bincount(y.astype(int), minlength=2), 1)
-        total = len(y)
-        class_weights = {0: total / (2 * class_counts[0]), 1: total / (2 * class_counts[1])}
-    else:
-        class_weights = {0: 1.0, 1: 1.0}
-    cw = np.array([class_weights[0], class_weights[1]])
+    # balanced class weights: total / (2 · class count)
+    class_counts = np.maximum(np.bincount(y.astype(int), minlength=2), 1)
+    cw = len(y) / (2 * class_counts)
 
     prev_loss = float("inf")
     for _ in range(cfg.max_iterations):
@@ -102,10 +98,7 @@ def train_lr(X: np.ndarray, y: np.ndarray, cfg: ClassifierConfig) -> tuple[np.nd
             d_pred = (preds - by) * sw
             d_w = bX.T @ d_pred / len(by)
             d_b = float(np.mean(d_pred))
-            if cfg.regularization == "l2":
-                d_w += (cfg.regularization_strength * weights) / len(by)
-            elif cfg.regularization == "l1":
-                d_w += (cfg.regularization_strength * np.sign(weights)) / len(by)
+            d_w += (cfg.regularization_strength * weights) / len(by)  # L2
             weights -= cfg.learning_rate * d_w
             bias -= cfg.learning_rate * d_b
         avg_loss = float(np.mean(batch_losses))
@@ -180,15 +173,15 @@ def feature_importance(model: LRModel) -> dict[str, dict[str, float]]:
 
 
 def tune_threshold(y_true: np.ndarray, probs: np.ndarray, cfg: ClassifierConfig) -> float:
-    """Threshold sweep argmax (reference classification.py:576-601), run on
-    the TRAIN split (the reference tunes on test — not replicated).  Ties go
-    to the HIGHER threshold: same F1, stricter match bar."""
+    """F1-maximizing threshold sweep (reference classification.py:576-601),
+    run on the TRAIN split (the reference tunes on test — not replicated).
+    Ties go to the HIGHER threshold: same F1, stricter match bar."""
     grid = np.linspace(
         cfg.threshold_grid_start, cfg.threshold_grid_stop, cfg.threshold_grid_steps
     )
-    best_t, best_m = cfg.decision_threshold, -1.0
+    best_t, best_m = None, -1.0
     for t in grid:
-        m = evaluate(y_true, probs, float(t))[cfg.threshold_metric]
+        m = evaluate(y_true, probs, float(t))["f1"]
         if m >= best_m:
             best_m, best_t = m, float(t)
     return best_t
@@ -259,9 +252,7 @@ def fit(features_df: DataFrame, feature_cols: list[str], cfg: ClassifierConfig) 
     ids = (pdf["left_id"] + "|" + pdf["right_id"]).tolist()
     Xtr, ytr, _, Xte, yte, _ = train_test_split(X, y, ids, cfg)
     weights, bias = train_lr(Xtr, ytr, cfg)
-    threshold = cfg.decision_threshold
-    if cfg.tune_threshold:
-        threshold = tune_threshold(ytr, sigmoid(Xtr @ weights + bias), cfg)
+    threshold = tune_threshold(ytr, sigmoid(Xtr @ weights + bias), cfg)
     model = LRModel(
         weights=weights,
         bias=bias,

@@ -12,8 +12,9 @@ component roots are deterministic at any parallelism (SURVEY.md §7 risk 4).
 Each iteration localCheckpoints to truncate lineage (otherwise the plan
 doubles every round and the driver OOMs planning iteration ~20).
 
-Edge threshold + min-cluster-size filters mirror classification.py:871-876,
-938 (config.yml:211,214).
+The edge threshold mirrors classification.py:871-876 (config.yml:211).
+Every record keeps its cluster: there is no minimum cluster size, and
+unmatched records come back as singletons.
 """
 
 from __future__ import annotations

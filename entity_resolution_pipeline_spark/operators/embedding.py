@@ -6,9 +6,9 @@ projection (functions/embed.py).  The pipeline embeds inside the fused
 scoring kernel (features.py), once per distinct string per task, so no
 vector table is built on a pass.  This module holds the one corpus-level
 computation, the IDF weights, and `embed_unique_strings`, the (hash,
-embedding) table of the CLI's embed stage — one row per distinct string,
-keeping the reference's embed-each-unique-string-once optimization
-(embedding.py:106-119).
+embedding) table that no pass builds and perfbench's traced pass still
+does — one row per distinct string, keeping the reference's
+embed-each-unique-string-once optimization (embedding.py:106-119).
 """
 
 from __future__ import annotations
@@ -18,7 +18,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..config import EmbeddingConfig
+from ..config import EMBED_FIELDS, EmbeddingConfig
 
 
 def _embeddable_strings(table: DataFrame, cfg: EmbeddingConfig) -> DataFrame:
@@ -26,7 +26,7 @@ def _embeddable_strings(table: DataFrame, cfg: EmbeddingConfig) -> DataFrame:
     from the row-wise record table (preprocess.record_table) or from melted
     rows, which perfbench still passes."""
     if "field" in table.columns:
-        strings = table.where(F.col("field").isin(*cfg.fields_to_embed)).select(
+        strings = table.where(F.col("field").isin(*EMBED_FIELDS)).select(
             "hash", F.col("value_norm").alias("value")
         )
     else:
@@ -34,7 +34,7 @@ def _embeddable_strings(table: DataFrame, cfg: EmbeddingConfig) -> DataFrame:
             F.explode(
                 F.array(*[
                     F.struct(F.col(f).alias("hash"), F.col(f"{f}_value").alias("value"))
-                    for f in cfg.fields_to_embed
+                    for f in EMBED_FIELDS
                 ])
             ).alias("s")
         ).select("s.*").where(F.col("value").isNotNull())
@@ -87,7 +87,7 @@ def embed_unique_strings(
     # distribution the dedup needs (no extra exchange) while pinning the
     # downstream embed-UDF stage to half-width (config.python_stage_width)
     distinct_strings = (
-        melted.where(F.col("field").isin(*cfg.fields_to_embed))
+        melted.where(F.col("field").isin(*EMBED_FIELDS))
         .select("hash", "value_norm")
         .repartition(python_stage_width(melted.sparkSession), "hash")
         .dropDuplicates(["hash"])

@@ -249,7 +249,6 @@ def _fused_battery_udf(
     batch is also LR-scored."""
     out_cols = [f.name for f in out_schema.fields]
     dim, ngram = embedding.dimensions, embedding.char_ngram
-    embedded = [f for f in EMBED_FIELDS if f in embedding.fields_to_embed]
     w = None if weights is None else np.asarray(weights, dtype=np.float64)
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -298,7 +297,7 @@ def _fused_battery_udf(
                 continue
             new = {
                 v: None
-                for f in embedded for p in "lr"
+                for f in EMBED_FIELDS for p in "lr"
                 for v in pdf[f"{p}_{f}"].dropna().unique() if v not in row_of
             }
             if new:
@@ -319,13 +318,11 @@ def _fused_battery_udf(
             out: dict[str, np.ndarray] = {}
             for f in EMBED_FIELDS:
                 sims = np.zeros(n, dtype=np.float32)
-                ok = np.zeros(n, dtype=bool)
-                if f in embedded:
-                    li, ri = _rows(pdf[f"l_{f}"]), _rows(pdf[f"r_{f}"])
-                    # only MISSING fields (ok False) are 0.0
-                    ok = (li >= 0) & (ri >= 0)
-                    if ok.any():
-                        sims[ok] = np.einsum("ij,ij->i", unit[li[ok]], unit[ri[ok]])
+                li, ri = _rows(pdf[f"l_{f}"]), _rows(pdf[f"r_{f}"])
+                # only MISSING fields (ok False) are 0.0
+                ok = (li >= 0) & (ri >= 0)
+                if ok.any():
+                    sims[ok] = np.einsum("ij,ij->i", unit[li[ok]], unit[ri[ok]])
                 ncos = (sims.astype(np.float64) + 1.0) / 2.0
                 out[f"{f}_cosine"] = np.where(ok, ncos, 0.0)
                 if f == "composite":

@@ -1,5 +1,5 @@
-"""records → the row-wise record table (record_field_hashes), plus the
-melted field values, unique_strings and field_hash_mapping.
+"""records → the row-wise record table, plus the melted field values and
+unique_strings.
 
 Re-expresses the reference's preprocessing stage (batch_parallel_preprocessing
 .py:244-383: ProcessPoolExecutor per record, dict merges) as declarative
@@ -7,20 +7,21 @@ dataflow:
 
 * record_table — ONE Arrow pass over the records: per record, the
   normalized value and hash of each of the 6 fields, and the year-stripped
-  person name.  This is the table featurization joins pairs against
+  person name.  This is the table featurization joins pairs against, in
+  the library, the CLI and ingest alike (plans/pipeline.prepare_records)
 * melt — stack the 6 field columns to (record_id, field, value) rows, then
-  normalize+hash in one Arrow pass (the CLI's stage table and the parity
-  oracle `record_field_hashes(melted)`)
-* unique_strings — groupBy(hash) with map-side combine (the reference's
-  manual local-dict merge, preprocessing.py:279-295, is exactly Spark's
-  partial+final hash aggregate — free)
+  normalize+hash in one Arrow pass.  No pass runs it: it feeds the parity
+  oracle `record_field_hashes(melted)` and perfbench's traced pass
+* unique_strings — groupBy(hash) over melted rows with map-side combine
+  (the reference's manual local-dict merge, preprocessing.py:279-295, is
+  exactly Spark's partial+final hash aggregate — free)
 
 Reference semantics preserved:
 * the 5 embed fields are whitespace-normalized before hashing
   (preprocessing.py:396-400); `roles` is hashed RAW (preprocessing.py:345-352)
 * missing person/title/provision/subjects → literal "NULL" hash sentinel
   (preprocessing.py:342); missing composite/roles → absent (NULL here)
-* `roles` never enters field_hash_mapping (preprocessing.py:344-352)
+* `roles` is hashed but never embedded (preprocessing.py:344-352)
 """
 
 from __future__ import annotations
@@ -65,15 +66,6 @@ def unique_strings(melted: DataFrame) -> DataFrame:
     string_counts, merged into one table)."""
     return melted.groupBy("hash").agg(
         F.first("value_norm").alias("value"), F.count("*").alias("count")
-    )
-
-
-def field_hash_mapping(melted: DataFrame) -> DataFrame:
-    """(hash, field, count) over the 5 embed fields only."""
-    return (
-        melted.where(F.col("field").isin(*_NORMALIZED_FIELDS))
-        .groupBy("hash", "field")
-        .count()
     )
 
 

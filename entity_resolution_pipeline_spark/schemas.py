@@ -46,36 +46,6 @@ RECORDS = StructType(
     ]
 )
 
-# Dedup dictionary (reference unique_strings + string_counts merged,
-# preprocessing.py:279-295).
-UNIQUE_STRINGS = StructType(
-    [
-        StructField("hash", StringType(), False),
-        StructField("value", StringType(), True),
-        StructField("count", LongType(), False),
-    ]
-)
-
-# Which fields a string appears in (reference field_hash_mapping,
-# preprocessing.py:288-295).
-FIELD_HASH_MAPPING = StructType(
-    [
-        StructField("hash", StringType(), False),
-        StructField("field", StringType(), False),
-        StructField("count", LongType(), False),
-    ]
-)
-
-# One row per record, one hash column per field ("NULL" sentinel for missing,
-# preprocessing.py:342).
-RECORD_FIELD_HASHES = StructType(
-    [StructField("record_id", StringType(), False)]
-    + [
-        StructField(f, StringType(), True)
-        for f in ("composite", "person", "title", "provision", "subjects", "roles")
-    ]
-)
-
 # Labeled ground-truth pairs (reference data/ground_truth/labeled_matches.csv,
 # querying.py:277-290).
 LABELED_PAIRS = StructType(

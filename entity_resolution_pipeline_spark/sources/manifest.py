@@ -99,8 +99,6 @@ def write_stage_table(
     base_dir: str,
     stage: str,
     metrics: dict[str, float] | None = None,
-    bucket_by: tuple[str, ...] | None = None,
-    num_buckets: int = 16,
 ) -> DataFrame:
     """Write a stage output table + per-partition lineage rows + the stage
     summary row; return the re-read DataFrame (so downstream plans read from
@@ -109,34 +107,11 @@ def write_stage_table(
     The summary row (partition_id = -1, status = 'complete') is written LAST:
     resume treats the stage as complete only when it exists, so an
     interrupted write — even one that produced some partition rows — re-runs.
-
-    ``bucket_by``: hash-bucket the table on the given columns (Spark
-    `bucketBy` + `sortBy`) and register it in the session catalog as
-    ``erx_<stage>``.  Two tables bucketed on their join key with the same
-    bucket count join with NO exchange on either side — the co-location
-    lever for repeatedly-joined stage tables (pairs ⋈ record_field_hashes).
-    The session catalog here is in-memory, so bucket METADATA lives for the
-    session; production deployments point this at a persistent catalog
-    (Hive metastore / Iceberg bucket partition transforms) for cross-job
-    reuse.  The parquet files themselves are readable either way.
     """
     spark = df.sparkSession
     path = os.path.join(base_dir, stage)
-    if bucket_by:
-        table = f"erx_{stage}".replace("/", "_").replace("-", "_")
-        spark.sql(f"DROP TABLE IF EXISTS {table}")
-        (
-            df.write.mode("overwrite")
-            .format("parquet")
-            .option("path", path)
-            .bucketBy(num_buckets, *bucket_by)
-            .sortBy(*bucket_by)
-            .saveAsTable(table)
-        )
-        out = spark.table(table)
-    else:
-        df.write.mode("overwrite").parquet(path)
-        out = spark.read.parquet(path)
+    df.write.mode("overwrite").parquet(path)
+    out = spark.read.parquet(path)
     total = record_partitions(spark, base_dir, f"{stage}/partitions", out)
     record_stage(spark, base_dir, stage, rows=total, metrics=metrics)
     return out

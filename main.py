@@ -6,12 +6,15 @@ dispatch, pipeline.py:66-120 stage sequence) on Spark: each stage reads its
 inputs from the previous stage's table, writes its output table + a manifest
 lineage row, and `--resume` skips stages whose manifest row is complete.
 
-Stages (in order): extract → preprocess → embed → block → train → predict
-→ cluster → report.  `--stage all` runs the full sequence.  `predict` runs
-the fused battery+scoring path (one Python stage; the per-pair feature
-table never materializes).  `--stage ingest` runs the incremental
-Structured Streaming ingest instead of the batch stages (exactly-once per
-input file; see streaming/ingest.py).
+Stages (in order): extract → block → train → predict → cluster → report.
+`--stage all` runs the full sequence.  Each stage is a stage-table wrapper
+around the calls `plans/pipeline.run_dedup` makes: `train` and `predict`
+train and score over the library's shared prefix (`PL.prepare_records`
+over the extract table), built once per run and released after the last
+stage that scores.  `predict` runs the fused battery+scoring path (one
+Python stage; the per-pair feature table never materializes).
+`--stage ingest` runs the incremental Structured Streaming ingest instead
+of the batch stages (exactly-once per input file; see streaming/ingest.py).
 
 Usage:
   spark-submit --py-files erx.zip main.py --pages /data/pages --out /work \
@@ -28,16 +31,7 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-STAGES = (
-    "extract",
-    "preprocess",
-    "embed",
-    "block",
-    "train",
-    "predict",
-    "cluster",
-    "report",
-)
+STAGES = ("extract", "block", "train", "predict", "cluster", "report")
 
 
 def build_spark(app: str, shuffle_partitions: int | None = None):
@@ -56,9 +50,7 @@ def run(args: argparse.Namespace, stop_spark: bool = True) -> None:
     from entity_resolution_pipeline_spark.operators import blocking as B
     from entity_resolution_pipeline_spark.operators import classify as C
     from entity_resolution_pipeline_spark.operators import cluster as G
-    from entity_resolution_pipeline_spark.operators import embedding as E
     from entity_resolution_pipeline_spark.operators import extract as X
-    from entity_resolution_pipeline_spark.operators import preprocess as P
     from entity_resolution_pipeline_spark.plans import pipeline as PL
     from entity_resolution_pipeline_spark.plans import reporting as R
     from entity_resolution_pipeline_spark.sources import inputs as I
@@ -103,12 +95,12 @@ def run(args: argparse.Namespace, stop_spark: bool = True) -> None:
     wanted = STAGES if args.stage == "all" else (args.stage,)
 
     def should_run(stage: str) -> bool:
-        if stage not in wanted and args.stage != "all":
+        if stage not in wanted:
             return False
         if args.resume and M.stage_complete(spark, out, stage):
             print(f"[resume] skipping complete stage: {stage}")
             return False
-        return stage in wanted
+        return True
 
     produced: dict = {}
 
@@ -117,34 +109,25 @@ def run(args: argparse.Namespace, stop_spark: bool = True) -> None:
         return produced[stage]
 
     def table(stage: str):
-        # same-run outputs are reused as returned by write_stage_table —
-        # for bucketed stages that's the catalog-backed DataFrame, so
-        # downstream joins on the bucket key skip their Exchange
+        # same-run outputs are reused as returned by write_stage_table (the
+        # re-read parquet table)
         if stage in produced:
             return produced[stage]
         return M.read_stage_table(spark, out, stage)
 
+    prep = None
+
     def prepared():
-        # the library's prefix over the extract stage table, for its
-        # train/score composition; the caller releases it once the stage
-        # output is written
-        return PL.prepare_records(table("extract"), cfg)
+        # the library's prefix over the extract stage table, built by the
+        # first stage that trains or scores and shared by the next
+        nonlocal prep
+        if prep is None:
+            prep = PL.prepare_records(table("extract"), cfg)
+        return prep
 
     if should_run("extract"):
         pages = I.read_pages(spark, args.pages)
         write(X.extract_records(pages), "extract")
-
-    if should_run("preprocess"):
-        records = table("extract")
-        melted = P.melt_fields(records).persist()
-        write(melted, "preprocess")
-        write(P.unique_strings(melted), "unique_strings")
-        write(P.record_table(records), "record_field_hashes")
-        write(P.field_hash_mapping(melted), "field_hash_mapping")
-
-    if should_run("embed"):
-        melted = table("preprocess")
-        write(E.embed_unique_strings(melted, cfg.embedding), "embed")
 
     if should_run("block"):
         records = table("extract")
@@ -154,30 +137,33 @@ def run(args: argparse.Namespace, stop_spark: bool = True) -> None:
         _, hot = B.prune_hot_blocks(membership, cfg.blocking)
         n_hot = hot.count()
         cands = B.candidate_pairs(membership, cfg.blocking)
-        write(cands, "block", metrics={"hot_blocks_dropped": float(n_hot)},
-              bucket_by=("left_id",), num_buckets=16)
+        write(cands, "block", metrics={"hot_blocks_dropped": float(n_hot)})
         membership.unpersist()
 
-    if should_run("train"):
-        if not args.labeled_pairs:
-            raise SystemExit("--labeled-pairs is required for the train stage")
-        prep = prepared()
-        model, metrics = PL.train(I.read_labeled_pairs(spark, args.labeled_pairs), prep, cfg)
-        prep.release()
-        with open(os.path.join(out, "model.pkl"), "wb") as f:
-            pickle.dump(model, f)
-        with open(os.path.join(out, "classification_metrics.json"), "w") as f:
-            json.dump(metrics, f, indent=2, default=float)
-        M.record_stage(spark, out, "train", rows=metrics["n_train"] + metrics["n_test"],
-                       metrics={"f1": metrics["f1"], "precision": metrics["precision"]})
-        print(json.dumps({k: metrics[k] for k in ("precision", "recall", "f1")}, indent=1))
+    try:
+        if should_run("train"):
+            if not args.labeled_pairs:
+                raise SystemExit("--labeled-pairs is required for the train stage")
+            model, metrics = PL.train(
+                I.read_labeled_pairs(spark, args.labeled_pairs), prepared(), cfg
+            )
+            with open(os.path.join(out, "model.pkl"), "wb") as f:
+                pickle.dump(model, f)
+            with open(os.path.join(out, "classification_metrics.json"), "w") as f:
+                json.dump(metrics, f, indent=2, default=float)
+            M.record_stage(spark, out, "train", rows=metrics["n_train"] + metrics["n_test"],
+                           metrics={"f1": metrics["f1"], "precision": metrics["precision"]})
+            print(json.dumps({k: metrics[k] for k in ("precision", "recall", "f1")}, indent=1))
 
-    if should_run("predict"):
-        with open(os.path.join(out, "model.pkl"), "rb") as f:
-            model = pickle.load(f)
-        prep = prepared()
-        write(PL.score_pairs(table("block"), prep, model, cfg), "predict")
-        prep.release()
+        if should_run("predict"):
+            with open(os.path.join(out, "model.pkl"), "rb") as f:
+                model = pickle.load(f)
+            write(PL.score_pairs(table("block"), prepared(), model, cfg), "predict")
+    finally:
+        # predict is the last stage that scores; release() also re-raises a
+        # failed background IDF build
+        if prep is not None:
+            prep.release()
 
     if should_run("cluster"):
         preds = table("predict")

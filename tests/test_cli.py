@@ -41,23 +41,75 @@ def fixture_dirs(spark, tmp_path):
     return pages_path, lp_path, out
 
 
+@pytest.fixture()
+def built_prefixes(monkeypatch):
+    """Every PipelineResult `PL.prepare_records` builds during the test."""
+    from entity_resolution_pipeline_spark.plans import pipeline as PL
+
+    built = []
+    real = PL.prepare_records
+
+    def counting(*a, **kw):
+        built.append(real(*a, **kw))
+        return built[-1]
+
+    monkeypatch.setattr(PL, "prepare_records", counting)
+    return built
+
+
 def test_cli_all_stages_and_resume(spark, fixture_dirs, capsys):
     pages_path, lp_path, out = fixture_dirs
+    assert _main.STAGES == ("extract", "block", "train", "predict", "cluster", "report")
     cli.run_keep(_args(pages=pages_path, labeled_pairs=lp_path, out=out))
-    # every stage table exists + manifest rows are complete
-    for stage in ("extract", "preprocess", "embed", "block", "train",
-                  "predict", "cluster", "report"):
+    # every stage's manifest row is complete
+    for stage in _main.STAGES:
         assert M.stage_complete(spark, out, stage), stage
-    # predict is fused: no per-pair feature table is ever written
-    assert not os.path.exists(os.path.join(out, "features"))
+    # only the stage outputs are written: no preprocess/embed tables and,
+    # since predict is fused, no per-pair feature table
+    assert sorted(os.listdir(out)) == sorted([
+        "_manifest", "extract", "block", "model.pkl", "classification_metrics.json",
+        "predict", "cluster", "pipeline_report.json", "pipeline_report.md", "report_html",
+    ])
     preds = M.read_stage_table(spark, out, "predict")
     assert preds.where("match").count() > 0
-    assert os.path.exists(os.path.join(out, "pipeline_report.json"))
 
     # resume: nothing re-runs
     cli.run_keep(_args(pages=pages_path, labeled_pairs=lp_path, out=out, resume=True))
     out_text = capsys.readouterr().out
-    assert out_text.count("[resume] skipping complete stage") >= 7
+    for stage in _main.STAGES:
+        assert f"[resume] skipping complete stage: {stage}\n" in out_text, stage
+    assert out_text.count("[resume] skipping complete stage") == len(_main.STAGES)
+
+
+def test_cli_builds_the_prefix_once(spark, fixture_dirs, built_prefixes):
+    """`--stage all` trains and scores over one shared prefix: train and
+    predict do not each rebuild the record table and the corpus IDF."""
+    pages_path, lp_path, out = fixture_dirs
+    cli.run_keep(_args(pages=pages_path, labeled_pairs=lp_path, out=out))
+    assert len(built_prefixes) == 1
+    # released after predict: neither prefix table is left cached
+    assert not built_prefixes[0].records.is_cached
+    assert not built_prefixes[0].record_field_hashes.is_cached
+
+
+def test_cli_releases_the_prefix_when_a_stage_fails(
+    spark, fixture_dirs, built_prefixes, monkeypatch
+):
+    """A train that raises still releases the shared prefix: the records
+    and the record table are not left persisted in the caller's session."""
+    from entity_resolution_pipeline_spark.plans import pipeline as PL
+
+    pages_path, lp_path, out = fixture_dirs
+
+    def failing_train(*a, **kw):
+        raise RuntimeError("train failed")
+
+    monkeypatch.setattr(PL, "train", failing_train)
+    with pytest.raises(RuntimeError, match="train failed"):
+        cli.run_keep(_args(pages=pages_path, labeled_pairs=lp_path, out=out))
+    assert len(built_prefixes) == 1
+    assert not built_prefixes[0].records.is_cached
+    assert not built_prefixes[0].record_field_hashes.is_cached
 
 
 def test_cli_ingest_stage(spark, fixture_dirs):

@@ -73,37 +73,6 @@ def test_interrupted_stage_reruns(spark, tmp_path):
     assert not M.stage_complete(spark, base, "s2")
 
 
-def test_bucketed_stage_table_joins_without_exchange(spark, tmp_path):
-    """Two stage tables bucketed on the join key with the same bucket count
-    must join with no Exchange on either side (the co-location lever)."""
-    from pyspark.sql import functions as F
-
-    from entity_resolution_pipeline_spark.sources import manifest as M
-
-    out = str(tmp_path)
-    a = spark.range(0, 1000).select(
-        F.col("id").alias("k"), (F.col("id") * 2).alias("va")
-    )
-    b = spark.range(0, 1000).select(
-        F.col("id").alias("k"), (F.col("id") * 3).alias("vb")
-    )
-    ta = M.write_stage_table(a, out, "bucket_a", bucket_by=("k",), num_buckets=8)
-    tb = M.write_stage_table(b, out, "bucket_b", bucket_by=("k",), num_buckets=8)
-    # disable broadcast so the sort-merge path (where bucketing applies) is
-    # chosen — at real stage-table sizes neither side broadcasts anyway
-    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        joined = ta.join(tb, "k")
-        plan = joined._jdf.queryExecution().executedPlan().toString()
-        assert "Exchange" not in plan, plan
-        assert joined.count() == 1000
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-    # resume protocol still intact for bucketed stages
-    assert M.stage_complete(spark, out, "bucket_a")
-
-
 def test_merge_stage_table_upsert_and_idempotency(spark, tmp_path):
     """MERGE semantics (S7): key-matched rows replaced, others kept;
     re-running the same merge yields a byte-identical table."""

@@ -269,6 +269,28 @@ def test_every_config_field_is_read():
     assert not unread, unread
 
 
+def test_settable_config_values():
+    """The count of settable config values: the leaf fields reachable from
+    PipelineConfig.  It only goes down.  A branch-selecting value that no
+    entry point, benchmark or test sets to anything but its default is
+    folded into code instead of kept as a knob."""
+    from entity_resolution_pipeline_spark.config import PipelineConfig
+
+    def leaves(cls):
+        for f in dataclasses.fields(cls):
+            if dataclasses.is_dataclass(f.default_factory):
+                yield from (f"{f.name}.{n}" for n in leaves(f.default_factory))
+            else:
+                yield f.name
+
+    found = sorted(leaves(PipelineConfig))
+    assert len(found) == 21, (
+        f"{len(found)} settable config values, expected 21: {found}.  A new "
+        "knob needs two existing callers that need different values; name "
+        "them in CHANGES.md and update this count."
+    )
+
+
 def test_perfbench_calls_bind():
     """Every `<package module alias>.<fn>(...)` call in the frozen
     benchmark binds to fn's current signature: the same number of
