@@ -1617,10 +1617,8 @@ def q_cluster_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-community Newman modularity decomposition of the connected-
     component partition over the jaccard-weighted near-dup graph (G4's
     quality metric as a first-class agg: Q = Σ_c [L_c/m − (d_c/2m)²]).
-    Pure hash aggs, no windows.  The Louvain operator itself
-    (cluster.louvain_communities) is pinned in tests/test_cluster.py
-    against networkx best-of-5 + an exhaustive single-node
-    local-optimality check — properties SQL can't express."""
+    Pure hash aggs, no windows.  tests/test_cluster.py also pins the
+    decomposition against networkx's modularity."""
     from entity_resolution_pipeline_spark.operators.cluster import (
         connected_components,
         modularity,

@@ -110,15 +110,6 @@ class ClusteringConfig:
     large-star/small-star connected components."""
 
     min_edge_weight: float = 0.5
-    max_iterations: int = 50                   # safety bound for CC iterations
-    # Once the (shrinking) edge set fits one task's memory budget, finish CC
-    # with a single-task vectorized min-label kernel instead of paying full
-    # shuffle-round latency for the tail O(log n) star rounds.  Edge counts
-    # come free from the per-round convergence checksum, so the cutover adds
-    # zero actions.  0 disables (pure star iteration).  4M string-pair edges
-    # ≈ a few hundred MB in one Arrow group — the same per-task budget the
-    # semantic-dedup bucket kernel is sized for.
-    local_finish_max_edges: int = 4_000_000
 
 
 @dataclass(frozen=True)

@@ -2,7 +2,7 @@
 (reference src/reporting.py:251-1810 — feature-distribution plots :251,
 feature-separation bar :395, ROC :1313, precision-recall :1370, cluster
 visualizations :1224, feature-importance bar :792, pipeline summary
-:1481, RFE results :1748) re-expressed Spark-first with a pure-stdlib
+:1481) re-expressed Spark-first with a pure-stdlib
 SVG renderer (matplotlib is not in this environment, and a driver-side
 plotting library would invite collecting raw rows anyway).
 
@@ -185,10 +185,9 @@ def line_chart(
     annotation: str | None = None,
     y_range: tuple[float, float] | None = None,
 ) -> str:
-    """Multi-series line chart (ROC reporting.py:1313, PR :1370, RFE
-    :1748).  2px round-capped lines, >=8px surface-ringed end markers,
-    hairline solid grid, legend for >=2 series, end-of-line direct label
-    otherwise."""
+    """Multi-series line chart (ROC reporting.py:1313, PR :1370).  2px
+    round-capped lines, >=8px surface-ringed end markers, hairline solid
+    grid, legend for >=2 series, end-of-line direct label otherwise."""
     xs = [p[0] for _, pts in series for p in pts]
     ys = [p[1] for _, pts in series for p in pts]
     if not xs:
@@ -566,7 +565,6 @@ def write_visual_report(
     classification_metrics: dict[str, Any] | None = None,
     feature_importance: dict[str, dict[str, float]] | None = None,
     funnel_rows: Sequence[tuple[str, int]] | None = None,
-    rfe_scores: Sequence[tuple[int, float]] | None = None,
     score_dist: dict[str, Any] | None = None,
     label_col: str = "label",
     prob_col: str = "probability",
@@ -625,7 +623,7 @@ def write_visual_report(
                 y_range=(0.0, 1.0),
             ),
         )
-        tables["curves"] = _table_html(
+        tables["roc_curve"] = _table_html(
             ["metric", "value"],
             [
                 ["ROC AUC", f"{curves['auc']:.4f}"],
@@ -740,21 +738,6 @@ def write_visual_report(
             ["stage", "documents"], [[n, v] for n, v in funnel_rows]
         )
         data["funnel"] = list(map(list, funnel_rows))
-
-    if rfe_scores:
-        emit(
-            "rfe_scores",
-            line_chart(
-                [("CV F1", [(float(k), float(s)) for k, s in rfe_scores])],
-                "RFECV: score vs features kept",
-                "features kept",
-                "cross-validated F1",
-            ),
-        )
-        tables["rfe_scores"] = _table_html(
-            ["features kept", "CV F1"], [[k, f"{s:.4f}"] for k, s in rfe_scores]
-        )
-        data["rfe"] = list(map(list, rfe_scores))
 
     with open(os.path.join(out_dir, "report_data.json"), "w") as f:
         json.dump(data, f, indent=2, default=float)

@@ -131,10 +131,11 @@ def _batch_processor(
             os.path.join(rec_root, f"ingest_batch={batch_id}")
         )
 
-        membership_new = block_membership(records, cfg.blocking)
-        membership_new.write.mode("overwrite").parquet(
-            os.path.join(mem_root, f"ingest_batch={batch_id}")
-        )
+        # read the batch's membership back from its partition: the anti-join
+        # below would otherwise re-run the MinHash pass
+        mem_path = os.path.join(mem_root, f"ingest_batch={batch_id}")
+        block_membership(records, cfg.blocking).write.mode("overwrite").parquet(mem_path)
+        membership_new = spark.read.parquet(mem_path)
         membership_all = read_accumulated(spark, out_dir, "membership")
 
         # hot-block cap on ACCUMULATED size, batch blocking's rule

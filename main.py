@@ -29,7 +29,13 @@ import os
 import pickle
 import sys
 
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+REPO = os.path.dirname(os.path.abspath(__file__))
+sys.path.insert(0, REPO)
+# local-mode Python workers import the package too; they inherit
+# PYTHONPATH from the JVM, which starts with the first session
+os.environ["PYTHONPATH"] = os.pathsep.join(
+    [REPO, *filter(None, [os.environ.get("PYTHONPATH")])]
+)
 
 STAGES = ("extract", "block", "train", "predict", "cluster", "report")
 

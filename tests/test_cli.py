@@ -119,3 +119,29 @@ def test_cli_ingest_stage(spark, fixture_dirs):
 
     assert read_accumulated(spark, out, "records").count() == 200
     assert read_accumulated(spark, out, "candidates").count() > 0
+
+
+def test_cli_script_runs_from_another_directory(spark, fixture_dirs, tmp_path):
+    """`python main.py` from outside the repo, with no PYTHONPATH: the
+    block stage's MinHash UDF, the first Python UDF to run, imports the
+    package in a local-mode worker."""
+    import subprocess
+    import sys
+
+    pages_path, _, out = fixture_dirs
+    cli.run_keep(_args(pages=pages_path, out=out, stage="extract"))
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    env["PYSPARK_SUBMIT_ARGS"] = (
+        "--master local[2] --conf spark.ui.enabled=false pyspark-shell"
+    )
+    proc = subprocess.run(
+        [sys.executable, _main.__file__, "--stage", "block", "--out", out],
+        cwd=str(tmp_path),
+        env=env,
+        capture_output=True,
+        text=True,
+        timeout=600,
+    )
+    assert proc.returncode == 0, proc.stderr[-4000:]
+    assert M.stage_complete(spark, out, "block")
+    assert M.read_stage_table(spark, out, "block").count() > 0

@@ -103,7 +103,7 @@ def test_fused_scoring_matches_unfused(prep):
     melted, uniq, rfh, vectors, pairs = prep
     cfg = DEFAULT_CONFIG
     feats = FE.pair_features_hashed(pairs, rfh, uniq, vectors)
-    cols = FE.selected_feature_names(cfg.features, cfg.feature_selection)
+    cols = list(FE.FEATURES)
     model, _ = C.fit(feats, cols, cfg.classifier)
 
     unfused = (

@@ -76,7 +76,7 @@ def test_fused_predict_is_one_python_stage(spark):
     prep = PL.prepare(pages, DEFAULT_CONFIG)
     lp = gt.select(F.col("left").alias("left_id"), F.col("right").alias("right_id"), "match")
     feats = PL.featurize_pairs(lp, prep, DEFAULT_CONFIG)
-    cols = FE.selected_feature_names(DEFAULT_CONFIG.features, DEFAULT_CONFIG.feature_selection)
+    cols = list(FE.FEATURES)
     model, _ = C.fit(feats, cols, DEFAULT_CONFIG.classifier)
 
     membership = B.block_membership(prep.records, DEFAULT_CONFIG.blocking)

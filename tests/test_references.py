@@ -284,8 +284,8 @@ def test_settable_config_values():
                 yield f.name
 
     found = sorted(leaves(PipelineConfig))
-    assert len(found) == 21, (
-        f"{len(found)} settable config values, expected 21: {found}.  A new "
+    assert len(found) == 19, (
+        f"{len(found)} settable config values, expected 19: {found}.  A new "
         "knob needs two existing callers that need different values; name "
         "them in CHANGES.md and update this count."
     )

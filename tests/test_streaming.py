@@ -217,6 +217,35 @@ def test_incremental_scoring_matches_batch(spark, tmp_path):
     assert any(v[1] for v in stream_preds.values())  # some matches found
 
 
+def test_incremental_blocks_each_record_once(spark, tmp_path, monkeypatch):
+    """Each micro-batch runs the MinHash membership pass once: the rows
+    through block_membership equal the membership rows written."""
+    from entity_resolution_pipeline_spark.streaming import ingest as IG
+
+    seen = spark.sparkContext.accumulator(0)
+    real = IG.block_membership
+
+    def counting(records, cfg):
+        membership = real(records, cfg)
+
+        def tally(batches):
+            for pdf in batches:
+                seen.add(len(pdf))
+                yield pdf
+
+        return membership.mapInPandas(tally, membership.schema)
+
+    monkeypatch.setattr(IG, "block_membership", counting)
+    tmp = str(tmp_path)
+    out = os.path.join(tmp, "out")
+    in_path = _write_pages(spark, tmp, "b0", 0, 60)
+    _write_pages(spark, tmp, "b1", 60, 120)
+    run_incremental(spark, in_path, out, DEFAULT_CONFIG, max_files_per_trigger=1)
+    written = read_accumulated(spark, out, "membership").count()
+    assert written > 0
+    assert seen.value == written
+
+
 @pytest.fixture(scope="module")
 def trained(spark):
     """(model, idf_weights) trained on a small labeled corpus."""

@@ -204,7 +204,6 @@ class TestEndToEnd:
             },
             feature_importance={"f1": {"weight": 2.0}, "f2": {"weight": -0.1}},
             funnel_rows=[("raw", 1000), ("gopher", 700), ("dedup", 400)],
-            rfe_scores=[(1, 0.8), (2, 0.95), (3, 0.93)],
             score_dist=R.feature_class_histogram(
                 df, "probability", "label", n_bins=20, lo=0.0, hi=1.0
             ),
@@ -216,7 +215,7 @@ class TestEndToEnd:
         expected = {
             "roc_curve", "precision_recall", "feature_separation",
             "confusion_matrix", "feature_importance", "cluster_sizes",
-            "pipeline_funnel", "rfe_scores", "feature_dist_f1",
+            "pipeline_funnel", "feature_dist_f1",
             "score_distribution",
         }
         assert expected <= set(out["figures"])

@@ -28,7 +28,7 @@ from entity_resolution_pipeline_spark.sources import manifest
 from entity_resolution_pipeline_spark.streaming import ingest
 sig = minhash_signature("zip import probe", num_hashes=8, k=3)
 assert len(sig) == 8
-assert DEFAULT_CONFIG.clustering.local_finish_max_edges > 0
+assert cluster.LOCAL_FINISH_MAX_EDGES > 0
 print("ZIP-IMPORT-OK")
 """
 
