@@ -65,14 +65,6 @@ def string_hash_udf(s: pd.Series) -> pd.Series:
 
 
 @pandas_udf(StringType())
-def normalize_and_hash_udf(s: pd.Series) -> pd.Series:
-    """Normalize (whitespace collapse) then hash, in one Arrow batch pass —
-    the composition the reference applies per field value
-    (preprocessing.py:396-400)."""
-    return s.map(lambda v: compute_string_hash(normalize_string(v)))
-
-
-@pandas_udf(StringType())
 def normalize_udf(s: pd.Series) -> pd.Series:
     """Arrow-vectorized Python-`re` whitespace normalization (exact parity
     path; see `normalize.py` for the JVM-side approximation used where

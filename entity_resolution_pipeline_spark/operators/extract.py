@@ -18,14 +18,14 @@ from pyspark.sql import functions as F
 
 from ..functions.normalize import null_canon_col
 
-# composite labels → record fields (reference composite format, visible in
-# data/input/training_dataset.csv rows 2-7)
+# composite labels → record fields, in RECORDS column order (reference
+# composite format, visible in data/input/training_dataset.csv rows 2-7)
 _FIELD_PATTERNS = {
     "person": r"Contributor: ([^\n]*)",
-    "title": r"Title: ([^\n]*)",
     "roles": r"Attribution: ([^\n]*)",
-    "subjects": r"Subjects: ([^\n]*)",
+    "title": r"Title: ([^\n]*)",
     "provision": r"Provision information: ([^\n]*)",
+    "subjects": r"Subjects: ([^\n]*)",
 }
 
 # html fallback: the synthetic template's class-tagged divs
@@ -38,9 +38,15 @@ _HTML_PATTERNS = {
 }
 
 
-def extraction_columns() -> list:
-    """The extraction projection as column expressions (shared by the batch
-    and streaming paths — both are the same pure per-row projection)."""
+def extract_records(pages: DataFrame) -> DataFrame:
+    """(url, warc_ts, html, text, lang) → RECORDS, one pure per-row
+    projection (batch extract and each ingest micro-batch run this).
+
+    record_id is derived from the url tail (the synthetic generator encodes
+    it there); composite is the extracted text itself — so `composite` is
+    byte-identical to the page text per url, which is the invariant the
+    tests pin.
+    """
     text = F.coalesce(F.col("text"), F.decode(F.col("html"), "UTF-8"))
     cols = [
         F.regexp_replace(
@@ -54,29 +60,4 @@ def extraction_columns() -> list:
         html_fallback = F.regexp_extract(F.decode(F.col("html"), "UTF-8"), _HTML_PATTERNS[field], 1)
         value = F.when(F.col("text").isNotNull(), extracted).otherwise(html_fallback)
         cols.append(null_canon_col(value).alias(field))
-    return cols
-
-
-_RECORD_COLS = (
-    "record_id", "url", "composite", "person", "roles", "title", "provision", "subjects"
-)
-
-
-def extract_records(pages: DataFrame) -> DataFrame:
-    """(url, warc_ts, html, text, lang) → RECORDS.
-
-    record_id is derived from the url tail (the synthetic generator encodes
-    it there); composite is the extracted text itself — so `composite` is
-    byte-identical to the page text per url, which is the invariant the
-    tests pin.
-    """
-    return pages.select(*extraction_columns()).select(*_RECORD_COLS)
-
-
-def extract_records_with_ts(pages: DataFrame) -> DataFrame:
-    """Extraction keeping the event-time column (streaming path: downstream
-    watermarks need warc_ts; a join-back would force a shuffle, one wider
-    projection does not)."""
-    return pages.select(F.col("warc_ts"), *extraction_columns()).select(
-        "warc_ts", *_RECORD_COLS
-    )
+    return pages.select(*cols)

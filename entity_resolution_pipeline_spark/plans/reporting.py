@@ -15,6 +15,8 @@ from typing import Any
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..operators.cluster import cluster_statistics
+
 
 def prediction_statistics(predictions: DataFrame) -> dict[str, Any]:
     """Match-rate stats over PREDICTIONS (reference classification.py:1123-1133)."""
@@ -35,7 +37,8 @@ def prediction_statistics(predictions: DataFrame) -> dict[str, Any]:
 
 def cluster_report(clusters: DataFrame, top_n: int = 10) -> dict[str, Any]:
     """Cluster count / size stats / bucket distribution / top-N largest
-    (reference reporting.py:1148-1213, fixed bucket counting)."""
+    (reference reporting.py:1148-1213, fixed bucket counting; the buckets
+    are cluster.cluster_statistics')."""
     per_cluster = clusters.select("cluster_id", "cluster_size").dropDuplicates(
         ["cluster_id"]
     )
@@ -46,17 +49,9 @@ def cluster_report(clusters: DataFrame, top_n: int = 10) -> dict[str, Any]:
         F.max("cluster_size").alias("max_size"),
         F.min("cluster_size").alias("min_size"),
     ).collect()[0]
-    bucket = (
-        F.when(F.col("cluster_size") == 1, "1")
-        .when(F.col("cluster_size") == 2, "2")
-        .when(F.col("cluster_size") <= 5, "3-5")
-        .when(F.col("cluster_size") <= 10, "6-10")
-        .when(F.col("cluster_size") <= 20, "11-20")
-        .otherwise("21+")
-    )
     dist = {
-        r["b"]: r["n"]
-        for r in per_cluster.groupBy(bucket.alias("b")).agg(F.count("*").alias("n")).collect()
+        r["size_bucket"]: r["num_clusters"]
+        for r in cluster_statistics(clusters).collect()
     }
     top = [
         {"cluster_id": r["cluster_id"], "size": r["cluster_size"]}

@@ -1,31 +1,29 @@
 """Analyst-facing visual report layer: the reference's matplotlib stage
-(reference src/reporting.py:251-1810 — feature-distribution plots :251,
-feature-separation bar :395, ROC :1313, precision-recall :1370, cluster
-visualizations :1224, feature-importance bar :792, pipeline summary
-:1481) re-expressed Spark-first with a pure-stdlib
-SVG renderer (matplotlib is not in this environment, and a driver-side
-plotting library would invite collecting raw rows anyway).
+(reference src/reporting.py:251-1810 — class-density plots :251, cluster
+visualizations :1224, feature-importance bar :792, confusion matrix
+:581) re-expressed Spark-first with a pure-stdlib SVG renderer
+(matplotlib is not in this environment, and a driver-side plotting
+library would invite collecting raw rows anyway).  The CLI's report
+stage draws four figures: the score distribution by predicted class,
+the confusion matrix, feature importance and cluster sizes.
 
 The contract that makes this layer scale-safe is the split:
 
 * **Spark reduces, the driver renders.**  Every figure is drawn from a
-  BOUNDED aggregate — O(bins) histogram counts, O(bins) cumulative
-  confusion counts for ROC/PR, one row of per-feature class means, the
-  six cluster-size buckets, a handful of funnel stages.  No raw rows
-  ever reach the driver: a 10^11-pair scored table produces the same
-  ~512 rows of plot input as the sf0.001 fixture.  (The reference
-  collects the full test CSV into pandas at reporting.py:168-249; that
-  pattern caps out at one machine's memory and is deliberately not
-  reproduced.)
+  BOUNDED aggregate — O(bins) histogram counts, the six cluster-size
+  buckets, a handful of metrics.  No raw rows ever reach the driver: a
+  10^11-pair scored table produces the same plot input as the sf0.001
+  fixture.  (The reference collects the full test CSV into pandas at
+  reporting.py:168-249; that pattern caps out at one machine's memory
+  and is deliberately not reproduced.)
 * **The renderer is dumb.**  Pure string-assembly SVG, no dependencies,
   deterministic output (stable float formatting), so figures diff
   cleanly in git and tests can assert on structure.
 
 Charts follow a fixed visual spec (thin marks: bars <=24px with a 4px
-rounded data-end and square baseline, 2px lines with >=8px end markers
-ringed in surface color, hairline solid gridlines, text in ink tokens
-never in series hue, legend whenever >=2 series, direct labels kept
-sparse).  The categorical palette is CVD-validated in this order; the
+rounded data-end and square baseline, 2px lines, hairline solid
+gridlines, text in ink tokens never in series hue, legend whenever >=2
+series).  The categorical palette is CVD-validated in this order; the
 two-class charts use only slots 1-2.  Every figure's backing table is
 embedded in the HTML index, so no reading is gated on color.
 """
@@ -58,8 +56,7 @@ SERIES = [
     "#4a3aa7",  # 7 violet
     "#e34948",  # 8 red
 ]
-# sequential blue ramp, light->dark; ordinal use starts no lighter than
-# step 250 (index 1 here) so the lightest stage still clears 2:1
+# sequential blue ramp, light->dark
 SEQ_BLUE = ["#cde2fb", "#86b6ef", "#5598e7", "#3987e5", "#256abf", "#1c5cab", "#104281"]
 SURFACE = "#fcfcfb"
 INK = "#0b0b0b"
@@ -112,11 +109,6 @@ def _rounded_bar_v(x, y, w, h, fill):
         f"<path d='M{_f(x)},{_f(y + h)} v{_f(-(h - r))} a{_f(r)},{_f(r)} 0 0 1 {_f(r)},{_f(-r)} "
         f"h{_f(w - 2 * r)} a{_f(r)},{_f(r)} 0 0 1 {_f(r)},{_f(r)} v{_f(h - r)} z' fill='{fill}'/>"
     )
-
-
-def _marker(x, y, fill):
-    """End-dot r=4 with a 2px surface ring."""
-    return f"<circle cx='{_f(x)}' cy='{_f(y)}' r='6' fill='{SURFACE}'/><circle cx='{_f(x)}' cy='{_f(y)}' r='4' fill='{fill}'/>"
 
 
 def _svg(width: int, height: int, body: list[str], title: str) -> str:
@@ -174,116 +166,33 @@ def _legend(entries: Sequence[tuple[str, str]], x: float, y: float) -> list[str]
 _ML, _MR, _MT, _MB = 64, 24, 44, 46  # plot margins
 
 
-def line_chart(
-    series: Sequence[tuple[str, Sequence[tuple[float, float]]]],
-    title: str,
-    x_label: str,
-    y_label: str,
-    width: int = 560,
-    height: int = 360,
-    diagonal: bool = False,
-    annotation: str | None = None,
-    y_range: tuple[float, float] | None = None,
-) -> str:
-    """Multi-series line chart (ROC reporting.py:1313, PR :1370).  2px
-    round-capped lines, >=8px surface-ringed end markers, hairline solid
-    grid, legend for >=2 series, end-of-line direct label otherwise."""
-    xs = [p[0] for _, pts in series for p in pts]
-    ys = [p[1] for _, pts in series for p in pts]
-    if not xs:
-        xs, ys = [0.0, 1.0], [0.0, 1.0]
-    x0, x1 = min(xs), max(xs)
-    if y_range is not None:
-        y0, y1 = y_range
-    else:
-        y0, y1 = min(min(ys), 0.0), max(ys)
-        if y1 <= y0:
-            y1 = y0 + 1.0
-    pw, ph = width - _ML - _MR, height - _MT - _MB
-
-    def X(v):
-        return _ML + (v - x0) / (x1 - x0 or 1.0) * pw
-
-    def Y(v):
-        return _MT + ph - (v - y0) / (y1 - y0 or 1.0) * ph
-
-    body = [_text(_ML, 24, title, size=15, weight="600")]
-    for t in _nice_ticks(y0, y1):
-        if y0 <= t <= y1:
-            body.append(_hline(_ML, _ML + pw, Y(t)))
-            body.append(_text(_ML - 8, Y(t) + 4, _fmt_tick(t), size=11, fill=INK_2, anchor="end"))
-    for t in _nice_ticks(x0, x1):
-        if x0 <= t <= x1:
-            body.append(_text(X(t), _MT + ph + 18, _fmt_tick(t), size=11, fill=INK_2, anchor="middle"))
-    body.append(_hline(_ML, _ML + pw, _MT + ph, stroke=INK_2, width=1))
-    if diagonal:
-        body.append(
-            f"<line x1='{_f(X(x0))}' y1='{_f(Y(y0))}' x2='{_f(X(x1))}' y2='{_f(Y(y1))}' "
-            f"stroke='{GRID}' stroke-width='1' stroke-dasharray='4 4'/>"
-        )
-    for i, (name, pts) in enumerate(series):
-        color = SERIES[i % len(SERIES)]
-        if not pts:
-            continue
-        d = " ".join(f"{'M' if j == 0 else 'L'}{_f(X(px))},{_f(Y(py))}" for j, (px, py) in enumerate(pts))
-        body.append(
-            f"<path d='{d}' fill='none' stroke='{color}' stroke-width='2' "
-            f"stroke-linejoin='round' stroke-linecap='round'/>"
-        )
-        ex, ey = pts[-1]
-        body.append(_marker(X(ex), Y(ey), color))
-        if len(series) == 1:
-            body.append(_text(min(X(ex) + 10, width - 4), Y(ey) + 4, name, size=11, fill=INK_2))
-    if len(series) >= 2:
-        body += _legend([(n, SERIES[i % len(SERIES)]) for i, (n, _) in enumerate(series)], _ML + 10, _MT + 14)
-    if annotation:
-        body.append(_text(width - _MR, 24, annotation, size=12, fill=INK_2, anchor="end"))
-    body.append(_text(_ML + pw / 2, height - 10, x_label, size=12, fill=INK_2, anchor="middle"))
-    body.append(
-        _text(16, _MT + ph / 2, y_label, size=12, fill=INK_2, anchor="middle",
-              extra=f"transform='rotate(-90 16 {_f(_MT + ph / 2)})'")
-    )
-    return _svg(width, height, body, title)
-
-
 def hbar_chart(
     items: Sequence[tuple[str, float]],
     title: str,
     x_label: str,
     width: int = 560,
-    ordinal: bool = False,
-    pct_of_first: bool = False,
 ) -> str:
-    """Horizontal bars (feature separation reporting.py:395, importance
-    :792, pipeline-summary funnel :1481).  Single measure: sequential
-    blue (one series, no legend); `ordinal=True` steps the blue ramp
-    down the stages (funnel), starting at step 250 so the lightest bar
-    clears 2:1 on the surface.  Value labeled at the bar tip."""
+    """Horizontal bars (feature importance reporting.py:792).  Single
+    measure: sequential blue (one series, no legend), value labeled at
+    the bar tip."""
     n = len(items)
     bar_h, gap = 22, 10
     ml = 150
     height = _MT + n * (bar_h + gap) + _MB
-    # right reserve sized to the widest possible tip label so it never
-    # clips (pct labels like "10,000 (100.0%)" need ~120px at 11px)
-    pw = width - ml - (125 if pct_of_first else 90)
+    pw = width - ml - 90  # right reserve for the tip labels
     vmax = max((v for _, v in items), default=1.0) or 1.0
     body = [_text(ml, 24, title, size=15, weight="600")]
     for t in _nice_ticks(0, vmax, 4):
         if 0 <= t <= vmax:
             body.append(_vline(ml + t / vmax * pw, _MT, _MT + n * (bar_h + gap)))
             body.append(_text(ml + t / vmax * pw, _MT + n * (bar_h + gap) + 16, _fmt_tick(t), size=11, fill=INK_2, anchor="middle"))
-    first = items[0][1] if items and items[0][1] else None
-    ramp = SEQ_BLUE[1:]  # ordinal: start at step 250
     for i, (name, v) in enumerate(items):
         y = _MT + i * (bar_h + gap)
-        color = ramp[min(i, len(ramp) - 1)] if ordinal else SEQ_BLUE[3]
         w = max(v / vmax * pw, 0.0)
         if w > 0:
-            body.append(_rounded_bar_h(ml, y, w, bar_h, color))
+            body.append(_rounded_bar_h(ml, y, w, bar_h, SEQ_BLUE[3]))
         body.append(_text(ml - 8, y + bar_h / 2 + 4, name, size=12, fill=INK, anchor="end"))
         label = _fmt_tick(v) if float(v).is_integer() else _f(v)
-        if pct_of_first and first:
-            label += f" ({100.0 * v / first:.1f}%)"
         body.append(_text(ml + w + 8, y + bar_h / 2 + 4, label, size=11, fill=INK_2))
     body.append(_vline(ml, _MT, _MT + n * (bar_h + gap), stroke=INK_2))
     body.append(_text(ml + pw / 2, height - 8, x_label, size=12, fill=INK_2, anchor="middle"))
@@ -469,81 +378,6 @@ def feature_class_histogram(
     }
 
 
-def score_curve_points(
-    df: "DataFrame",
-    label_col: str = "label",
-    prob_col: str = "probability",
-    n_bins: int = 512,
-) -> dict[str, Any]:
-    """ROC + PR curves from ONE bounded aggregate: probabilities are
-    quantized to n_bins equal [0,1] buckets, counted per (bucket, class)
-    in Spark (map-side combined, <= 2*n_bins driver rows), and the
-    cumulative TP/FP/FN/TN at every bucket threshold is a prefix sum
-    over that tiny table.  Exact when scores are tie-free at bucket
-    granularity; otherwise the curve is the conservative
-    bucket-resolution approximation (AUC error is O(1/n_bins)).  The
-    reference computes these from the fully-collected test CSV
-    (reporting.py:1313-1478); this form never moves the scored pairs."""
-    b = F.least(F.lit(n_bins - 1), F.floor(F.col(prob_col) * n_bins).cast("int"))
-    rows = (
-        df.groupBy(b.alias("bin"))
-        .agg(
-            F.sum(F.col(label_col).cast("long")).alias("pos"),
-            F.count("*").alias("n"),
-        )
-        .collect()
-    )
-    pos = [0.0] * n_bins
-    neg = [0.0] * n_bins
-    for r in rows:
-        i = int(r["bin"])
-        pos[i] = float(r["pos"] or 0)
-        neg[i] = float(r["n"]) - pos[i]
-    P, N = sum(pos), sum(neg)
-    roc: list[tuple[float, float]] = [(0.0, 0.0)]
-    pr: list[tuple[float, float]] = []
-    # sweep thresholds from high to low: threshold = bin/n_bins, predicting
-    # positive for prob >= threshold
-    tp = fp = 0.0
-    auc = 0.0
-    prev_fpr, prev_tpr = 0.0, 0.0
-    for i in range(n_bins - 1, -1, -1):
-        tp += pos[i]
-        fp += neg[i]
-        tpr = tp / P if P else 0.0
-        fpr = fp / N if N else 0.0
-        auc += (fpr - prev_fpr) * (tpr + prev_tpr) / 2.0
-        roc.append((fpr, tpr))
-        if tp + fp > 0:
-            pr.append((tpr, tp / (tp + fp)))
-        prev_fpr, prev_tpr = fpr, tpr
-    ap = 0.0
-    prev_recall = 0.0
-    for recall, precision in pr:
-        ap += (recall - prev_recall) * precision
-        prev_recall = recall
-    return {"roc": roc, "pr": pr, "auc": auc, "average_precision": ap, "n_pos": int(P), "n_neg": int(N)}
-
-
-def feature_separation(
-    df: "DataFrame", features: Sequence[str], label_col: str = "label"
-) -> list[tuple[str, float]]:
-    """|mean(match) - mean(non-match)| per feature — the reference's
-    separation-power ranking (reporting.py:395-443) as ONE grouped agg
-    over 2 rows x len(features) columns."""
-    rows = df.groupBy(F.col(label_col).cast("int").alias("y")).agg(
-        *[F.avg(c).alias(c) for c in features]
-    ).collect()
-    by_y = {int(r["y"]): r for r in rows}
-    out = []
-    for c in features:
-        m1 = float(by_y.get(1, {c: 0.0})[c] or 0.0)
-        m0 = float(by_y.get(0, {c: 0.0})[c] or 0.0)
-        out.append((c, abs(m1 - m0)))
-    out.sort(key=lambda kv: (-kv[1], kv[0]))
-    return out
-
-
 # ---------------------------------------------------------------------------
 # report orchestration
 # ---------------------------------------------------------------------------
@@ -557,30 +391,25 @@ def _table_html(headers: Sequence[str], rows: Sequence[Sequence[Any]]) -> str:
     return f"<table><thead><tr>{h}</tr></thead><tbody>{body}</tbody></table>"
 
 
+_TOP_N_FEATURES = 10  # bars in the feature-importance figure
+
+
 def write_visual_report(
     out_dir: str,
-    scored_pairs: "DataFrame | None" = None,
-    feature_cols: Sequence[str] | None = None,
     clusters: "DataFrame | None" = None,
     classification_metrics: dict[str, Any] | None = None,
     feature_importance: dict[str, dict[str, float]] | None = None,
-    funnel_rows: Sequence[tuple[str, int]] | None = None,
     score_dist: dict[str, Any] | None = None,
-    label_col: str = "label",
-    prob_col: str = "probability",
-    top_n_features: int = 10,
-    hist_bins: int = 40,
-    curve_bins: int = 512,
 ) -> dict[str, Any]:
-    """Produce the full analyst report: SVG figures + an HTML index with
-    every figure's backing table embedded (the relief channel for the
+    """Produce the analyst report: SVG figures + an HTML index with every
+    figure's backing table embedded (the relief channel for the
     low-contrast palette slots, and the no-color reading path).  Mirrors
     the reference's ReportingStage.execute (reporting.py:72-166) output
     tree: figures/ + report JSON + index.
 
-    All Spark inputs are reduced to bounded aggregates before anything
-    reaches the renderer; passing a 10^11-row scored table costs three
-    aggregation jobs, not a collect."""
+    Spark inputs are reduced to bounded aggregates before anything
+    reaches the renderer: `clusters` to its size buckets, and `score_dist`
+    arrives already reduced (feature_class_histogram)."""
     figdir = os.path.join(out_dir, "figures")
     os.makedirs(figdir, exist_ok=True)
     figures: dict[str, str] = {}
@@ -591,73 +420,6 @@ def write_visual_report(
         with open(os.path.join(figdir, f"{name}.svg"), "w") as f:
             f.write(svg)
         figures[name] = f"figures/{name}.svg"
-
-    if scored_pairs is not None:
-        curves = score_curve_points(scored_pairs, label_col, prob_col, curve_bins)
-        data["curves"] = {
-            "auc": curves["auc"],
-            "average_precision": curves["average_precision"],
-            "n_pos": curves["n_pos"],
-            "n_neg": curves["n_neg"],
-        }
-        emit(
-            "roc_curve",
-            line_chart(
-                [("ROC", curves["roc"])],
-                "ROC curve",
-                "false positive rate",
-                "true positive rate",
-                diagonal=True,
-                annotation=f"AUC = {curves['auc']:.4f}",
-                y_range=(0.0, 1.0),
-            ),
-        )
-        emit(
-            "precision_recall",
-            line_chart(
-                [("precision", curves["pr"])],
-                "Precision–recall curve",
-                "recall",
-                "precision",
-                annotation=f"AP = {curves['average_precision']:.4f}",
-                y_range=(0.0, 1.0),
-            ),
-        )
-        tables["roc_curve"] = _table_html(
-            ["metric", "value"],
-            [
-                ["ROC AUC", f"{curves['auc']:.4f}"],
-                ["average precision", f"{curves['average_precision']:.4f}"],
-                ["positive pairs", curves["n_pos"]],
-                ["negative pairs", curves["n_neg"]],
-            ],
-        )
-
-    if scored_pairs is not None and feature_cols:
-        sep = feature_separation(scored_pairs, feature_cols, label_col)
-        data["feature_separation"] = dict(sep)
-        top = sep[:top_n_features]
-        emit(
-            "feature_separation",
-            hbar_chart(top, "Feature separation power", "|mean(match) − mean(non-match)|"),
-        )
-        tables["feature_separation"] = _table_html(
-            ["feature", "separation"], [[n, f"{v:.4f}"] for n, v in sep]
-        )
-        for name, _ in top[:3]:
-            h = feature_class_histogram(scored_pairs, name, label_col, hist_bins)
-            emit(
-                f"feature_dist_{name}",
-                class_histogram_chart(
-                    h["edges"],
-                    {("match" if c in ("1", "1.0", "true") else "non-match"): cnts
-                     for c, cnts in h["counts"].items()},
-                    f"Distribution of {name} by class",
-                    name,
-                    means={("match" if c in ("1", "1.0", "true") else "non-match"): m
-                           for c, m in h["means"].items()},
-                ),
-            )
 
     if score_dist:
         # prediction-time view (no ground truth): probability distribution
@@ -704,7 +466,7 @@ def write_visual_report(
         imp = sorted(
             ((k, abs(v["weight"]) if isinstance(v, dict) else abs(v)) for k, v in feature_importance.items()),
             key=lambda kv: (-kv[1], kv[0]),
-        )[:top_n_features]
+        )[:_TOP_N_FEATURES]
         emit("feature_importance", hbar_chart(imp, "Feature importance (|LR weight|)", "|weight|"))
         tables["feature_importance"] = _table_html(
             ["feature", "|weight|"], [[n, f"{v:.4f}"] for n, v in imp]
@@ -722,22 +484,6 @@ def write_visual_report(
             ["size bucket", "clusters"], [[b, int(v)] for b, v in dist]
         )
         data["clusters"] = rep
-
-    if funnel_rows:
-        emit(
-            "pipeline_funnel",
-            hbar_chart(
-                [(n, float(v)) for n, v in funnel_rows],
-                "Pipeline survival funnel",
-                "documents",
-                ordinal=True,
-                pct_of_first=True,
-            ),
-        )
-        tables["pipeline_funnel"] = _table_html(
-            ["stage", "documents"], [[n, v] for n, v in funnel_rows]
-        )
-        data["funnel"] = list(map(list, funnel_rows))
 
     with open(os.path.join(out_dir, "report_data.json"), "w") as f:
         json.dump(data, f, indent=2, default=float)

@@ -56,14 +56,6 @@ LABELED_PAIRS = StructType(
     ]
 )
 
-# Candidate pairs out of LSH blocking (left_id < right_id).
-CANDIDATE_PAIRS = StructType(
-    [
-        StructField("left_id", StringType(), False),
-        StructField("right_id", StringType(), False),
-    ]
-)
-
 PREDICTIONS = StructType(
     [
         StructField("left_id", StringType(), False),

@@ -1,9 +1,6 @@
-"""Input sources: pages tables, catalog-record CSVs, labeled-pair CSVs.
+"""Input sources: pages tables and labeled-pair CSVs.
 
 Mirrors the reference's readers:
-* S1 chunked catalog CSV scan (batch_parallel_preprocessing.py:200-242) →
-  one declarative `spark.read.csv` with the fixed schema and the reference's
-  null-token convention (chunking disappears — partitions are the chunks).
 * S3 ground-truth pair CSV (batch_parallel_querying.py:267-297): header,
   `left,right,match`, match parsed case-insensitively from 'true'.
 * The Common-Crawl-style pages table (BASELINE.json:input_hint) from
@@ -16,41 +13,13 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StringType, StructField, StructType
 
-from ..config import NULL_VALUES
-from ..schemas import LABELED_PAIRS, PAGES
-
-# reference catalog-record columns (preprocessing.py:328-353), all strings
-CATALOG_CSV = StructType(
-    [
-        StructField(c, StringType(), True)
-        for c in ("composite", "person", "roles", "title", "provision", "subjects", "personId")
-    ]
-)
+from ..schemas import PAGES
 
 
 def read_pages(spark: SparkSession, path: str) -> DataFrame:
     """Pages table from parquet (Iceberg table paths read identically via
     `spark.read.format("iceberg")` when a catalog is configured)."""
     return spark.read.schema(PAGES).parquet(path)
-
-
-def read_catalog_csv(spark: SparkSession, path: str) -> DataFrame:
-    """Reference training_dataset.csv shape: all columns as strings,
-    multiline quoted composites, null tokens canonicalized to SQL NULL."""
-    df = (
-        spark.read.schema(CATALOG_CSV)
-        .option("header", True)
-        .option("multiLine", True)
-        .option("escape", '"')
-        .csv(path)
-    )
-    null_canon = [
-        F.when(F.col(c).isin(*NULL_VALUES) | F.col(c).isNull(), None)
-        .otherwise(F.col(c))
-        .alias(c)
-        for c in df.columns
-    ]
-    return df.select(*null_canon)
 
 
 def read_labeled_pairs(spark: SparkSession, path: str) -> DataFrame:
@@ -73,18 +42,3 @@ def read_labeled_pairs(spark: SparkSession, path: str) -> DataFrame:
         "left", "right", (F.lower(F.col("match")) == "true").alias("match")
     )
 
-
-def catalog_records_to_pages(records: DataFrame) -> DataFrame:
-    """Adapter: a reference-shaped catalog CSV → the pages contract, so the
-    extraction stage is the single entry path for both input kinds.  The
-    composite becomes `text` (the extractor parses the labeled segments),
-    personId rides in the url tail."""
-    return records.select(
-        F.concat(
-            F.lit("catalog://rec/"), F.regexp_replace("personId", "#", "_")
-        ).alias("url"),
-        F.lit(None).cast("timestamp").alias("warc_ts"),
-        F.lit(None).cast("binary").alias("html"),
-        F.col("composite").alias("text"),
-        F.lit("und").alias("lang"),
-    )

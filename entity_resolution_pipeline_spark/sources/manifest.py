@@ -197,30 +197,3 @@ def merge_stage_table(
     record_stage(spark, base_dir, stage, rows=total, metrics=metrics)
     return out
 
-
-def overwrite_partitions(
-    df: DataFrame,
-    base_dir: str,
-    stage: str,
-    partition_by: tuple[str, ...],
-    metrics: dict[str, float] | None = None,
-) -> DataFrame:
-    """Spark-native dynamic partition overwrite (S8's partitioned-DDL path):
-    the incoming frame fully replaces ONLY the hive-style partitions it
-    contains; untouched partitions persist.  This is the idempotent
-    re-ingest primitive for date/source-partitioned corpus tables — re-runs
-    of one day's batch rewrite that day's directory and nothing else, and
-    partition pruning on the partition columns is free at read time."""
-    spark = df.sparkSession
-    path = os.path.join(base_dir, stage)
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        df.write.mode("overwrite").partitionBy(*partition_by).parquet(path)
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
-    spark.catalog.refreshByPath(path)
-    out = spark.read.parquet(path)
-    total = record_partitions(spark, base_dir, f"{stage}/partitions", out)
-    record_stage(spark, base_dir, stage, rows=total, metrics=metrics)
-    return out

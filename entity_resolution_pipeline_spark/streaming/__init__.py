@@ -3,19 +3,9 @@
 The reference is strictly batch (SURVEY.md §2.11) — its closest analog is
 the manifest resume loop (process only files not yet in the checkpoint,
 src/pipeline.py:66-120).  This package is the Spark-native generalization:
-a `readStream` file source over the pages table, exactly-once incremental
-extract + blocking via `foreachBatch` with Spark's own streaming checkpoint,
-and watermarked windowed ingest statistics.
+a `readStream` file source over the pages table, and exactly-once
+incremental extract + blocking (+ scoring, given a model) via
+`foreachBatch` with Spark's own streaming checkpoint.
 """
 
-from .ingest import (  # noqa: F401
-    extract_records_stream,
-    ingest_stats_stream,
-    read_pages_stream,
-    run_incremental,
-)
-from .sessions import (  # noqa: F401
-    read_events_stream,
-    session_window_stream,
-    sessionize_stream,
-)
+from .ingest import run_incremental  # noqa: F401

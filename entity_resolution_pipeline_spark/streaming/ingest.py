@@ -6,13 +6,9 @@ Design (Spark-first; no analog in the strictly-batch reference):
   (BASELINE.json:input_hint schema).  On a cluster the same code points at
   an Iceberg/Delta table or a landing bucket; file listing + the streaming
   checkpoint give exactly-once per input file.
-* `extract_records_stream` — the batch extraction expressions applied to the
-  stream (pure JVM column exprs, so they lift to streaming unchanged and
-  keep the byte-identical-per-url invariant).
-* `ingest_stats_stream` — watermarked tumbling-window ingest statistics
-  (pages/hour per language) for monitoring late-arriving WARC timestamps.
 * `run_incremental` — the incremental pipeline: per micro-batch
-  (`foreachBatch`), extract → drop re-crawled record_ids → blocking keys →
+  (`foreachBatch`), the batch `extract_records` over the micro-batch's
+  pages → drop re-crawled record_ids → blocking keys →
   NEW candidate pairs (new×all block join).  Each batch's outputs land in
   `batch_id`-keyed partition dirs (idempotent overwrite ⇒ exactly-once under
   replay), with one manifest lineage row per batch.  Given a trained model,
@@ -48,7 +44,7 @@ from pyspark.sql import functions as F
 from ..config import DEFAULT_CONFIG, PipelineConfig
 from ..operators.blocking import block_membership, prune_hot_blocks
 from ..operators.extract import extract_records
-from ..schemas import PAGES
+from ..schemas import PAGES, PREDICTIONS
 from ..sources import manifest as MF
 
 
@@ -62,33 +58,6 @@ def read_pages_stream(
     if max_files_per_trigger is not None:
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
     return reader.parquet(path)
-
-
-def extract_records_stream(pages: DataFrame) -> DataFrame:
-    """Streaming records = the batch extraction projection + the event-time
-    column kept for downstream watermarking (one narrow stage, no join)."""
-    from ..operators.extract import extract_records_with_ts
-
-    return extract_records_with_ts(pages)
-
-
-def ingest_stats_stream(
-    pages: DataFrame, window: str = "1 hour", watermark: str = "2 hours"
-) -> DataFrame:
-    """Tumbling-window ingest counts per language with a late-data watermark.
-    Append-mode-compatible (state for a window is dropped `watermark` after
-    its end)."""
-    return (
-        pages.withWatermark("warc_ts", watermark)
-        .groupBy(F.window("warc_ts", window).alias("w"), "lang")
-        .agg(F.count("*").alias("pages"))
-        .select(
-            F.col("w.start").alias("window_start"),
-            F.col("w.end").alias("window_end"),
-            "lang",
-            "pages",
-        )
-    )
 
 
 def _batch_processor(
@@ -107,101 +76,117 @@ def _batch_processor(
     table) over only the accumulated records those pairs name, then the
     fused battery+LR stage, which embeds under the FROZEN train-time
     `idf_weights` (PipelineResult.idf_weights), and frees that prefix once
-    the predictions are written.  No featurization table is kept across batches.  This is
-    incremental ER minus the global clustering fixpoint, which stays a
-    batch job over the accumulated predictions."""
+    the predictions are written; the manifest counts come from one
+    aggregate over the written partition.  No featurization table is kept
+    across batches, and every frame a batch persists is unpersisted on
+    every exit, a failed batch included.  This is incremental ER minus the
+    global clustering fixpoint, which stays a batch job over the
+    accumulated predictions."""
     rec_root = os.path.join(out_dir, "records")
     mem_root = os.path.join(out_dir, "membership")
     cand_root = os.path.join(out_dir, "candidates")
     pred_root = os.path.join(out_dir, "predictions")
 
     def process(pages_batch: DataFrame, batch_id: int) -> None:
-        records = extract_records(pages_batch).dropDuplicates(["record_id"])
-        if os.path.exists(rec_root):
-            prior = (
-                spark.read.option("basePath", rec_root)
-                .parquet(rec_root)
-                .where(F.col("ingest_batch") != batch_id)  # replay safety
-                .select("record_id")
-            )
-            records = records.join(prior, "record_id", "left_anti")
-        records = records.persist()
-        n_new = records.count()
-        records.write.mode("overwrite").parquet(
-            os.path.join(rec_root, f"ingest_batch={batch_id}")
-        )
+        cached: list[DataFrame] = []
 
-        # read the batch's membership back from its partition: the anti-join
-        # below would otherwise re-run the MinHash pass
-        mem_path = os.path.join(mem_root, f"ingest_batch={batch_id}")
-        block_membership(records, cfg.blocking).write.mode("overwrite").parquet(mem_path)
-        membership_new = spark.read.parquet(mem_path)
-        membership_all = read_accumulated(spark, out_dir, "membership")
+        def cache(df: DataFrame) -> DataFrame:
+            cached.append(df.persist())
+            return cached[-1]
 
-        # hot-block cap on ACCUMULATED size, batch blocking's rule
-        # (drop-and-count); `hot` is persisted for its count and both
-        # anti-joins
-        kept_all, hot = prune_hot_blocks(membership_all, cfg.blocking)
-        hot = hot.persist()
-        n_hot = hot.count()
-        kept_new = membership_new.join(
-            F.broadcast(hot.select("block_key")), "block_key", "left_anti"
-        )
-
-        pairs = (
-            kept_new.select("block_key", F.col("id").alias("nid"))
-            .join(kept_all.select("block_key", F.col("id").alias("oid")), "block_key")
-            .where(F.col("nid") != F.col("oid"))
-            .select(
-                F.least("nid", "oid").alias("left_id"),
-                F.greatest("nid", "oid").alias("right_id"),
-            )
-            .dropDuplicates(["left_id", "right_id"])
-        ).persist()
-        n_pairs = pairs.count()
-        pairs.write.mode("overwrite").parquet(
-            os.path.join(cand_root, f"ingest_batch={batch_id}")
-        )
-
-        metrics = {
-            "new_records": float(n_new),
-            "new_candidate_pairs": float(n_pairs),
-            "hot_blocks_capped": float(n_hot),
-        }
-        if model is not None:
-            from ..plans import pipeline as PL
-
-            # the batch prefix over the records the new pairs name (new
-            # records and the old ones they pair with), under the FROZEN
-            # train-time weights: vectors depend only on the string and
-            # the weights, so these equal the batch path's
-            ids = pairs.select(F.explode(F.array("left_id", "right_id")).alias("record_id"))
-            records_all = read_accumulated(spark, out_dir, "records")
-            touched = records_all.join(ids, "record_id", "left_semi")
-            prep = PL.prepare_records(touched, cfg, idf_weights=idf_weights)
-            try:
-                preds = PL.score_pairs(pairs, prep, model, cfg).persist()
-                n_scored = preds.count()
-                n_match = preds.where("match").count()
-                preds.write.mode("overwrite").parquet(
-                    os.path.join(pred_root, f"ingest_batch={batch_id}")
+        try:
+            records = extract_records(pages_batch).dropDuplicates(["record_id"])
+            if os.path.exists(rec_root):
+                prior = (
+                    spark.read.option("basePath", rec_root)
+                    .parquet(rec_root)
+                    .where(F.col("ingest_batch") != batch_id)  # replay safety
+                    .select("record_id")
                 )
-                preds.unpersist()
-            finally:
-                prep.release()
-            metrics["pairs_scored"] = float(n_scored)
-            metrics["pairs_matched"] = float(n_match)
+                records = records.join(prior, "record_id", "left_anti")
+            records = cache(records)
+            n_new = records.count()
+            records.write.mode("overwrite").parquet(
+                os.path.join(rec_root, f"ingest_batch={batch_id}")
+            )
 
-        MF.record_stage(
-            spark,
-            out_dir,
-            f"stream_ingest_batch_{batch_id}",
-            n_new,
-            metrics=metrics,
-        )
-        records.unpersist()
-        pairs.unpersist()
-        hot.unpersist()
+            # read the batch's membership back from its partition: the anti-join
+            # below would otherwise re-run the MinHash pass
+            mem_path = os.path.join(mem_root, f"ingest_batch={batch_id}")
+            block_membership(records, cfg.blocking).write.mode("overwrite").parquet(mem_path)
+            membership_new = spark.read.parquet(mem_path)
+            membership_all = read_accumulated(spark, out_dir, "membership")
+
+            # hot-block cap on ACCUMULATED size, batch blocking's rule
+            # (drop-and-count); `hot` is persisted for its count and both
+            # anti-joins
+            kept_all, hot = prune_hot_blocks(membership_all, cfg.blocking)
+            hot = cache(hot)
+            n_hot = hot.count()
+            kept_new = membership_new.join(
+                F.broadcast(hot.select("block_key")), "block_key", "left_anti"
+            )
+
+            pairs = cache(
+                kept_new.select("block_key", F.col("id").alias("nid"))
+                .join(kept_all.select("block_key", F.col("id").alias("oid")), "block_key")
+                .where(F.col("nid") != F.col("oid"))
+                .select(
+                    F.least("nid", "oid").alias("left_id"),
+                    F.greatest("nid", "oid").alias("right_id"),
+                )
+                .dropDuplicates(["left_id", "right_id"])
+            )
+            n_pairs = pairs.count()
+            pairs.write.mode("overwrite").parquet(
+                os.path.join(cand_root, f"ingest_batch={batch_id}")
+            )
+
+            metrics = {
+                "new_records": float(n_new),
+                "new_candidate_pairs": float(n_pairs),
+                "hot_blocks_capped": float(n_hot),
+            }
+            if model is not None:
+                from ..plans import pipeline as PL
+
+                # the batch prefix over the records the new pairs name (new
+                # records and the old ones they pair with), under the FROZEN
+                # train-time weights: vectors depend only on the string and
+                # the weights, so these equal the batch path's
+                ids = pairs.select(F.explode(F.array("left_id", "right_id")).alias("record_id"))
+                records_all = read_accumulated(spark, out_dir, "records")
+                touched = records_all.join(ids, "record_id", "left_semi")
+                pred_path = os.path.join(pred_root, f"ingest_batch={batch_id}")
+                prep = PL.prepare_records(touched, cfg, idf_weights=idf_weights)
+                try:
+                    PL.score_pairs(pairs, prep, model, cfg).write.mode("overwrite").parquet(
+                        pred_path
+                    )
+                finally:
+                    prep.release()
+                # both counts in one aggregate over the written partition (the
+                # declared schema skips a footer-reading job)
+                counts = (
+                    spark.read.schema(PREDICTIONS)
+                    .parquet(pred_path)
+                    .agg(F.count("*"), F.sum(F.col("match").cast("long")))
+                    .first()
+                )
+                metrics["pairs_scored"] = float(counts[0])
+                metrics["pairs_matched"] = float(counts[1] or 0)
+
+            MF.record_stage(
+                spark,
+                out_dir,
+                f"stream_ingest_batch_{batch_id}",
+                n_new,
+                metrics=metrics,
+            )
+        finally:
+            # a failed batch leaves nothing cached in the caller's session
+            for df in cached:
+                df.unpersist()
 
     return process
 
@@ -212,11 +197,10 @@ def run_incremental(
     out_dir: str,
     cfg: PipelineConfig = DEFAULT_CONFIG,
     max_files_per_trigger: int | None = None,
-    await_termination: bool = True,
     model=None,
     idf_weights: list | None = None,
 ):
-    """Start (and by default drain) the incremental ingest stream.
+    """Drain the incremental ingest stream.
 
     Available-now trigger: processes every file the checkpoint has not seen,
     in `max_files_per_trigger`-sized micro-batches, then stops — the
@@ -243,8 +227,7 @@ def run_incremental(
         .trigger(availableNow=True)
         .start()
     )
-    if await_termination:
-        q.awaitTermination()
+    q.awaitTermination()
     return q
 
 

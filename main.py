@@ -89,8 +89,10 @@ def run(args: argparse.Namespace, stop_spark: bool = True) -> None:
 
     if args.stage == "ingest":
         # incremental Structured Streaming ingest (exactly-once per input
-        # file; rerun any time — only new files produce work).  Batch stages
-        # then run over the accumulated tables.
+        # file; rerun any time — only new files produce work).  It writes
+        # batch_id-partitioned `records`, `membership` and `candidates`
+        # tables under --out plus a manifest row per micro-batch; the batch
+        # stages do not read them (they read their own stage tables).
         from entity_resolution_pipeline_spark.streaming import run_incremental
 
         run_incremental(spark, args.pages, out, cfg)

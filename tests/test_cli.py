@@ -72,6 +72,11 @@ def test_cli_all_stages_and_resume(spark, fixture_dirs, capsys):
     ])
     preds = M.read_stage_table(spark, out, "predict")
     assert preds.where("match").count() > 0
+    # the report stage draws the four figures its inputs support
+    assert sorted(os.listdir(os.path.join(out, "report_html", "figures"))) == [
+        "cluster_sizes.svg", "confusion_matrix.svg", "feature_importance.svg",
+        "score_distribution.svg",
+    ]
 
     # resume: nothing re-runs
     cli.run_keep(_args(pages=pages_path, labeled_pairs=lp_path, out=out, resume=True))

@@ -54,22 +54,14 @@ def test_normalize_then_hash_composition():
 def test_spark_udf_matches_python(spark):
     from pyspark.sql import functions as F
 
-    from entity_resolution_pipeline_spark.functions.hashing import (
-        normalize_and_hash_udf,
-        string_hash_udf,
-    )
+    from entity_resolution_pipeline_spark.functions.hashing import string_hash_udf
 
     vals = ["", "  ", "a", "Schubert,   Franz", "Ünïcode ẞtring", "x   y"]
     df = spark.createDataFrame([(v,) for v in vals], ["s"])
     rows = (
-        df.select(
-            "s",
-            string_hash_udf("s").alias("h"),
-            normalize_and_hash_udf("s").alias("nh"),
-        )
+        df.select("s", string_hash_udf("s").alias("h"))
         .orderBy("s")
         .collect()
     )
     for r in rows:
         assert r["h"] == compute_string_hash(r["s"])
-        assert r["nh"] == compute_string_hash(normalize_string(r["s"]))

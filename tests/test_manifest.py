@@ -115,23 +115,3 @@ def test_merge_recovers_from_mid_swap_crash(spark, tmp_path):
     assert got == {1: ("a", 10), 2: ("B", 21), 3: ("c", 30), 4: ("d", 40)}
     # leftovers garbage-collected
     assert not [d for d in os.listdir(base) if d.startswith("dim.")]
-
-
-def test_overwrite_partitions_touches_only_incoming(spark, tmp_path):
-    """Dynamic partition overwrite (S8): re-ingesting one day replaces that
-    day's partition only; other partitions persist."""
-    base = str(tmp_path / "stages")
-    day1 = spark.createDataFrame(
-        [("2026-01-01", 1, "x"), ("2026-01-01", 2, "y"), ("2026-01-02", 3, "z")],
-        ["day", "id", "val"],
-    )
-    M.overwrite_partitions(day1, base, "events", partition_by=("day",))
-    redo = spark.createDataFrame([("2026-01-02", 3, "Z!")], ["day", "id", "val"])
-    out = M.overwrite_partitions(redo, base, "events", partition_by=("day",))
-    # hive partition values are type-inferred on read (string day → date)
-    rows1 = sorted(map(tuple, out.collect()))  # materialize pre-rewrite
-    got = {(str(r[-1]), r[0]): r[1] for r in rows1}
-    assert got == {("2026-01-01", 1): "x", ("2026-01-01", 2): "y", ("2026-01-02", 3): "Z!"}
-    # re-run of the same batch is a no-op
-    again = M.overwrite_partitions(redo, base, "events", partition_by=("day",))
-    assert sorted(map(tuple, again.collect())) == rows1

@@ -373,6 +373,87 @@ def test_scan_covers_the_callers():
     assert seen == 2 and len(errors) == 1 and "no_such_knob" in errors[0], errors
 
 
+# public names with no caller in the repo's code, each kept for a reason
+UNCALLED_ALLOWED = {
+    "run_dedup": "a library plan: pages in, entities out, for library users",
+    "pairwise_f1_against_labels": "the evaluation helper the e2e tests judge by",
+    "RECORDS": "table contract the tests check extract output against",
+    "CLUSTERS": "table contract the tests check clustering output against",
+}
+CALLED_SCAN = ("streaming", "sources", "plans")
+
+
+def _public_top_level(tree: ast.Module) -> list[tuple[str, int]]:
+    """(name, line) of every public def, class and assigned name at
+    module level."""
+    out = []
+    for n in tree.body:
+        if isinstance(n, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
+            out.append((n.name, n.lineno))
+        elif isinstance(n, ast.Assign):
+            out += [(t.id, n.lineno) for t in n.targets if isinstance(t, ast.Name)]
+        elif isinstance(n, ast.AnnAssign) and isinstance(n.target, ast.Name):
+            out.append((n.target.id, n.lineno))
+    return [(name, line) for name, line in out if not name.startswith("_")]
+
+
+def _referenced(tree: ast.AST) -> set[str]:
+    """Names read as a Name or an Attribute, or imported by name."""
+    refs = set()
+    for n in ast.walk(tree):
+        if isinstance(n, ast.Name) and isinstance(n.ctx, ast.Load):
+            refs.add(n.id)
+        elif isinstance(n, ast.Attribute) and isinstance(n.ctx, ast.Load):
+            refs.add(n.attr)
+        elif isinstance(n, ast.ImportFrom):
+            refs |= {a.name for a in n.names}
+    return refs
+
+
+def _uncalled(files: list[str], trees: dict[str, ast.AST]) -> list[str]:
+    """`path:line: name` for each public top-level name of streaming/,
+    sources/, plans/ and schemas.py that no code outside tests/ reads.
+    Package __init__ re-exports are not callers."""
+    refs = set()
+    for f in files:
+        if not f.startswith("tests" + os.sep) and os.path.basename(f) != "__init__.py":
+            refs |= _referenced(trees[f])
+    scanned = tuple(os.path.join(PKG, d) + os.sep for d in CALLED_SCAN)
+    return [
+        f"{f}:{line}: {name}"
+        for f in files
+        if (f.startswith(scanned) or f == os.path.join(PKG, "schemas.py"))
+        and os.path.basename(f) != "__init__.py"
+        for name, line in _public_top_level(trees[f])
+        if name not in refs
+    ]
+
+
+def _trees() -> dict[str, ast.AST]:
+    out = {}
+    for f in FILES:
+        with open(os.path.join(ROOT, f), encoding="utf-8") as fh:
+            out[f] = ast.parse(fh.read(), filename=f)
+    return out
+
+
+def test_public_names_have_a_caller():
+    """Every public top-level name in streaming/, sources/, plans/ and
+    schemas.py is read by some entry point or package module: code that
+    only tests reach gets deleted, not kept.  Allowlisted names must still
+    lack a caller, so the allowlist cannot go stale."""
+    trees = _trees()
+    uncalled = _uncalled(FILES, trees)
+    names = {u.rsplit(": ", 1)[1] for u in uncalled}
+    unexpected = [u for u in uncalled if u.rsplit(": ", 1)[1] not in UNCALLED_ALLOWED]
+    assert not unexpected, "no caller outside tests/:\n" + "\n".join(unexpected)
+    assert names == set(UNCALLED_ALLOWED), sorted(set(UNCALLED_ALLOWED) - names)
+    # guard the scan itself: an added uncalled function is found
+    f = os.path.join(PKG, "sources", "inputs.py")
+    trees[f] = ast.parse(ast.unparse(trees[f]) + "\ndef never_called():\n    pass\n")
+    assert any(u.endswith(": never_called") for u in _uncalled(FILES, trees))
+
+
 def test_no_host_local_staging_root():
     """Defaults must not depend on host-local storage: no package module
     reads a staging-root variable or names the shared-memory mount."""

@@ -1,5 +1,5 @@
 """Structured Streaming ingest: stream/batch parity, exactly-once resume,
-incremental candidate generation, watermarked window stats."""
+incremental candidate generation and scoring, cache release."""
 
 from __future__ import annotations
 
@@ -16,11 +16,7 @@ from entity_resolution_pipeline_spark.operators.blocking import (
 )
 from entity_resolution_pipeline_spark.operators.extract import extract_records
 from entity_resolution_pipeline_spark.schemas import PAGES
-from entity_resolution_pipeline_spark.streaming import (
-    ingest_stats_stream,
-    read_pages_stream,
-    run_incremental,
-)
+from entity_resolution_pipeline_spark.streaming import run_incremental
 from entity_resolution_pipeline_spark.streaming.ingest import read_accumulated
 
 
@@ -320,60 +316,33 @@ def test_incremental_model_needs_idf_weights(spark, tmp_path, trained):
     assert not os.path.exists(os.path.join(out, "_stream_checkpoint"))
 
 
-def test_stream_extract_matches_batch(spark, tmp_path):
-    """readStream → extraction == batch extraction on the same files (the
-    byte-identical invariant lifts to streaming)."""
+def test_failed_batch_releases_its_caches(spark, tmp_path, monkeypatch, trained):
+    """A micro-batch whose scoring raises unpersists every frame it
+    persisted before the error reaches the caller."""
+    from pyspark import StorageLevel
+
+    from entity_resolution_pipeline_spark.plans import pipeline as PL
+
+    model, weights = trained
+    frame_cls = type(spark.range(1))
+    real_persist = frame_cls.persist
+    persisted = []
+
+    def recording_persist(self, *args, **kwargs):
+        persisted.append(self)
+        return real_persist(self, *args, **kwargs)
+
+    def failing_score(*args, **kwargs):
+        raise RuntimeError("scoring failed")
+
+    monkeypatch.setattr(frame_cls, "persist", recording_persist)
+    monkeypatch.setattr(PL, "score_pairs", failing_score)
     tmp = str(tmp_path)
     in_path = _write_pages(spark, tmp, "b0", 0, 60)
-
-    from entity_resolution_pipeline_spark.streaming import extract_records_stream
-
-    got = []
-    q = (
-        extract_records_stream(read_pages_stream(spark, in_path))
-        .writeStream.foreachBatch(lambda df, bid: got.append(df.toPandas()))
-        .option("checkpointLocation", os.path.join(tmp, "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    import pandas as pd
-
-    streamed = pd.concat(got).sort_values("record_id").reset_index(drop=True)
-    batch = (
-        extract_records(spark.read.parquet(in_path))
-        .toPandas()
-        .sort_values("record_id")
-        .reset_index(drop=True)
-    )
-    assert streamed["warc_ts"].notna().all()
-    pd.testing.assert_frame_equal(streamed.drop(columns=["warc_ts"]), batch)
-
-
-def test_windowed_ingest_stats(spark, tmp_path):
-    """Watermarked tumbling-window counts match the batch groupBy(window)."""
-    tmp = str(tmp_path)
-    in_path = _write_pages(spark, tmp, "b0", 0, 200)
-
-    q = (
-        ingest_stats_stream(read_pages_stream(spark, in_path), window="1 hour")
-        .writeStream.format("memory")
-        .queryName("ingest_stats")
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    streamed = {
-        (r["window_start"], r["lang"]): r["pages"]
-        for r in spark.table("ingest_stats").collect()
-    }
-    batch = {
-        (r["ws"], r["lang"]): r["pages"]
-        for r in spark.read.parquet(in_path)
-        .groupBy(F.window("warc_ts", "1 hour").alias("w"), "lang")
-        .agg(F.count("*").alias("pages"))
-        .select(F.col("w.start").alias("ws"), "lang", "pages")
-        .collect()
-    }
-    assert streamed == batch and len(batch) > 1
+    with pytest.raises(Exception, match="scoring failed"):
+        run_incremental(
+            spark, in_path, os.path.join(tmp, "out"), DEFAULT_CONFIG,
+            model=model, idf_weights=weights,
+        )
+    assert len(persisted) >= 3  # records, hot blocks, pairs
+    assert [df.storageLevel for df in persisted] == [StorageLevel.NONE] * len(persisted)

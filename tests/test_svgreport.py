@@ -58,35 +58,15 @@ class TestAggregates:
         assert h["counts"]["0"] == [1.0, 0.0, 1.0, 0.0]
         assert h["counts"]["1"] == [0.0, 0.0, 0.0, 1.0]
 
-    def test_roc_auc_matches_exact(self, spark, scored):
-        df, y, probs, _, _ = scored
-        from entity_resolution_pipeline_spark.operators.classify import roc_auc
-
-        curves = R.score_curve_points(df, "label", "probability", n_bins=512)
-        exact = roc_auc(y.astype(float), probs)
-        assert curves["auc"] == pytest.approx(exact, abs=1e-9)
-        assert curves["n_pos"] == int(y.sum())
-        # curve endpoints
-        assert curves["roc"][0] == (0.0, 0.0)
-        assert curves["roc"][-1] == (1.0, 1.0)
-        # precision at full recall equals the base rate
-        assert curves["pr"][-1][1] == pytest.approx(y.mean())
-        # ROC is monotone in both coordinates
-        fprs = [p[0] for p in curves["roc"]]
-        tprs = [p[1] for p in curves["roc"]]
-        assert fprs == sorted(fprs) and tprs == sorted(tprs)
-
     def test_roc_points_df_matches_driver_curve(self, spark, scored):
-        """The distributed ROC table (classify.roc_points_df) and the
-        driver-side reducer (svgreport.score_curve_points) must agree
-        bucket-for-bucket."""
+        """The distributed ROC table (classify.roc_points_df) matches a
+        cumulative table built on the driver, bucket for bucket."""
         from entity_resolution_pipeline_spark.operators.classify import roc_points_df
 
         df, y, probs, _, _ = scored
         rows = roc_points_df(df, "label", "probability", n_bins=128).collect()
-        curves = R.score_curve_points(df, "label", "probability", n_bins=128)
-        P, N = curves["n_pos"], curves["n_neg"]
-        # rebuild the cumulative table the same way and compare
+        P, N = int(y.sum()), int(len(y) - y.sum())
+        # rebuild the cumulative table from the raw scores and compare
         import collections
 
         pos = collections.Counter()
@@ -106,52 +86,19 @@ class TestAggregates:
             assert r["tpr"] == pytest.approx(expect[r["bin"]][0] / P, abs=1e-6)
             assert r["fpr"] == pytest.approx(expect[r["bin"]][1] / N, abs=1e-6)
 
-    def test_feature_separation(self, spark, scored):
-        df, y, _, f1, f2 = scored
-        sep = dict(R.feature_separation(df, ["f1", "f2"], "label"))
-        assert sep["f1"] == pytest.approx(abs(f1[y == 1].mean() - f1[y == 0].mean()))
-        assert sep["f2"] == pytest.approx(abs(f2[y == 1].mean() - f2[y == 0].mean()))
-        # ranking: f1 is the separating feature
-        assert R.feature_separation(df, ["f1", "f2"], "label")[0][0] == "f1"
-
 
 class TestRenderer:
-    def test_line_chart_structure(self):
-        svg = R.line_chart(
-            [("a", [(0, 0), (0.5, 0.8), (1, 1)]), ("b", [(0, 0), (1, 0.5)])],
-            "t", "x", "y", diagonal=True,
-        )
-        root = _parse(svg)
-        assert root.tag.endswith("svg")
-        paths = [e for e in root.iter() if e.tag.endswith("path")]
-        assert sum(1 for p in paths if p.get("stroke") == R.SERIES[0]) == 1
-        assert sum(1 for p in paths if p.get("stroke") == R.SERIES[1]) == 1
-        # 2px lines, round caps
-        for p in paths:
-            assert p.get("stroke-width") == "2"
-        # legend present for 2 series: one swatch rect per series
-        rects = [e for e in root.iter() if e.tag.endswith("rect")]
-        assert any(r.get("fill") == R.SERIES[1] and r.get("width") == "12" for r in rects)
-        # markers ride a surface ring
-        circles = [e for e in root.iter() if e.tag.endswith("circle")]
-        assert any(c.get("fill") == R.SURFACE for c in circles)
-
-    def test_single_series_has_no_legend(self):
-        svg = R.line_chart([("only", [(0, 0), (1, 1)])], "t", "x", "y")
-        root = _parse(svg)
-        rects = [e for e in root.iter() if e.tag.endswith("rect")]
-        # only the surface background rect — no legend swatch
-        assert all(r.get("width") != "12" for r in rects)
-
     def test_hbar_labels_and_ordinal_ramp(self):
         svg = R.hbar_chart(
-            [("raw", 100.0), ("kept", 40.0), ("final", 10.0)],
-            "funnel", "docs", ordinal=True, pct_of_first=True,
+            [("raw", 100.0), ("kept", 40.0), ("final", 0.25)], "bars", "docs",
         )
-        assert "40 (40.0%)" in svg and "10 (10.0%)" in svg
-        # ordinal ramp: stage fills step down the blue ramp from step 250
-        assert R.SEQ_BLUE[1] in svg and R.SEQ_BLUE[2] in svg and R.SEQ_BLUE[3] in svg
-        _parse(svg)
+        root = _parse(svg)
+        # one plain bar per nonzero item, all in the single-measure blue
+        bars = [e for e in root.iter() if e.tag.endswith("path")]
+        assert [b.get("fill") for b in bars] == [R.SEQ_BLUE[3]] * 3
+        # value labeled at each bar tip
+        texts = [e.text for e in root.iter() if e.tag.endswith("text")]
+        assert {"100", "40", "0.25"} <= set(texts)
 
     def test_histogram_chart_renders_means(self):
         svg = R.class_histogram_chart(
@@ -192,8 +139,6 @@ class TestEndToEnd:
         )
         out = R.write_visual_report(
             str(tmp_path),
-            scored_pairs=df,
-            feature_cols=["f1", "f2"],
             clusters=clusters,
             classification_metrics={
                 "precision": 0.9,
@@ -203,7 +148,6 @@ class TestEndToEnd:
                 },
             },
             feature_importance={"f1": {"weight": 2.0}, "f2": {"weight": -0.1}},
-            funnel_rows=[("raw", 1000), ("gopher", 700), ("dedup", 400)],
             score_dist=R.feature_class_histogram(
                 df, "probability", "label", n_bins=20, lo=0.0, hi=1.0
             ),
@@ -212,17 +156,15 @@ class TestEndToEnd:
             p = os.path.join(tmp_path, rel)
             assert os.path.exists(p)
             ET.parse(p)  # every emitted figure is well-formed XML
-        expected = {
-            "roc_curve", "precision_recall", "feature_separation",
+        assert set(out["figures"]) == {
             "confusion_matrix", "feature_importance", "cluster_sizes",
-            "pipeline_funnel", "feature_dist_f1",
             "score_distribution",
         }
-        assert expected <= set(out["figures"])
         index = open(os.path.join(tmp_path, "index.html")).read()
         for rel in out["figures"].values():
             assert rel in index
-        # the relief channel: every chart section with a backing table embeds it
-        assert index.count("<table>") >= 6
+        # the relief channel: every chart section with a backing table embeds
+        # it (confusion matrix, feature importance, cluster sizes)
+        assert index.count("<table>") == 3
         assert os.path.exists(os.path.join(tmp_path, "report_data.json"))
         assert out["data"]["clusters"]["n_clusters"] == 3
